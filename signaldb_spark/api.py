@@ -575,7 +575,7 @@ class SignalDBAPI:
         import os as _os
 
         from .catalog import signal_table_path
-        from .storage.hot import HotStore, committed_watermark
+        from .storage.hot import HotStore, watermark_of
         from .storage.manifest import MANIFEST_DIR, ManifestTable
 
         path = signal_table_path(
@@ -583,25 +583,27 @@ class SignalDBAPI:
         )
         if not _os.path.isdir(_os.path.join(path, MANIFEST_DIR)):
             return None
-        seqs = HotStore(path).sequences()
-        if seqs and seqs[-1] > committed_watermark(path):
+        seqs = HotStore(path).sequences()  # before the manifest read
+        mt = ManifestTable(path)
+        m = mt.load_manifest()
+        if seqs and seqs[-1] > watermark_of(m):
             return None  # hot rows are invisible to the manifest scan
         between = None
         if start is not None and end is not None:
             between = ("timestamp", start, end)
-        mt = ManifestTable(path)
-        fs, _pruned = mt.pruned_files_point(col, value, between=between)
+        fs, _pruned = mt.pruned_files_point(
+            col, value, between=between, manifest=m
+        )
         if not fs:
             # definite miss: answer through one EMPTY in-schema scan
             # (limit 0 over any committed file) so the route returns
             # its ordinary not_found envelope without data I/O
-            all_fs = mt.files()
-            if not all_fs:
+            if not m["files"]:
                 return None
-            return self.spark.read.option("basePath", mt.data_dir).parquet(
-                all_fs[0]
+            return mt.scan(
+                self.spark, m, [_os.path.join(mt.data_dir, m["files"][0])]
             ).limit(0)
-        return self.spark.read.option("basePath", mt.data_dir).parquet(*fs)
+        return mt.scan(self.spark, m, fs)
 
     # GET /tempo/api/search — q (TraceQL) or tags (logfmt), newest-N
 

@@ -786,7 +786,7 @@ def q_dead_letter_split(spark, sf_dir):
     dead-letter sink instead of wedging the drain (issue-#1060
     analog). The split predicate is the at-rest schema's non-nullable
     columns, not a hand-rolled filter."""
-    from .streaming.ingest import split_schema_violations
+    from .streaming.ingest import required_violation
 
     e = load_table(spark, sf_dir, "events")
     gauge = e.select(
@@ -798,8 +798,9 @@ def q_dead_letter_split(spark, sf_dir):
         F.when(F.col("event_id") % 13 != 0, F.col("value")).alias("value"),
         F.col("event_id"),
     )
-    good, bad = split_schema_violations(gauge, "metrics_gauge")
-    assert bad is not None  # the schema declares required columns
+    violated = required_violation(gauge, "metrics_gauge")
+    assert violated is not None  # the schema declares required columns
+    good = gauge.filter(~violated)
     return (
         good.groupBy("service_name")
         .agg(

@@ -128,7 +128,13 @@ def _tree_sig(path: str) -> tuple:
     for root, dirs, files in os.walk(path):
         dirs.sort()
         for f in files:
-            st = os.stat(os.path.join(root, f))
+            try:
+                st = os.stat(os.path.join(root, f))
+            except FileNotFoundError:
+                # removed by a concurrent writer since the walk listed
+                # it: the signature changes without it, which already
+                # retires any plan built over the old tree
+                continue
             rel = os.path.relpath(os.path.join(root, f), path)
             entries.append((rel, st.st_mtime_ns, st.st_size))
     entries.sort()

@@ -44,7 +44,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .manifest import (
     ManifestTable,
     collect_file_stats,
+    file_schema,
+    lifecycle_metadata,
     stats_visible_writes,
+    _declared_blooms,
     _stage_into_data,
 )
 
@@ -184,8 +187,12 @@ class HotStore:
 def committed_watermark(table_path: str, version: int | None = None) -> int:
     """The high-water hot sequence covered by the cold snapshot
     (-1 before any flush commit)."""
-    man = ManifestTable(table_path).load_manifest(version)
-    return int(man.get("props", {}).get(WATERMARK_PROP, -1))
+    return watermark_of(ManifestTable(table_path).load_manifest(version))
+
+
+def watermark_of(manifest: dict) -> int:
+    """The committed watermark of an already-loaded manifest version."""
+    return int(manifest.get("props", {}).get(WATERMARK_PROP, -1))
 
 
 def hybrid_read(
@@ -260,8 +267,9 @@ def flush_hot(
     hi = max(todo)
     df = store.read_hot(spark, above=wm, seqs=seqs)
     mt = ManifestTable(table_path)
+    m = mt.load_manifest()
     batch_id = f"hotflush-{hi}"
-    if batch_id in mt.load_manifest()["batches"]:
+    if batch_id in m["batches"]:
         # replayed range already committed — but a LATER flush may have
         # advanced the watermark past hi since our read; report the real
         # committed mark, consistent with the CAS-abort branch below
@@ -285,29 +293,19 @@ def flush_hot(
         if use_stats
         else None
     )
-    from .manifest import lifecycle_metadata
-
-    # the flush is a producer like the batch sink and the compactor:
-    # when the table declares bloom columns, its files get sidecars too
-    # (a flushed file without one is still correct — just never
-    # bloom-pruned — but the declared contract is better kept uniform)
-    bloom_cols = tuple(
-        c for c in mt.load_manifest().get("props", {}).get(
-            "bloom.cols", ""
-        ).split(",") if c
-    )
-    if bloom_cols:
-        from .blooms import collect_file_blooms
-
-        blooms = collect_file_blooms(table_path, rel_files, bloom_cols)
-    else:
-        blooms = None
-
     committed = mt.commit(
         rel_files,
         batch_id=batch_id,
         stats=stats,
-        blooms=blooms,
+        # the flush is a producer like the batch sink and the compactor:
+        # when the table declares bloom columns, its files get sidecars
+        # too (a flushed file without one is still correct — just never
+        # bloom-pruned — but the declared contract is better kept
+        # uniform)
+        blooms=_declared_blooms(table_path, m, rel_files),
+        # the merged hot schema (a column added in a newer hot batch
+        # joins the recorded schema by name)
+        schema=file_schema(df, parts),
         # lifecycle metadata, same as write_batch_manifest: partition
         # identity from this writer's own just-written layout, on-disk
         # bytes for size-aware candidacy, and the sort claim ONLY when
@@ -322,7 +320,6 @@ def flush_hot(
         # any sequences the winner did NOT cover remain hot (still
         # readable via the watermark filter) and the next flush picks
         # them up.
-        precondition=lambda m: int(m.get("props", {}).get(WATERMARK_PROP, -1))
-        == wm,
+        precondition=lambda cur: watermark_of(cur) == wm,
     )
     return hi if committed else committed_watermark(table_path)

@@ -41,6 +41,7 @@ import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
@@ -183,6 +184,7 @@ class ManifestTable:
         sizes: dict[str, int] | None = None,
         sort_orders: dict[str, list] | None = None,
         blooms: dict[str, dict] | None = None,
+        schema: T.StructType | None = None,
     ) -> bool:
         """Commit a snapshot: current files − removed + added. Paths are
         relative to ``data/``. Returns False (no commit) if ``batch_id``
@@ -239,6 +241,18 @@ class ManifestTable:
         high-cardinality key plans only the files that might contain
         it. Entries are carried/dropped with their file like the other
         per-file metadata.
+
+        ``schema`` is the Spark schema of the columns the producer wrote
+        INTO the added files (hive partition columns excluded — they
+        stay path-derived). It lands in the same version object as the
+        file list (the Iceberg table-metadata schema analog), merged by
+        column name with the schema already recorded for the files this
+        commit keeps: new columns append, a column whose type changes
+        drops the record. Readers pass a recorded schema to Spark instead
+        of inferring one from a file footer (a Spark job per relation);
+        a version without one — legacy files of unknown schema, files
+        added without a schema, a type conflict — reads by inference,
+        exactly as before (see :func:`_next_schema`).
         """
         removed = set(remove_files)
 
@@ -255,7 +269,8 @@ class ManifestTable:
                 return False
             if precondition is not None and not precondition(cur):
                 return False
-            files = [f for f in cur["files"] if f not in removed] + list(add_files)
+            kept = [f for f in cur["files"] if f not in removed]
+            files = kept + list(add_files)
             manifest = {
                 "version": cur["version"] + 1,
                 "files": sorted(files),
@@ -266,6 +281,7 @@ class ManifestTable:
                 "sorts": _carry("sorts", sort_orders),
                 "blooms": _carry("blooms", blooms),
                 "props": {**cur.get("props", {}), **(properties or {})},
+                "schema": _next_schema(cur, kept, add_files, schema),
             }
             try:
                 self._put_if_absent(manifest, cur["version"] + 1)
@@ -282,7 +298,8 @@ class ManifestTable:
         ]
 
     def file_partitions(
-        self, version: int | None = None, strict: bool = False
+        self, version: int | None = None, strict: bool = False,
+        manifest: dict | None = None,
     ) -> dict[str, dict]:
         """Partition identity per live file: the manifest-recorded
         partition struct when the committing writer recorded one,
@@ -293,8 +310,10 @@ class ManifestTable:
         planning) run in, because a silently unclassified file escapes
         lifecycle forever while remaining in every query result.
         Non-strict callers get ``{}`` for such files (read paths don't
-        care about partition identity)."""
-        m = self.load_manifest(version)
+        care about partition identity). ``manifest`` (an already-loaded
+        version, here and on the other per-file accessors) skips the
+        reload."""
+        m = manifest or self.load_manifest(version)
         recorded = m.get("parts") or {}
         out: dict[str, dict] = {}
         for f in m["files"]:
@@ -312,12 +331,14 @@ class ManifestTable:
             out[f] = ident
         return out
 
-    def file_sizes(self, version: int | None = None) -> dict[str, int]:
+    def file_sizes(
+        self, version: int | None = None, manifest: dict | None = None
+    ) -> dict[str, int]:
         """Recorded on-disk bytes per live file (``sizes`` manifest
         entries); files committed before size recording fall back to a
         stat() probe so size-aware candidacy still works on old
         manifests."""
-        m = self.load_manifest(version)
+        m = manifest or self.load_manifest(version)
         recorded = m.get("sizes") or {}
         out: dict[str, int] = {}
         for f in m["files"]:
@@ -357,13 +378,14 @@ class ManifestTable:
         return "inexact" if claimed else "none"
 
     def pruned_files(
-        self, col: str, lo, hi, version: int | None = None
+        self, col: str, lo, hi, version: int | None = None,
+        manifest: dict | None = None,
     ) -> tuple[list[str], int]:
         """Manifest-level file pruning: drop files whose recorded
         [min, max] for ``col`` is disjoint from [lo, hi]. Files with no
         recorded stats are kept (pruning is an optimization, never a
         correctness filter). Returns (absolute paths, files_pruned)."""
-        m = self.load_manifest(version)
+        m = manifest or self.load_manifest(version)
         stats = m.get("stats", {})
         lo_k, hi_k = _stat_key(lo), _stat_key(hi)
         kept, pruned = [], 0
@@ -407,6 +429,7 @@ class ManifestTable:
     def pruned_files_point(
         self, col: str, value, version: int | None = None,
         between: tuple[str, object, object] | None = None,
+        manifest: dict | None = None,
     ) -> tuple[list[str], int]:
         """Point-lookup file pruning for ``col = value`` — the driver-
         side plan for the reference's hottest lookup shape (trace by
@@ -431,7 +454,7 @@ class ManifestTable:
         files_pruned)."""
         from .blooms import bloom_might_contain, bucket_of, load_sidecar
 
-        m = self.load_manifest(version)
+        m = manifest or self.load_manifest(version)
         candidates = list(m["files"])
         pruned = 0
 
@@ -504,11 +527,24 @@ class ManifestTable:
         ZERO data-file reads."""
         from pyspark.sql import functions as F
 
-        fs, _ = self.pruned_files_point(col, value, version, between)
+        m = self.load_manifest(version)
+        fs, _ = self.pruned_files_point(col, value, between=between, manifest=m)
         if not fs:
             return None
-        df = spark.read.option("basePath", self.data_dir).parquet(*fs)
-        return df.filter(F.col(col) == value)
+        return self.scan(spark, m, fs).filter(F.col(col) == value)
+
+    def scan(self, spark: SparkSession, manifest: dict, paths: list[str]) -> DataFrame:
+        """The one relation builder every manifest reader goes through:
+        ``paths`` (absolute, from this table's ``manifest``) under
+        ``basePath`` so hive partition columns stay columns AND prune.
+        With a recorded ``schema`` Spark takes it as given — no footer
+        schema-inference job; partition columns are still discovered
+        from the paths exactly as before. Without one, inference."""
+        reader = spark.read.option("basePath", self.data_dir)
+        recorded = manifest.get("schema")
+        if recorded is not None:
+            reader = reader.schema(T.StructType.fromJson(recorded))
+        return reader.parquet(*paths)
 
     def read(
         self,
@@ -524,10 +560,11 @@ class ManifestTable:
         the manifest's per-file column stats before Spark plans the
         scan; the caller must still apply the row-level predicate (file
         stats bound files, not rows)."""
+        m = self.load_manifest(version)
         if between is not None:
-            fs, _ = self.pruned_files(*between, version=version)
+            fs, _ = self.pruned_files(*between, manifest=m)
         else:
-            fs = self.files(version)
+            fs = [os.path.join(self.data_dir, f) for f in m["files"]]
         if not fs:
             return None
         # Relation memo keyed on the explicit committed file list: a
@@ -535,12 +572,14 @@ class ManifestTable:
         # files) pair is the same immutable relation — re-listing and
         # re-inferring footers per façade route is pure planning
         # overhead (catalog.relation_memo; every action still scans).
+        # The recorded schema is part of the key: it types the relation.
         from ..catalog import relation_memo
 
         return relation_memo(
             spark,
-            ("manifest_read", self.data_dir, tuple(fs)),
-            lambda: spark.read.option("basePath", self.data_dir).parquet(*fs),
+            ("manifest_read", self.data_dir, tuple(fs),
+             json.dumps(m.get("schema"), sort_keys=True)),
+            lambda: self.scan(spark, m, fs),
         )
 
     def read_recent_topk(
@@ -604,8 +643,8 @@ class ManifestTable:
             taken += known[len(taken) - len(blind):][:wave]
             wave *= 2
             unread = known[len(taken) - len(blind):]
-            df = spark.read.option("basePath", self.data_dir).parquet(
-                *[os.path.join(self.data_dir, f) for f in taken]
+            df = self.scan(
+                spark, m, [os.path.join(self.data_dir, f) for f in taken]
             )
             if transform is not None:
                 df = transform(df)
@@ -707,6 +746,74 @@ def _parse_hive_partition(rel: str) -> dict | None:
         k, v = s.split("=", 1)
         out[k] = int(v) if v.lstrip("-").isdigit() else v
     return out
+
+
+def file_schema(df: DataFrame, partition_cols) -> T.StructType:
+    """The schema of the columns a ``partitionBy(*partition_cols)``
+    write of ``df`` puts inside its files — what a producer passes to
+    :meth:`ManifestTable.commit` as ``schema``."""
+    return T.StructType(
+        [f for f in df.schema.fields if f.name not in set(partition_cols)]
+    )
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every level nullable and no field metadata — the form
+    Spark's file sources read any parquet schema back as, so a recorded
+    schema compares (and merges) on names and types alone."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+def _next_schema(
+    cur: dict, kept: list[str], add_files, schema: T.StructType | None
+) -> dict | None:
+    """The ``schema`` entry of the version after a commit keeps ``kept``
+    of the current files and adds ``add_files`` written with ``schema``.
+    A recorded schema must cover EVERY live file, so it is None while
+    any live file's schema is unknown: kept files from a version that
+    recorded none (a legacy manifest) or added files with none given.
+    Otherwise the kept files' schema and the new one merge by column
+    name — new columns append, and a column whose type differs drops
+    the record (readers then infer, as before)."""
+    old = cur.get("schema")
+    new = _nullable(schema).jsonValue() if schema is not None else None
+    if (kept and old is None) or (add_files and new is None):
+        return None
+    if not kept:
+        return new
+    if new is None:
+        return old
+    have = {f["name"]: f["type"] for f in old["fields"]}
+    fields = list(old["fields"])
+    for f in new["fields"]:
+        if f["name"] not in have:
+            fields.append(f)
+        elif have[f["name"]] != f["type"]:
+            return None
+    return {**old, "fields": fields}
+
+
+def _declared_blooms(table_path: str, manifest: dict, rel_files: list[str]):
+    """Bloom sidecars for ``rel_files`` on the columns the table declares
+    (the ``bloom.cols`` property), or None when it declares none — how
+    every producer after the first keeps its files probe-able."""
+    cols = tuple(
+        c for c in manifest.get("props", {}).get("bloom.cols", "").split(",")
+        if c
+    )
+    if not cols:
+        return None
+    from .blooms import collect_file_blooms
+
+    return collect_file_blooms(table_path, rel_files, cols)
 
 
 def _stat_key(v):
@@ -850,13 +957,14 @@ def write_batch_manifest(
     ``bucket_by=(col, n)`` adds the hash-bucket hive partition column
     (the Iceberg bucket-transform analog) and records the bucket spec
     in table properties — together the point-lookup pruning substrate
-    :meth:`ManifestTable.pruned_files_point` reads."""
+    :meth:`ManifestTable.pruned_files_point` reads. The commit records
+    the written schema (the partition columns stay path-derived)."""
     from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
     from .blooms import bucket_expr, bucket_part_name, collect_file_blooms
 
     mt = ManifestTable(table_path)
     if batch_id in mt.load_manifest()["batches"]:
-        return False
+        return False  # no Spark job ran: callers observing the write rely on it
     attempt = uuid.uuid4().hex[:8]
     staging = os.path.join(table_path, "_staging", f"batch-{batch_id}-{attempt}")
     properties: dict[str, str] = {}
@@ -889,6 +997,7 @@ def write_batch_manifest(
         stats=stats,
         blooms=blooms,
         properties=properties or None,
+        schema=file_schema(df, partition_cols),
         # honest by construction: this writer just sorted each file by
         # sort_cols (within the partitionBy groups), so it may declare
         # exactly that — and declares nothing when the table has no
@@ -936,21 +1045,20 @@ def compact_partition_manifest(
     from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
 
     mt = ManifestTable(table_path)
+    m = mt.load_manifest()
     ident = {"date_day": day, "hour": int(hour)}
-    parts = mt.file_partitions(strict=True)
+    parts = mt.file_partitions(strict=True, manifest=m)
     old = [
         f for f, p in parts.items()
         if p.get("date_day") == ident["date_day"]
         and p.get("hour") == ident["hour"]
     ]
     if max_input_bytes is not None:
-        sizes = mt.file_sizes()
+        sizes = mt.file_sizes(manifest=m)
         old = [f for f in old if sizes.get(f, 0) < max_input_bytes]
     if not old:
         return 0
-    df = spark.read.option("basePath", mt.data_dir).parquet(
-        *[os.path.join(mt.data_dir, f) for f in old]
-    )
+    df = mt.scan(spark, m, [os.path.join(mt.data_dir, f) for f in old])
     sort_cols = [c for c in SORT_ORDERS.get(table, ["timestamp"]) if c in df.columns]
     attempt = uuid.uuid4().hex[:8]
     staging = os.path.join(table_path, "_staging", f"compact-{day}-{hour}-{attempt}")
@@ -980,24 +1088,15 @@ def compact_partition_manifest(
     # by this (day, hour)-scoped rewrite — the replacement file's
     # partition struct simply lacks the bucket key, so bucket pruning
     # passes it through (evidence-based pruning stays correct) and its
-    # fresh bloom carries the pruning instead.
-    bloom_cols = tuple(
-        c for c in mt.load_manifest().get("props", {}).get(
-            "bloom.cols", ""
-        ).split(",") if c
-    )
-    if bloom_cols:
-        from .blooms import collect_file_blooms
-
-        blooms = collect_file_blooms(table_path, rel_files, bloom_cols)
-    else:
-        blooms = None
+    # fresh bloom carries the pruning instead. The bucket column is then
+    # an ordinary column of the replacement file, and so of its schema.
     inputs = set(old)
     committed = mt.commit(
         rel_files,
         remove_files=old,
         stats=stats,
-        blooms=blooms,
+        blooms=_declared_blooms(table_path, m, rel_files),
+        schema=out.schema,
         precondition=lambda cur: inputs.issubset(cur["files"]),
         **lifecycle_metadata(mt.data_dir, rel_files, sort_cols, ident=ident),
     )
@@ -1035,12 +1134,11 @@ def zorder_compact_table(
     from .zorder import linear_code, vocab_code, zorder_rewrite
 
     mt = ManifestTable(table_path)
-    old = list(mt.load_manifest()["files"])
+    m = mt.load_manifest()
+    old = list(m["files"])
     if not old:
         return 0
-    df = spark.read.option("basePath", mt.data_dir).parquet(
-        *[os.path.join(mt.data_dir, f) for f in old]
-    )
+    df = mt.scan(spark, m, [os.path.join(mt.data_dir, f) for f in old])
     # hive partition columns are path-derived; a flat rewrite must
     # re-materialize them as ordinary columns (the scan already did)
     codes = []
@@ -1062,29 +1160,17 @@ def zorder_compact_table(
     rel_files = _stage_into_data(staging, mt.data_dir, f"zorder-{attempt}")
     all_stats_cols = tuple(dict.fromkeys((*cols, *stats_cols)))
     stats = collect_file_stats(mt.data_dir, rel_files, all_stats_cols)
-    bloom_cols = tuple(
-        c for c in mt.load_manifest().get("props", {}).get(
-            "bloom.cols", ""
-        ).split(",") if c
-    )
-    if bloom_cols:
-        from .blooms import collect_file_blooms
-
-        blooms = collect_file_blooms(table_path, rel_files, bloom_cols)
-    else:
-        blooms = None
     inputs = set(old)
     committed = mt.commit(
         rel_files,
         remove_files=old,
         stats=stats,
-        blooms=blooms,
+        blooms=_declared_blooms(table_path, m, rel_files),
         properties={"zorder.cols": ",".join(cols)},
+        schema=out.schema,
         precondition=lambda cur: inputs.issubset(cur["files"]),
         # no sort claim: z-order is a space-filling clustering, not a
         # lexicographic sort on any declared column list (honesty rule)
-        **{k: v for k, v in lifecycle_metadata(
-            mt.data_dir, rel_files, None
-        ).items()},
+        **lifecycle_metadata(mt.data_dir, rel_files, None),
     )
     return len(rel_files) if committed else 0

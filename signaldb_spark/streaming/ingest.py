@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import signal_table_path
@@ -40,7 +40,7 @@ SORT_ORDERS = {
 }
 
 
-def write_batch(df: DataFrame, table_path: str, table: str, batch_id: int | None = None) -> None:
+def write_batch(df: DataFrame, table_path: str, table: str, batch_id: int | None = None) -> bool:
     """(date_day, hour)-partitioned append used by foreachBatch — the
     absolute-hour partitioning of the reference's Hour(timestamp) spec
     (hour-of-day alone would collide across days and break
@@ -52,7 +52,9 @@ def write_batch(df: DataFrame, table_path: str, table: str, batch_id: int | None
     names (os.replace), so the at-least-once replay of foreachBatch
     cannot duplicate rows. Without batch_id this is a plain append.
     Sorting within partitions applies the table's clustering order at
-    write time so even pre-compaction files scan well."""
+    write time so even pre-compaction files scan well. Returns False,
+    with no Spark job run, when the batch's marker says it already
+    landed."""
     import os
     import shutil
 
@@ -69,10 +71,10 @@ def write_batch(df: DataFrame, table_path: str, table: str, batch_id: int | None
             writer = writer.option(k, v)
         with stats_visible_writes(df.sparkSession):
             writer.parquet(table_path)
-        return
+        return True
     marker = os.path.join(table_path, f"_batch_{batch_id}_done")
     if os.path.exists(marker):
-        return
+        return False
     staging = os.path.join(table_path, "_staging", f"batch-{batch_id}")
     writer = sorted_df.write.mode("overwrite").partitionBy("date_day", "hour")
     for k, v in BLOOM_WRITE_OPTIONS.items():
@@ -110,6 +112,7 @@ def write_batch(df: DataFrame, table_path: str, table: str, batch_id: int | None
             )
     shutil.rmtree(staging, ignore_errors=True)
     open(marker, "w").close()
+    return True
 
 
 def dead_letter_path(base: str, tenant: str, dataset: str, signal: str) -> str:
@@ -137,30 +140,113 @@ def write_dead_letters(
     )
 
 
-def split_schema_violations(df: DataFrame, table: str):
-    """(good, bad) split on the at-rest schema's NON-NULLABLE columns.
+def required_violation(df: DataFrame, table: str) -> Column | None:
+    """The predicate a row of ``df`` fails when a NON-NULLABLE column of
+    the table's at-rest schema is null, or None when the table declares
+    no required columns (or none are present in the frame).
 
     A batch that decodes fine but violates a required column — the
     issue-#1060 poison, a metrics_sum datapoint with a null value — is a
     DETERMINISTIC writer refusal: retrying cannot help, and letting it
     fail the whole drain would shadow every batch queued behind it. The
-    violating rows split off for the dead-letter sink; everything else
-    commits. ``bad`` is None when the table declares no required columns
-    (or none are present in the frame)."""
+    violating rows go to the dead-letter sink; everything else
+    commits."""
     from functools import reduce
 
     from ..schemas.signal_schemas import SCHEMAS
 
     schema = SCHEMAS.get(table)
     if schema is None:
-        return df, None
+        return None
     required = [f.name for f in schema.fields
                 if not f.nullable and f.name in df.columns]
     if not required:
-        return df, None
-    violated = reduce(lambda a, b: a | b,
-                      [F.col(c).isNull() for c in required])
-    return df.filter(~violated), df.filter(violated)
+        return None
+    return reduce(lambda a, b: a | b, [F.col(c).isNull() for c in required])
+
+
+def _observed_or_probed(obs: Observation, fired: bool, rows: DataFrame) -> int:
+    """The observed row count when the write carrying ``obs`` ran, else
+    an explicit probe of ``rows`` (0 or 1). A write skipped as an
+    already-committed replay runs no job, so its observation never
+    fires and ``Observation.get`` would wait forever."""
+    return obs.get["n"] if fired else rows.limit(1).count()
+
+
+def _write_table(df: DataFrame, base: str, tenant: str, dataset: str,
+                 table: str, batch_id: int, use_manifest: bool) -> bool:
+    """Commit one table of a batch; rows violating its required columns
+    go to the table's dead-letter sink instead. Returns whether the
+    table write ran (False: an already-committed replay)."""
+    table_path = signal_table_path(base, tenant, dataset, table)
+    if use_manifest:
+        from ..storage import write_batch_manifest as write
+    else:
+        write = write_batch
+    violated = required_violation(df, table)
+    if violated is None:
+        return write(df, table_path, table, batch_id=batch_id)
+    obs = Observation()
+    ok = df.observe(obs, F.count_if(violated).alias("n")).filter(~violated)
+    wrote = write(ok, table_path, table, batch_id=batch_id)
+    bad = df.filter(violated)
+    if _observed_or_probed(obs, wrote, bad):
+        write_dead_letters(
+            bad.select(F.to_json(F.struct("*")).alias("value")),
+            base, tenant, dataset, table, batch_id,
+            reason="required column is null",
+        )
+    return wrote
+
+
+def _commit_batch(
+    decoded: DataFrame, dead: Column, payload: Column, route,
+    base: str, tenant: str, dataset: str, signal: str, batch_id: int,
+    use_manifest: bool = True,
+) -> None:
+    """The commit every ``foreachBatch`` sink shares. ``decoded`` is the
+    micro-batch with its undecodable rows marked by ``dead``;
+    ``route(good, hold)`` maps the decodable rows to ``{table: frame}``
+    and may ``hold`` (persist until the batch is done) a shared parse so
+    a multi-table fan-out decodes once. Every table commits under the
+    batch id, then undecodable payloads (``payload``, kept verbatim) go
+    to the signal's dead-letter sink.
+
+    No probe jobs: the counts that decide whether a dead-letter sink is
+    written are observed metrics of the table writes themselves
+    (``DataFrame.observe`` — the per-batch observed metrics of
+    Structured Streaming), so a clean batch costs one Spark job per
+    table write. The undecodable count is observed below the fan-out,
+    so it is trusted only when EVERY table write ran: when one was
+    skipped as a replay, an earlier action (a required-column probe) may
+    have fired it over part of the batch, so it is probed instead.
+    Dead letters are per-batch overwrites, so a replay leaves each sink
+    holding its rows exactly once."""
+    dead_obs = Observation()
+    good = decoded.observe(dead_obs, F.count_if(dead).alias("n")).filter(~dead)
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
+    try:
+        wrote = [
+            _write_table(df, base, tenant, dataset, table, batch_id, use_manifest)
+            for table, df in route(good, hold).items()
+        ]
+        undecodable = decoded.filter(dead)
+        if _observed_or_probed(dead_obs, bool(wrote) and all(wrote), undecodable):
+            write_dead_letters(
+                undecodable.select(payload.alias("value")),
+                base, tenant, dataset, signal, batch_id,
+            )
+    finally:
+        # unpersist on ALL exits: an exception mid-write otherwise pins
+        # the cached blocks, and at-least-once retries stack a fresh
+        # leaked copy per attempt
+        for df in held:
+            df.unpersist()
 
 
 def read_dead_letters(
@@ -240,7 +326,6 @@ def ingest_otlp_logs_stream(
     idempotent, crashed attempts are orphans for expire_snapshots.
     ``use_manifest=False`` opts out to deterministic-rename marker files,
     which assume POSIX rename atomicity (local-FS only)."""
-    table_path = signal_table_path(base, tenant, dataset, "logs")
     checkpoint = checkpoint_dir or os.path.join(base, "_checkpoints", tenant, dataset, "logs")
     raw = (
         spark.readStream.format("text")
@@ -256,28 +341,16 @@ def ingest_otlp_logs_stream(
         # split poison payloads off the batch BEFORE flattening: the raw
         # line is preserved in the dead-letter sink and the batch itself
         # is marked processed by the checkpoint — one bad payload cannot
-        # wedge the drain loop (processor.rs:125-127 semantics)
-        flagged = with_dead_letter_flag(batch_df, OTLP_LOGS_SCHEMA).cache()
-        try:
-            dead = flagged.filter(F.col("_dead"))
-            good = flagged.filter(~F.col("_dead")).drop("_dead")
-            # (no withWatermark here: foreachBatch hands us a batch df
-            # where it is a no-op — event-time lateness gating lives in
-            # the maintenance partition-close check, is_partition_closed)
-            flat = flatten_otlp_logs(good, json_col="value")
-            if use_manifest:
-                from ..storage import write_batch_manifest
-
-                write_batch_manifest(flat, table_path, "logs", batch_id=batch_id)
-            else:
-                write_batch(flat, table_path, "logs", batch_id=batch_id)
-            if dead.limit(1).count():
-                write_dead_letters(dead, base, tenant, dataset, "logs", batch_id)
-        finally:
-            # unpersist on ALL exits: an exception mid-write otherwise
-            # pins the cached block, and at-least-once retries stack a
-            # fresh leaked copy per attempt
-            flagged.unpersist()
+        # wedge the drain loop (processor.rs:125-127 semantics).
+        # (no withWatermark here: foreachBatch hands us a batch df where
+        # it is a no-op — event-time lateness gating lives in the
+        # maintenance partition-close check, is_partition_closed)
+        _commit_batch(
+            with_dead_letter_flag(batch_df, OTLP_LOGS_SCHEMA),
+            F.col("_dead"), F.col("value"),
+            lambda good, _hold: {"logs": flatten_otlp_logs(good, json_col="value")},
+            base, tenant, dataset, "logs", batch_id, use_manifest,
+        )
 
     return _drain_stream(
         raw.writeStream.foreachBatch(sink), checkpoint, available_now
@@ -384,7 +457,6 @@ def ingest_otlp_traces_stream(
     the logs stream."""
     from ..sources.otlp import OTLP_TRACES_SCHEMA, flatten_otlp_traces
 
-    table_path = signal_table_path(base, tenant, dataset, "traces")
     checkpoint = checkpoint_dir or os.path.join(
         base, "_checkpoints", tenant, dataset, "traces"
     )
@@ -396,21 +468,12 @@ def ingest_otlp_traces_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _charge_ingest(rate_limiter, tenant, batch_df, F.octet_length("value"))
-        flagged = with_dead_letter_flag(batch_df, OTLP_TRACES_SCHEMA).cache()
-        try:
-            dead = flagged.filter(F.col("_dead"))
-            good = flagged.filter(~F.col("_dead")).drop("_dead")
-            flat = flatten_otlp_traces(good, json_col="value")
-            if use_manifest:
-                from ..storage import write_batch_manifest
-
-                write_batch_manifest(flat, table_path, "traces", batch_id=batch_id)
-            else:
-                write_batch(flat, table_path, "traces", batch_id=batch_id)
-            if dead.limit(1).count():
-                write_dead_letters(dead, base, tenant, dataset, "traces", batch_id)
-        finally:
-            flagged.unpersist()
+        _commit_batch(
+            with_dead_letter_flag(batch_df, OTLP_TRACES_SCHEMA),
+            F.col("_dead"), F.col("value"),
+            lambda good, _hold: {"traces": flatten_otlp_traces(good, json_col="value")},
+            base, tenant, dataset, "traces", batch_id, use_manifest,
+        )
 
     return _drain_stream(raw.writeStream.foreachBatch(sink), checkpoint, available_now)
 
@@ -433,7 +496,7 @@ def ingest_otlp_metrics_stream(
     src/writer/src/conversion_metrics.rs), every table committed through
     the manifest protocol under one batch id so a replay is a no-op on
     all of them."""
-    from ..sources.otlp import OTLP_METRICS_SCHEMA, flatten_otlp_metrics
+    from ..sources.otlp import OTLP_METRICS_SCHEMA, metric_base, route_metric_base
 
     checkpoint = checkpoint_dir or os.path.join(
         base, "_checkpoints", tenant, dataset, "metrics"
@@ -446,43 +509,17 @@ def ingest_otlp_metrics_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _charge_ingest(rate_limiter, tenant, batch_df, F.octet_length("value"))
-        flagged = with_dead_letter_flag(batch_df, OTLP_METRICS_SCHEMA).cache()
-        parsed = None
-        try:
-            dead = flagged.filter(F.col("_dead"))
-            good = flagged.filter(~F.col("_dead")).drop("_dead")
-            # parse ONCE per batch: the five-kind routing fans out to
-            # five table writes, and without the persisted base each
-            # write would re-run from_json over the whole batch — at
-            # ingest scale a 5x decode tax (sources/otlp.py metric_base)
-            from ..sources.otlp import metric_base, route_metric_base
-
-            parsed = metric_base(good, "value").persist()
-            tables = route_metric_base(parsed)
-            for table, df in tables.items():
-                # deterministic refusals (null in a required column) split
-                # to the dead-letter sink BEFORE the commit — a poison
-                # batch must not wedge the drain or shadow batches behind
-                df, violations = split_schema_violations(df, table)
-                if violations is not None and violations.limit(1).count():
-                    write_dead_letters(
-                        violations.select(F.to_json(F.struct("*")).alias("value")),
-                        base, tenant, dataset, table, batch_id,
-                        reason="required column is null",
-                    )
-                table_path = signal_table_path(base, tenant, dataset, table)
-                if use_manifest:
-                    from ..storage import write_batch_manifest
-
-                    write_batch_manifest(df, table_path, table, batch_id=batch_id)
-                else:
-                    write_batch(df, table_path, table, batch_id=batch_id)
-            if dead.limit(1).count():
-                write_dead_letters(dead, base, tenant, dataset, "metrics", batch_id)
-        finally:
-            if parsed is not None:
-                parsed.unpersist()
-            flagged.unpersist()
+        # parse ONCE per batch: the five-kind routing fans out to five
+        # table writes, and without the held base each write would
+        # re-run from_json over the whole batch — at ingest scale a 5x
+        # decode tax (sources/otlp.py metric_base). Null required
+        # columns (a poison datapoint) dead-letter per table.
+        _commit_batch(
+            with_dead_letter_flag(batch_df, OTLP_METRICS_SCHEMA),
+            F.col("_dead"), F.col("value"),
+            lambda good, hold: route_metric_base(hold(metric_base(good, "value"))),
+            base, tenant, dataset, "metrics", batch_id, use_manifest,
+        )
 
     return _drain_stream(raw.writeStream.foreachBatch(sink), checkpoint, available_now)
 
@@ -525,7 +562,6 @@ def ingest_otlp_pb_stream(
     import json
 
     from ..sources import otlp, otlp_pb
-    from ..storage import write_batch_manifest
 
     parse_fn = {
         "traces": otlp_pb.parse_trace_request,
@@ -563,53 +599,28 @@ def ingest_otlp_pb_stream(
                 }
             )
 
+    def route(good: DataFrame, hold) -> dict[str, DataFrame]:
+        if signal == "traces":
+            return {"traces": otlp.flatten_otlp_traces(good, json_col="value")}
+        if signal == "logs":
+            return {"logs": otlp.flatten_otlp_logs(good, json_col="value")}
+        # parse once per batch — the five-table fan-out must not re-run
+        # from_json (and here the Python wire decode above it) five times
+        return otlp.route_metric_base(hold(otlp.metric_base(good, "value")))
+
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # wire bodies charge their on-the-wire length (the binaryFile
         # `length` column), BEFORE the decode spends any executor work
         _charge_ingest(rate_limiter, tenant, batch_df, F.col("length"))
         decoded = batch_df.select("content").mapInPandas(
             decode, "value string, _dead_payload string"
-        ).cache()
-        parsed = None
-        try:
-            good = decoded.filter(F.col("value").isNotNull())
-            dead = decoded.filter(F.col("_dead_payload").isNotNull())
-            if signal == "traces":
-                tables = {"traces": otlp.flatten_otlp_traces(good, json_col="value")}
-            elif signal == "logs":
-                tables = {"logs": otlp.flatten_otlp_logs(good, json_col="value")}
-            else:
-                # parse once per batch — the five-table fan-out must not
-                # re-run from_json (and here the pprof-style Python
-                # decode above it) five times
-                parsed = otlp.metric_base(good, "value").persist()
-                tables = otlp.route_metric_base(parsed)
-            for table, df in tables.items():
-                # the SAME deterministic-refusal split the JSON metrics
-                # path performs: a decodable datapoint violating a
-                # required column (issue-#1060 poison) dead-letters
-                # instead of committing as a bad row — bad rows must not
-                # differ by ingest path
-                df, violations = split_schema_violations(df, table)
-                if violations is not None and violations.limit(1).count():
-                    write_dead_letters(
-                        violations.select(F.to_json(F.struct("*")).alias("value")),
-                        base, tenant, dataset, table, batch_id,
-                        reason="required column is null",
-                    )
-                write_batch_manifest(
-                    df, signal_table_path(base, tenant, dataset, table), table,
-                    batch_id=batch_id,
-                )
-            if dead.limit(1).count():
-                write_dead_letters(
-                    dead.select(F.col("_dead_payload").alias("value")),
-                    base, tenant, dataset, signal, batch_id,
-                )
-        finally:
-            if parsed is not None:
-                parsed.unpersist()
-            decoded.unpersist()
+        )
+        # the SAME commit (and the same required-column dead-lettering)
+        # as the JSON paths — bad rows must not differ by ingest path
+        _commit_batch(
+            decoded, F.col("_dead_payload").isNotNull(), F.col("_dead_payload"),
+            route, base, tenant, dataset, signal, batch_id,
+        )
 
     return _drain_stream(
         raw.writeStream.foreachBatch(sink), checkpoint, available_now
@@ -635,7 +646,6 @@ def ingest_remote_write_stream(
     batch id, so a replay no-ops on all of them. Corrupt payloads
     dead-letter instead of poisoning the stream."""
     from ..sources import remote_write as rw
-    from ..storage import write_batch_manifest
 
     checkpoint = checkpoint_dir or os.path.join(
         base, "_checkpoints", tenant, dataset, "remote_write"
@@ -672,31 +682,14 @@ def ingest_remote_write_stream(
         _charge_ingest(rate_limiter, tenant, batch_df, F.col("length"))
         decoded = batch_df.select("content").mapInPandas(
             decode, "value string, _dead_payload string"
-        ).cache()
-        try:
-            good = decoded.filter(F.col("value").isNotNull())
-            dead = decoded.filter(F.col("_dead_payload").isNotNull())
-            for table, df in rw.flatten_remote_write(good).items():
-                # same deterministic-refusal split as every other metric
-                # ingest path (null required column → dead letter)
-                df, violations = split_schema_violations(df, table)
-                if violations is not None and violations.limit(1).count():
-                    write_dead_letters(
-                        violations.select(F.to_json(F.struct("*")).alias("value")),
-                        base, tenant, dataset, table, batch_id,
-                        reason="required column is null",
-                    )
-                write_batch_manifest(
-                    df, signal_table_path(base, tenant, dataset, table), table,
-                    batch_id=batch_id,
-                )
-            if dead.limit(1).count():
-                write_dead_letters(
-                    dead.select(F.col("_dead_payload").alias("value")),
-                    base, tenant, dataset, "remote_write", batch_id,
-                )
-        finally:
-            decoded.unpersist()
+        )
+        # the held decode feeds every routed table: the Python wire
+        # decode runs once per batch, not once per table write
+        _commit_batch(
+            decoded, F.col("_dead_payload").isNotNull(), F.col("_dead_payload"),
+            lambda good, hold: rw.flatten_remote_write(hold(good)),
+            base, tenant, dataset, "remote_write", batch_id,
+        )
 
     return _drain_stream(
         raw.writeStream.foreachBatch(sink), checkpoint, available_now

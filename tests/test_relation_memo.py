@@ -115,3 +115,23 @@ def test_relation_memo_weakly_keyed_per_session(spark, tmp_path):
     relation_memo(spark, ("weak", p), lambda: spark.read.parquet(p))
     assert spark in catalog._RELATION_MEMO
     assert ("weak", p) in catalog._RELATION_MEMO[spark]
+
+
+def test_tree_sig_skips_a_file_that_vanishes_mid_walk(tmp_path, monkeypatch):
+    """A file a concurrent writer removes between the walk listing it
+    and its stat drops out of the signature instead of raising."""
+    root = tmp_path / "t"
+    (root / "hour=1").mkdir(parents=True)
+    for name in ("a.parquet", "b.parquet"):
+        (root / "hour=1" / name).write_bytes(b"x")
+    gone = str(root / "hour=1" / "b.parquet")
+    real_stat = os.stat
+
+    def flaky_stat(path, *args, **kwargs):
+        if os.fspath(path) == gone:
+            raise FileNotFoundError(path)
+        return real_stat(path, *args, **kwargs)
+
+    monkeypatch.setattr(catalog.os, "stat", flaky_stat)
+    sig = catalog._tree_sig(str(root))
+    assert [e[0] for e in sig] == [os.path.join("hour=1", "a.parquet")]

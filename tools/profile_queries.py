@@ -1,4 +1,4 @@
-"""Split per-query wall time into build / analyze / execute (guide §1).
+"""Split per-query wall time into build / resolve / execute (guide §1).
 
 Usage:
     python tools/profile_queries.py name1 name2 ...        # explicit names
@@ -7,9 +7,11 @@ Usage:
     python tools/profile_queries.py --out FILE
 
 For each query: ``build`` times the registry callable (pure Python +
-py4j expression construction), ``analyze`` times the analyzed-plan
-resolution, ``exec`` times the noop-sink action (min of 2, bench.py's
-methodology). build+analyze+exec ~= bench per-query seconds.
+py4j expression construction — and Catalyst analysis, which Spark 4 runs
+eagerly as each DataFrame is built), ``resolve`` times the fetch of the
+already-analyzed plan (~0: it is NOT the analysis cost, which sits in
+``build``), ``exec`` times the noop-sink action (min of 2, bench.py's
+methodology). build+resolve+exec ~= bench per-query seconds.
 """
 
 from __future__ import annotations
@@ -38,9 +40,16 @@ def main() -> None:
     names = list(args.names)
     if args.top:
         here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        anchor = json.load(open(os.path.join(here, "bench_per_query.json")))
-        ranked = sorted(anchor["queries"].items(), key=lambda kv: -kv[1])
-        names += [k for k, _ in ranked[: args.top] if k in queries]
+        with open(os.path.join(here, "bench_per_query.json")) as fh:
+            anchor = json.load(fh)
+        ranked = [k for k, _ in sorted(anchor["queries"].items(),
+                                       key=lambda kv: -kv[1])[: args.top]]
+        missing = [k for k in ranked if k not in queries]
+        if missing:
+            print(f"note: {len(missing)} of the top {args.top} ranked names "
+                  f"are not registered, skipped: {', '.join(missing)}",
+                  file=sys.stderr)
+        names += [k for k in ranked if k in queries]
     if args.all:
         names = list(queries)
 
@@ -67,17 +76,17 @@ def main() -> None:
             if tot < sum(best):
                 best = (t1 - t0, t2 - t1, t3 - t2)
         rows.append((name, *[round(v, 3) for v in best]))
-        b, a, e = rows[-1][1:]
-        print(f"{b:7.3f} {a:7.3f} {e:7.3f}  {b+a+e:7.3f}  {name}", flush=True)
+        b, r, e = rows[-1][1:]
+        print(f"{b:7.3f} {r:7.3f} {e:7.3f}  {b+r+e:7.3f}  {name}", flush=True)
 
     tot_b = round(sum(r[1] for r in rows), 2)
-    tot_a = round(sum(r[2] for r in rows), 2)
+    tot_r = round(sum(r[2] for r in rows), 2)
     tot_e = round(sum(r[3] for r in rows), 2)
-    print(json.dumps({"n": len(rows), "build": tot_b, "analyze": tot_a,
+    print(json.dumps({"n": len(rows), "build": tot_b, "resolve": tot_r,
                       "exec": tot_e}))
     if args.out:
         with open(args.out, "w") as fh:
-            json.dump({"columns": ["name", "build", "analyze", "exec"],
+            json.dump({"columns": ["name", "build", "resolve", "exec"],
                        "rows": rows}, fh, indent=1)
 
 
