@@ -319,19 +319,11 @@ def _metric_vector(df: DataFrame, m: Metric, where,
     else:
         keys = list(skeys)
 
-    # Algebraic outer-agg fusion (guide §2.2 partial aggregation, r12,
-    # mirroring the LogQL/PromQL lowerings): sum∘sum_over_time,
-    # min∘min_over_time and max∘max_over_time are the SAME aggregate
-    # grouped coarser, so the per-series matrix and its shuffle never
-    # exist — the by-labels materialize on the raw rows and the range
-    # aggregate groups by them directly. Only order-exact combinations
-    # fuse (an exact sum grouped coarser equals the sum of per-series
-    # sums; min/max are order-free); last/rate/increase/quantile and
-    # the series-counting agg keep the two-pass form.
-    if m.agg is not None and (m.agg, m.fn) in (
-        ("sum", "sum_over_time"), ("min", "min_over_time"),
-        ("max", "max_over_time"),
-    ):
+    # outer-agg fusion (ts.EXACT_FUSIONS, shared with the LogQL/PromQL
+    # lowerings): the by-labels materialize on the raw rows and the
+    # range aggregate groups by them directly, so the per-series matrix
+    # and its shuffle never exist
+    if (m.agg, m.fn.removesuffix("_over_time")) in ts.EXACT_FUSIONS:
         for b in m.by:
             df = df.withColumn(b, _label_col(b, skeys))
         gkeys = (["bucket"] if bucketed else []) + list(m.by)

@@ -114,7 +114,3 @@ class LabelReplace:
 
 MetricExpr = RangeAgg | VectorAgg | BinOp | Scalar | VectorLit | LabelReplace
 Query = LogSelector | MetricExpr
-
-
-def is_metric_query(q: Query) -> bool:
-    return not isinstance(q, LogSelector)

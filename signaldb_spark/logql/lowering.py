@@ -14,6 +14,8 @@ matchers match absent values (logql.rs:222-237).
 
 from __future__ import annotations
 
+import dataclasses
+import datetime as dt
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -51,8 +53,6 @@ WELL_KNOWN = {
 # series columns; metrics.rs:2219 analog for logs)
 SERIES_COLS = ["service_name", "severity_text", "label_namespace"]
 
-ARITH_OPS = set("+-*/%^")
-COMPARE_OPS = {"==", "!=", ">", ">=", "<", "<="}
 LOGICAL_OPS = {"and", "or", "unless"}
 
 _LOGFMT_RE = r"([a-zA-Z_][a-zA-Z0-9_]*)=([^\s\"]+)"
@@ -98,8 +98,6 @@ def _stages_before(sel: LogSelector, i: int) -> LogSelector:
     """The selector as it looked before stage ``i`` — template variables
     and renames inside a stage resolve against the upstream pipeline
     only (no self-recursion)."""
-    import dataclasses
-
     return dataclasses.replace(sel, stages=sel.stages[:i])
 
 
@@ -682,11 +680,9 @@ def _range_agg_expr(fn: str, sel: LogSelector, df: DataFrame, range_seconds: flo
 
 def eval_metric(ctx: LowerCtx, expr: MetricExpr) -> DataFrame:
     """Evaluate to a matrix DataFrame (bucket, <series cols>, value)."""
-    if isinstance(expr, Scalar):
-        spine = _spine(ctx)
+    if isinstance(expr, (Scalar, VectorLit)):
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
         return spine.withColumn("value", F.lit(expr.value))
-    if isinstance(expr, VectorLit):
-        return _spine(ctx).withColumn("value", F.lit(expr.value))
     if isinstance(expr, RangeAgg):
         return _eval_range_agg(ctx, expr)
     if isinstance(expr, VectorAgg):
@@ -705,30 +701,16 @@ def eval_metric(ctx: LowerCtx, expr: MetricExpr) -> DataFrame:
                 and g not in series_probe
             )
         if isinstance(expr.expr, RangeAgg):
-            # Algebraic outer-agg fusion (guide §2.2 partial aggregation,
-            # r12): sum∘{sum,count,bytes}_over_time and min∘min / max∘max
-            # collapse to the range aggregate grouped DIRECTLY by the
-            # kept labels — the per-stream matrix never materializes, so
-            # its (bucket × full-label-set) shuffle disappears. Only
-            # order-exact combinations fuse: counts and octet sums are
-            # exact integers, min/max are order-free, and an exact sum
-            # grouped coarser equals the sum of per-stream sums;
-            # rate/avg/stddev/quantile shapes are NOT algebraically
-            # collapsible and keep the two-pass form.
-            if (
-                expr.op in ("sum", "min", "max")
-                and (expr.op, expr.expr.fn)
-                in {("sum", "sum"), ("sum", "count"), ("sum", "bytes"),
-                    ("min", "min"), ("max", "max")}
-            ):
-                return _eval_range_agg(
-                    ctx, expr.expr, extra_labels=extra,
-                    fuse_group=(expr.grouping or (), bool(expr.without)),
-                )
-            inner = _eval_range_agg(ctx, expr.expr, extra_labels=extra)
+            # outer-agg fusion (ts.EXACT_FUSIONS): the range aggregate
+            # groups by the kept labels directly, and the per-stream
+            # matrix and its shuffle never exist
+            if (expr.op, expr.expr.fn) in ts.EXACT_FUSIONS:
+                return _eval_range_agg(ctx, expr.expr, extra, fuse=expr)
+            inner = _eval_range_agg(ctx, expr.expr, extra)
         else:
             inner = eval_metric(ctx, expr.expr)
         series = [c for c in inner.columns if c not in ("bucket", "value")]
+        keep = ts.kept_labels(series, expr.grouping, expr.without, WELL_KNOWN)
         if expr.op in ("topk", "bottomk", "approx_topk"):
             # by()/without() scopes the ranking — topk by (svc)(k, …)
             # keeps k series PER group, all labels retained (same
@@ -737,12 +719,6 @@ def eval_metric(ctx: LowerCtx, expr: MetricExpr) -> DataFrame:
             k = int(expr.param if expr.param is not None else 1)
             if k <= 0:
                 return inner.filter(F.lit(False))
-            routed = _route_grouping(series, expr.grouping)
-            keep = (
-                [c for c in series if c not in routed]
-                if expr.without
-                else [c for c in series if c in routed]
-            ) if expr.grouping else []
             if expr.op == "approx_topk":
                 # Loki 3.3 probabilistic topk; here the salted
                 # two-phase window — exact output, skew-proof first
@@ -756,12 +732,6 @@ def eval_metric(ctx: LowerCtx, expr: MetricExpr) -> DataFrame:
             )
         if expr.op in ("sort", "sort_desc"):
             return ts.sort_series_by_latest(inner, series, desc=expr.op == "sort_desc")
-        routed = _route_grouping(series, expr.grouping)
-        keep = (
-            [c for c in series if c not in routed]
-            if expr.without
-            else [c for c in series if c in routed]
-        )
         return ts.outer_aggregate(inner, keep, expr.op)
     if isinstance(expr, LabelReplace):
         inner = eval_metric(ctx, expr.expr)
@@ -771,33 +741,17 @@ def eval_metric(ctx: LowerCtx, expr: MetricExpr) -> DataFrame:
     raise TypeError(type(expr))
 
 
-def _fused_series(
-    series: list[str], fuse_group: tuple[tuple[str, ...], bool] | None
-) -> list[str]:
-    """Collapse a range aggregate's series columns to the outer
-    grouping when eval_metric fused the outer aggregate in (the routed
-    keep-list mirrors the non-fused outer_aggregate path exactly)."""
-    if fuse_group is None:
-        return series
-    grouping, without = fuse_group
-    routed = _route_grouping(series, grouping)
-    if without:
-        return [c for c in series if c not in routed]
-    return [c for c in series if c in routed]
-
-
 def _eval_range_agg(
     ctx: LowerCtx, expr: RangeAgg, extra_labels: tuple[str, ...] = (),
-    fuse_group: tuple[tuple[str, ...], bool] | None = None,
+    fuse: VectorAgg | None = None,
 ) -> DataFrame:
+    """Range aggregate per (bucket, stream); with ``fuse`` (an outer
+    aggregate eval_metric folded in), per (bucket, kept labels)."""
+    window = ctx
     if expr.offset_seconds:
-        # offset: evaluate over the window shifted BACK, then stamp
-        # results at the query's own buckets — implemented by shifting
-        # the window and sliding every row's timestamp forward before
-        # bucketing (Loki range-selector offset semantics)
-        import dataclasses
-        import datetime as dt
-
+        # offset: select over the window shifted BACK, then slide every
+        # row's timestamp forward before bucketing, so results stamp the
+        # query's own buckets (Loki range-selector offset semantics)
         off = dt.timedelta(seconds=expr.offset_seconds)
 
         def _shift(x):
@@ -805,40 +759,25 @@ def _eval_range_agg(
                 return (dt.datetime.fromisoformat(x) - off).isoformat(sep=" ")
             return x - off
 
-        shifted_ctx = dataclasses.replace(ctx, start=_shift(ctx.start), end=_shift(ctx.end))
-        df = apply_selector(shifted_ctx, expr.selector)
-        if _has_output_stages(expr.selector):
-            df = _apply_output_stages(df, expr.selector)
+        window = dataclasses.replace(ctx, start=_shift(ctx.start), end=_shift(ctx.end))
+    df = apply_selector(window, expr.selector)
+    if _has_output_stages(expr.selector):
+        df = _apply_output_stages(df, expr.selector)
+    if expr.offset_seconds:
         df = df.withColumn(
             "timestamp",
             F.col("timestamp") + F.make_interval(secs=F.lit(expr.offset_seconds)),
         )
-        expr = dataclasses.replace(expr, offset_seconds=0.0)
-        if expr.fn == "absent":
-            m = ts.count_over_time(df, "timestamp", ctx.step_seconds, [])
-            return ts.absent(m, _spine(ctx))
-        for g in extra_labels:
-            df = df.withColumn(g, resolve_label(df, expr.selector, g))
-        agg = _range_agg_expr(expr.fn, expr.selector, df, expr.range_seconds, expr.param)
-        series = _fused_series(
-            [c for c in SERIES_COLS if c in df.columns] + list(extra_labels),
-            fuse_group,
-        )
-        return ts.range_aggregate(df, "timestamp", ctx.step_seconds, series, agg)
-    df = apply_selector(ctx, expr.selector)
-    if _has_output_stages(expr.selector):
-        df = _apply_output_stages(df, expr.selector)
     if expr.fn == "absent":
         # absent_over_time: 1 per empty step bucket over the range
         m = ts.count_over_time(df, "timestamp", ctx.step_seconds, [])
-        return ts.absent(m, _spine(ctx))
+        return ts.absent(m, ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds))
     for g in extra_labels:
         df = df.withColumn(g, resolve_label(df, expr.selector, g))
     agg = _range_agg_expr(expr.fn, expr.selector, df, expr.range_seconds, expr.param)
-    series = _fused_series(
-        [c for c in SERIES_COLS if c in df.columns] + list(extra_labels),
-        fuse_group,
-    )
+    series = [c for c in SERIES_COLS if c in df.columns] + list(extra_labels)
+    if fuse is not None:
+        series = ts.kept_labels(series, fuse.grouping, fuse.without, WELL_KNOWN)
     return ts.range_aggregate(df, "timestamp", ctx.step_seconds, series, agg)
 
 
@@ -846,48 +785,26 @@ def _dollar(replacement: str) -> str:
     return replacement  # $1-style already matches Spark regexp_replace
 
 
-def _route_grouping(series: list[str], grouping: tuple[str, ...]) -> set[str]:
-    """Route LogQL grouping label names to storage columns
-    (level→severity_text, namespace→label_namespace, ...)."""
-    out: set[str] = set()
-    for g in grouping:
-        if WELL_KNOWN.get(g) in series:
-            out.add(WELL_KNOWN[g])
-        elif f"label_{g}" in series:
-            out.add(f"label_{g}")
-        elif g in series:
-            out.add(g)
-    return out
-
-
 def _eval_binop(ctx: LowerCtx, b: BinOp) -> DataFrame:
     ls = isinstance(b.lhs, Scalar)
     rs = isinstance(b.rhs, Scalar)
     if ls and rs:
-        v = _scalar_fold(b)
-        return _spine(ctx).withColumn("value", F.lit(v))
+        v = vo.scalar_fold(b.op, b.lhs.value, b.rhs.value)
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return spine.withColumn("value", F.lit(v))
     if ls or rs:
         vec = eval_metric(ctx, b.rhs if ls else b.lhs)
         scalar = b.lhs.value if ls else b.rhs.value
-        if b.op in ARITH_OPS:
+        if b.op in vo.ARITH:
             return vo.scalar_arith(vec, b.op, scalar, scalar_left=ls)
-        if b.op in COMPARE_OPS:
-            op = _flip(b.op) if ls else b.op
+        if b.op in vo.COMPARE:
+            op = vo.FLIP[b.op] if ls else b.op
             return vo.compare_scalar_filter(vec, op, scalar, bool_mode=b.bool_mode)
         raise ValueError(f"logical op with scalar operand: {b.op}")
     left = eval_metric(ctx, b.lhs)
     right = eval_metric(ctx, b.rhs)
     shared = [c for c in left.columns if c in right.columns and c not in ("value",)]
-    if b.on is not None:
-        routed = _route_grouping(shared, b.on)
-        on = ["bucket"] + [c for c in shared if c in routed]
-    elif b.ignoring is not None:
-        routed = _route_grouping(shared, b.ignoring)
-        on = [c for c in shared if c not in routed]
-    else:
-        on = shared
-    if "bucket" not in on:
-        on = ["bucket"] + on
+    on = ts.match_keys(shared, b.on, b.ignoring, WELL_KNOWN)
     # group_left/group_right: many-to-one matching — the "one" side is
     # reduced to a single row per join key (deterministically, max
     # value) so the many side's rows each match exactly once
@@ -897,53 +814,9 @@ def _eval_binop(ctx: LowerCtx, b: BinOp) -> DataFrame:
         left = left.groupBy(*on).agg(F.max("value").alias("value"))
     if b.op in LOGICAL_OPS:
         return vo.vector_logical(left, right, b.op, on)
-    if b.op in COMPARE_OPS:
+    if b.op in vo.COMPARE:
         return vo.vector_compare(left, right, b.op, on, bool_mode=b.bool_mode)
     return vo.vector_arith(left, right, b.op, on)
-
-
-def _flip(op: str) -> str:
-    return {">": "<", "<": ">", ">=": "<=", "<=": ">=", "==": "==", "!=": "!="}[op]
-
-
-def _scalar_fold(b: BinOp) -> float:
-    import math
-
-    l, r = b.lhs.value, b.rhs.value
-    if b.op == "/":
-        # IEEE-754 float division, the PromQL/LogQL semantics: x/0 is
-        # signed infinity, 0/0 is NaN (Python's ZeroDivisionError is
-        # integer thinking)
-        if r == 0:
-            return math.nan if l == 0 else math.copysign(math.inf, l)
-        return l / r
-    if b.op == "^":
-        # math.pow semantics: negative base with fractional exponent is
-        # NaN (the ** operator returns a complex, which cannot lower)
-        try:
-            return math.pow(l, r)
-        except (ValueError, OverflowError):
-            return math.nan
-    return {
-        "+": l + r, "-": l - r, "*": l * r,
-        "%": math.fmod(l, r) if r else math.nan,
-    }[b.op]
-
-
-def _spine(ctx: LowerCtx) -> DataFrame:
-    import datetime as dt
-
-    def to_epoch(x):
-        if isinstance(x, str):
-            x = dt.datetime.fromisoformat(x)
-        # naive bounds are UTC wall time (session timezone is pinned
-        # UTC); tz-AWARE bounds already carry their instant — replacing
-        # their tzinfo would shift the spine against the data window
-        if x.tzinfo is None:
-            x = x.replace(tzinfo=dt.timezone.utc)
-        return int(x.timestamp())
-
-    return ts.bucket_spine(ctx.spark, to_epoch(ctx.start), to_epoch(ctx.end), ctx.step_seconds)
 
 
 def query_metric(ctx: LowerCtx, query: str) -> DataFrame:

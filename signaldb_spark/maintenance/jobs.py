@@ -67,14 +67,6 @@ def _part_path(table_path: str, day: str, hour: int) -> str:
     return os.path.join(table_path, f"date_day={day}", f"hour={hour}")
 
 
-def partition_data_path(table_path: str, day: str, hour: int) -> str:
-    """Filesystem location of one partition's data files — under
-    ``data/`` for manifest tables, the table root otherwise."""
-    mt = _manifest_table(table_path)
-    root = mt.data_dir if mt is not None else table_path
-    return os.path.join(root, f"date_day={day}", f"hour={hour}")
-
-
 def partition_file_counts(table_path: str) -> dict[tuple[str, int], int]:
     """File count per (day, hour) from ONE manifest parse (or one
     directory walk for legacy layouts) — status over a 1000-partition

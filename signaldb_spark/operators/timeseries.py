@@ -26,6 +26,8 @@ single-task bottleneck exists.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -71,20 +73,6 @@ def time_window(df: DataFrame, ts_col: str, start, end) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # range aggregates (first pass: per (bucket, series))
-
-RANGE_AGGS = {
-    # LogQL <agg>_over_time lowering table (aggregate_expr, logs.rs:701-722)
-    "count": lambda v, ts: F.count(F.lit(1)),
-    "sum": lambda v, ts: F.sum(v),
-    "avg": lambda v, ts: F.avg(v),
-    "min": lambda v, ts: F.min(v),
-    "max": lambda v, ts: F.max(v),
-    "stddev": lambda v, ts: F.stddev_pop(v),
-    "stdvar": lambda v, ts: F.var_pop(v),
-    "first": lambda v, ts: F.min_by(v, ts),
-    "last": lambda v, ts: F.max_by(v, ts),
-}
-
 
 def range_aggregate(
     df: DataFrame,
@@ -220,6 +208,68 @@ def outer_aggregate(
     return matrix.groupBy("bucket", *by).agg(expr.alias(value_col))
 
 
+# (outer op, range kind) pairs where the outer aggregate over the
+# per-series range aggregates EQUALS the range aggregate grouped by the
+# kept labels directly, so the per-series matrix and its (bucket ×
+# full-label-set) shuffle never exist. Only order-exact pairs: counts
+# and octet sums are exact integers, min/max are order-free, and an
+# exact sum grouped coarser is the sum of per-series sums. rate/avg/
+# stddev/quantile shapes are not collapsible and keep the two-pass form.
+# The range kind is the LogQL ``fn`` as is, the PromQL/IR function with
+# ``_over_time`` stripped.
+EXACT_FUSIONS = frozenset({
+    ("sum", "sum"), ("sum", "count"), ("sum", "bytes"),
+    ("min", "min"), ("max", "max"),
+})
+
+
+# ---------------------------------------------------------------------------
+# label routing (group_columns_for, metrics.rs:2241-2334)
+
+
+def route_labels(labels, series, well_known: dict[str, str]) -> set[str]:
+    """Dialect label names → the storage columns of ``series`` they name:
+    the dialect's well-known column, then a materialized ``label_<name>``,
+    then the name itself. Unrouted names are dropped. Serves by/without,
+    on/ignoring and group_left/right alike — the routing matchers apply."""
+    out: set[str] = set()
+    for label in labels:
+        if well_known.get(label) in series:
+            out.add(well_known[label])
+        elif f"label_{label}" in series:
+            out.add(f"label_{label}")
+        elif label in series:
+            out.add(label)
+    return out
+
+
+def kept_labels(
+    series: list[str], labels, without: bool, well_known: dict[str, str]
+) -> list[str]:
+    """The series columns a ``by (labels)`` / ``without (labels)``
+    modifier keeps, in series order. ``without ()`` keeps every column
+    (one group per series); ``by ()`` and no modifier keep none."""
+    routed = route_labels(labels, series, well_known)
+    if without:
+        return [c for c in series if c not in routed]
+    return [c for c in series if c in routed]
+
+
+def match_keys(
+    shared: list[str], on, ignoring, well_known: dict[str, str]
+) -> list[str]:
+    """Vector-matching join keys over the label columns both operands
+    share: ``on (…)`` keeps the routed labels, ``ignoring (…)`` drops
+    them, no modifier matches on all of them; ``bucket`` always leads."""
+    if on is not None:
+        keys = ["bucket", *kept_labels(shared, on, False, well_known)]
+    elif ignoring is not None:
+        keys = kept_labels(shared, ignoring, True, well_known)
+    else:
+        keys = list(shared)
+    return keys if "bucket" in keys else ["bucket", *keys]
+
+
 # ---------------------------------------------------------------------------
 # counter family: rate/increase/delta, irate/idelta, deriv, resets/changes
 
@@ -233,15 +283,6 @@ def increase(df, ts_col, step_seconds, series_cols, value_col):
     v, t = F.col(value_col), F.col(ts_col)
     return range_aggregate(
         df, ts_col, step_seconds, series_cols, (F.max_by(v, t) - F.min_by(v, t))
-    )
-
-
-def prom_rate(df, ts_col, step_seconds, series_cols, value_col, range_seconds=None):
-    rs = range_seconds or step_seconds
-    v, t = F.col(value_col), F.col(ts_col)
-    return range_aggregate(
-        df, ts_col, step_seconds, series_cols,
-        ((F.max_by(v, t) - F.min_by(v, t)) / F.lit(float(rs))),
     )
 
 
@@ -399,6 +440,23 @@ def bucket_spine(spark, start_epoch_s: int, end_epoch_s: int, step_seconds: int)
     return spark.range(1).select(
         F.explode(F.sequence(F.lit(first), F.lit(last), F.lit(step_seconds))).alias("bucket")
     )
+
+
+def _epoch_s(x) -> int:
+    if isinstance(x, str):
+        x = datetime.fromisoformat(x)
+    # naive bounds are UTC wall time (the session timezone is pinned
+    # UTC); tz-aware bounds already carry their instant — replacing
+    # their tzinfo would shift the spine against the data window
+    if x.tzinfo is None:
+        x = x.replace(tzinfo=timezone.utc)
+    return int(x.timestamp())
+
+
+def spine(spark, start, end, step_seconds: int) -> DataFrame:
+    """:func:`bucket_spine` over a query window whose bounds are ISO
+    strings or datetimes."""
+    return bucket_spine(spark, _epoch_s(start), _epoch_s(end), step_seconds)
 
 
 def absent(matrix: DataFrame, spine: DataFrame) -> DataFrame:

@@ -9,15 +9,18 @@ sort-merge, AQE fixes skew, and nothing is driver-bound.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
 
 def _ieee_div(a, b):
     """PromQL (IEEE-754 float) division: x/0 is signed infinity, 0/0 is
     NaN. Spark's ``/`` under ANSI mode (on by default in Spark 4) would
     instead abort the whole query with DIVIDE_BY_ZERO on one zero
-    sample; the scalar-scalar fold already implements exactly these
-    semantics (promql/lowering._fold)."""
+    sample; :func:`scalar_fold` implements exactly these semantics for
+    two literals."""
     return F.when(b != 0, a / b).otherwise(
         F.when(a > 0, F.lit(float("inf")))
         .when(a < 0, F.lit(float("-inf")))
@@ -61,6 +64,32 @@ COMPARE = {
     "<": lambda a, b: _no_nan(a, b, a < b),
     "<=": lambda a, b: _no_nan(a, b, a <= b),
 }
+
+# ``s CMP v`` with the literal on the left is ``v FLIP[CMP] s``
+FLIP = {">": "<", "<": ">", ">=": "<=", "<=": ">=", "==": "==", "!=": "!="}
+
+
+def scalar_fold(op: str, l: float, r: float) -> float:
+    """Fold ``literal OP literal`` with the PromQL/LogQL float semantics
+    the column operators above implement."""
+    if op == "/":
+        # IEEE-754: x/0 is signed infinity, 0/0 is NaN (Python's
+        # ZeroDivisionError is integer thinking)
+        if r == 0:
+            return math.nan if l == 0 else math.copysign(math.inf, l)
+        return l / r
+    if op == "^":
+        # math.pow: negative base ^ fractional exponent is NaN, never a
+        # Python complex (which F.lit cannot lower)
+        try:
+            return math.pow(l, r)
+        except (ValueError, OverflowError):
+            return math.nan
+    return {
+        "+": l + r, "-": l - r, "*": l * r,
+        "%": math.fmod(l, r) if r else math.nan,
+        "atan2": math.atan2(l, r),
+    }[op]
 
 
 def _ieee_log(logged, v):

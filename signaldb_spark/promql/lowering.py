@@ -146,7 +146,8 @@ def _pin_at(ctx: PromCtx, sel: VectorSelector, matrix: DataFrame) -> DataFrame:
         pinned = matrix.groupBy(*series).agg(F.max_by("value", "bucket").alias("value"))
     else:
         pinned = matrix.orderBy(F.col("bucket").desc()).limit(1).drop("bucket")
-    return _spine(ctx).crossJoin(pinned)
+    spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+    return spine.crossJoin(pinned)
 
 
 def _resolve_at(ctx: PromCtx, at_epoch) -> float:
@@ -193,7 +194,7 @@ def _phi_percentile(v, phi: float):
 
 def lower_range_fn(
     ctx: PromCtx, fn: str, sel: VectorSelector, phi: float | None = None,
-    extra: tuple = (), fuse_group: tuple[tuple[str, ...], bool] | None = None,
+    extra: tuple = (), fuse: AggExpr | None = None,
 ) -> DataFrame:
     if sel.at_epoch is not None:
         inner_ctx = _at_ctx(ctx, sel, sel.range_seconds or ctx.default_range)
@@ -207,18 +208,9 @@ def lower_range_fn(
         return _empty_matrix(ctx)
     df = apply_selector(ctx, sel, base)
     series = series_columns(df)
-    if fuse_group is not None:
-        # outer-agg fusion (guide §2.2, r12): _eval_agg routed a
-        # sum/min/max-over-series straight into this range aggregate —
-        # group by the kept labels directly, mirroring the keep-list
-        # computation of the non-fused outer_aggregate path
-        grouping, without = fuse_group
-        routed = _route_labels(grouping, series)
-        series = (
-            [c for c in series if c not in routed]
-            if without
-            else [c for c in series if c in routed]
-        )
+    if fuse is not None:
+        # _eval_agg folded its outer aggregate in (ts.EXACT_FUSIONS)
+        series = ts.kept_labels(series, fuse.grouping, fuse.without, WELL_KNOWN)
     rng = sel.range_seconds or ctx.default_range
     step = ctx.step_seconds
     v, t = F.col("value"), F.col("timestamp")
@@ -240,7 +232,7 @@ def lower_range_fn(
         return ts.resets(df, "timestamp", step, series, "value", changes_mode=fn == "changes")
     if fn == "absent_over_time":
         m = ts.count_over_time(df, "timestamp", step, [])
-        return ts.absent(m, _spine(ctx))
+        return ts.absent(m, ts.spine(ctx.spark, ctx.start, ctx.end, step))
     if fn == "mad_over_time":
         return ts.mad_over_time(df, "timestamp", step, series, "value")
     agg = {
@@ -505,7 +497,8 @@ def lower_histogram_moment(ctx: PromCtx, sel, stddev: bool) -> DataFrame:
 
 def eval_expr(ctx: PromCtx, e: Expr) -> DataFrame:
     if isinstance(e, NumberLit):
-        return _spine(ctx).withColumn("value", F.lit(float(e.value)))
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return spine.withColumn("value", F.lit(float(e.value)))
     if isinstance(e, VectorSelector):
         if e.range_seconds is not None:
             raise ValueError("range selector outside function")
@@ -525,7 +518,7 @@ def _const(a) -> float:
     if isinstance(a, NumberLit):
         return float(a.value)
     if isinstance(a, BinOp) and isinstance(a.lhs, NumberLit) and isinstance(a.rhs, NumberLit):
-        return _fold(a)
+        return vo.scalar_fold(a.op, a.lhs.value, a.rhs.value)
     return float(a)  # _Str for label args
 
 
@@ -620,9 +613,11 @@ def _eval_call(ctx: PromCtx, c: Call) -> DataFrame:
         return lower_histogram_moment(ctx, c.args[0], stddev=fn == "histogram_stddev")
     if fn == "absent":
         inner = eval_expr(ctx, c.args[0])
-        return ts.absent(inner, _spine(ctx))
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return ts.absent(inner, spine)
     if fn == "vector":
-        return _spine(ctx).withColumn("value", F.lit(_const(c.args[0])))
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return spine.withColumn("value", F.lit(_const(c.args[0])))
     if fn == "scalar":
         # single no-label value per bucket; NaN unless exactly one
         # series (scalar_reduce, metrics.rs:1951-1989) — INCLUDING
@@ -635,21 +630,24 @@ def _eval_call(ctx: PromCtx, c: Call) -> DataFrame:
             .otherwise(F.lit(float("nan")))
             .alias("_sv")
         )
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
         return (
-            _spine(ctx).join(agg, "bucket", "left")
+            spine.join(agg, "bucket", "left")
             .withColumn("value", F.coalesce(F.col("_sv"), F.lit(float("nan"))))
             .drop("_sv")
         )
     if fn == "time":
-        return _spine(ctx).withColumn("value", F.col("bucket").cast("double"))
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return spine.withColumn("value", F.col("bucket").cast("double"))
     if fn == "pi":
-        return _spine(ctx).withColumn("value", F.lit(math.pi))
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return spine.withColumn("value", F.lit(math.pi))
     if fn == "timestamp":
         inner = eval_expr(ctx, c.args[0])
         return inner.withColumn("value", F.col("bucket").cast("double"))
     if fn in CALENDAR_FNS:
         if not c.args:
-            spine = _spine(ctx)
+            spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
             tcol = F.timestamp_seconds(F.col("bucket"))
             return spine.withColumn("value", CALENDAR_FNS[fn](tcol).cast("double"))
         # with a vector argument, Prometheus interprets the sample
@@ -680,7 +678,7 @@ def _eval_call(ctx: PromCtx, c: Call) -> DataFrame:
         # ordering is left untouched
         cols = []
         for a in c.args[1:]:
-            routed = _route_labels([str(a)], series)
+            routed = ts.route_labels([str(a)], series, WELL_KNOWN)
             cols.extend(c2 for c2 in series if c2 in routed and c2 not in cols)
         if not cols:
             # nothing routed: keep the default deterministic ordering
@@ -710,8 +708,9 @@ def _eval_subquery_reduce(ctx: PromCtx, fn: str, sub: Call, phi: float | None = 
     inner_ctx = dataclasses.replace(ctx, step_seconds=res_s)
     inner = eval_expr(inner_ctx, inner_expr)
     series = [c for c in inner.columns if c not in ("bucket", "value")]
+    spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
     if fn == "mad_over_time":
-        return ts.sliding_mad(inner, _spine(ctx), int(rng.value), series_cols=series)
+        return ts.sliding_mad(inner, spine, int(rng.value), series_cols=series)
     v, b = F.col("m.value"), F.col("m.bucket")
     exprs = {
         "sum_over_time": F.sum(v),
@@ -735,59 +734,27 @@ def _eval_subquery_reduce(ctx: PromCtx, fn: str, sub: Call, phi: float | None = 
     if fn not in exprs:
         raise ValueError(f"{fn} is not supported over a subquery")
     return ts.sliding_reduce(
-        inner, _spine(ctx), int(rng.value), series_cols=series, expr=exprs[fn]
+        inner, spine, int(rng.value), series_cols=series, expr=exprs[fn]
     )
 
 
-def _route_labels(labels, series: list[str]) -> set[str]:
-    """PromQL label names → storage columns (job→service_name,
-    pod→label_pod, __name__→metric_name) for by/without/on/ignoring —
-    the same routing matchers apply (group_columns_for,
-    metrics.rs:2241-2334)."""
-    out: set[str] = set()
-    for l in labels:
-        if WELL_KNOWN.get(l) in series:
-            out.add(WELL_KNOWN[l])
-        elif f"label_{l}" in series:
-            out.add(f"label_{l}")
-        elif l in series:
-            out.add(l)
-    return out
-
-
-_FUSABLE_RANGE_FNS = {
-    # outer op → inner range fns whose coarser grouping is EXACTLY the
-    # sum/min/max of the per-series results (counts are exact integers,
-    # min/max are order-free); rate/avg/present/stddev shapes are not
-    # algebraically collapsible and keep the two-pass form
-    "sum": ("sum_over_time", "count_over_time"),
-    "min": ("min_over_time",),
-    "max": ("max_over_time",),
-}
-
-
 def _eval_agg(ctx: PromCtx, a: AggExpr) -> DataFrame:
-    # Algebraic outer-agg fusion (guide §2.2 partial aggregation, r12):
-    # sum/min/max over a plain <fn>_over_time range aggregate groups the
-    # range aggregate DIRECTLY by the kept labels — the per-series
-    # matrix and its (bucket × full-label-set) shuffle never exist.
-    # Restricted to bare selectors (no subquery, no @-pin) so the
-    # special evaluation paths stay untouched.
+    # outer-agg fusion (ts.EXACT_FUSIONS): the range aggregate groups by
+    # the kept labels directly, and the per-series matrix and its shuffle
+    # never exist. Restricted to bare selectors (no subquery, no @-pin)
+    # so the special evaluation paths stay untouched.
     if (
-        a.op in _FUSABLE_RANGE_FNS
-        and isinstance(a.expr, Call)
-        and a.expr.fn in _FUSABLE_RANGE_FNS[a.op]
+        isinstance(a.expr, Call)
+        and (a.op, a.expr.fn.removesuffix("_over_time")) in ts.EXACT_FUSIONS
         and len(a.expr.args) == 1
         and isinstance(a.expr.args[0], VectorSelector)
         and a.expr.args[0].subquery is None
         and a.expr.args[0].at_epoch is None
     ):
-        return lower_range_fn(
-            ctx, a.expr.fn, a.expr.args[0],
-            fuse_group=(a.grouping or (), bool(a.without)),
-        )
+        return lower_range_fn(ctx, a.expr.fn, a.expr.args[0], fuse=a)
     inner = eval_expr(ctx, a.expr)
     series = [c for c in inner.columns if c not in ("bucket", "value")]
+    keep = ts.kept_labels(series, a.grouping, a.without, WELL_KNOWN)
     if a.op in ("topk", "bottomk"):
         # k <= 0 returns the empty vector (Prometheus), never "top 1"
         k = int(a.param if a.param is not None else 1)
@@ -796,21 +763,9 @@ def _eval_agg(ctx: PromCtx, a: AggExpr) -> DataFrame:
         # by()/without() scopes the ranking: topk by (job)(k, m) keeps
         # k series PER job, all original labels retained (Prometheus
         # aggregates over the OTHER labels' series sets)
-        grouping = _route_labels(a.grouping, series)
-        keep = (
-            [c for c in series if c not in grouping]
-            if a.without
-            else [c for c in series if c in grouping]
-        ) if a.grouping else []
         return ts.topk_per_bucket(inner, k, series,
                                   bottom=a.op == "bottomk", group_cols=keep)
     if a.op in ("limitk", "limit_ratio"):
-        grouping = _route_labels(a.grouping, series)
-        keep = (
-            [c for c in series if c not in grouping]
-            if a.without
-            else [c for c in series if c in grouping]
-        )
         if a.op == "limitk":
             k = int(a.param if a.param is not None else 1)
             if k <= 0:
@@ -823,22 +778,10 @@ def _eval_agg(ctx: PromCtx, a: AggExpr) -> DataFrame:
         # labels are preserved like any other aggregator
         # (metrics.rs:1910-1949)
         label = str(a.param)
-        grouping = _route_labels(a.grouping, series)
-        keep = (
-            [c for c in series if c not in grouping]
-            if a.without
-            else [c for c in series if c in grouping]
-        )
         return (
             inner.groupBy("bucket", *keep, F.col("value").cast("string").alias(label))
             .agg(F.count(F.lit(1)).cast("double").alias("value"))
         )
-    grouping = _route_labels(a.grouping, series)
-    keep = (
-        [c for c in series if c not in grouping]
-        if a.without
-        else [c for c in series if c in grouping]
-    )
     if a.op == "quantile":
         return ts.outer_aggregate(inner, keep, quantile=float(a.param))
     return ts.outer_aggregate(inner, keep, a.op)
@@ -847,30 +790,22 @@ def _eval_agg(ctx: PromCtx, a: AggExpr) -> DataFrame:
 def _eval_binop(ctx: PromCtx, b: BinOp) -> DataFrame:
     ls, rs = isinstance(b.lhs, NumberLit), isinstance(b.rhs, NumberLit)
     if ls and rs:
-        v = _fold(b)
-        return _spine(ctx).withColumn("value", F.lit(v))
+        v = vo.scalar_fold(b.op, b.lhs.value, b.rhs.value)
+        spine = ts.spine(ctx.spark, ctx.start, ctx.end, ctx.step_seconds)
+        return spine.withColumn("value", F.lit(v))
     if ls or rs:
         vec = eval_expr(ctx, b.rhs if ls else b.lhs)
         scalar = b.lhs.value if ls else b.rhs.value
         if b.op in vo.ARITH:
             return vo.scalar_arith(vec, b.op, scalar, scalar_left=ls)
-        op = {">": "<", "<": ">", ">=": "<=", "<=": ">=", "==": "==", "!=": "!="}[b.op] if ls else b.op
+        op = vo.FLIP[b.op] if ls else b.op
         return vo.compare_scalar_filter(vec, op, scalar, bool_mode=b.bool_mode)
     left = eval_expr(ctx, b.lhs)
     right = eval_expr(ctx, b.rhs)
     shared = [c for c in left.columns if c in right.columns and c != "value"]
     # PromQL drops __name__ on binary ops: exclude metric_name from keys
     shared = [c for c in shared if c != "metric_name"]
-    if b.on is not None:
-        routed = _route_labels(b.on, shared)
-        on = ["bucket"] + [c for c in shared if c in routed]
-    elif b.ignoring is not None:
-        routed = _route_labels(b.ignoring, shared)
-        on = [c for c in shared if c not in routed]
-    else:
-        on = shared
-    if "bucket" not in on:
-        on = ["bucket"] + on
+    on = ts.match_keys(shared, b.on, b.ignoring, WELL_KNOWN)
     # __name__ handling (Prometheus): arithmetic and bool-mode
     # comparisons DROP the metric name; filter-mode comparisons and the
     # set operators keep each surviving sample unchanged, name included.
@@ -889,7 +824,7 @@ def _eval_binop(ctx: PromCtx, b: BinOp) -> DataFrame:
         # group_left(lbl, …): the named labels are COPIED from the one
         # (right) side onto result rows; the extras pick the same row
         # the max-value reduction picks (struct max_by — deterministic)
-        routed = _route_labels(b.group_labels, right_full.columns)
+        routed = ts.route_labels(b.group_labels, right_full.columns, WELL_KNOWN)
         extras = tuple(c for c in routed if c not in on)
         # copied labels OVERWRITE the many side's same-named columns
         # (the join would otherwise produce an ambiguous duplicate)
@@ -909,7 +844,7 @@ def _eval_binop(ctx: PromCtx, b: BinOp) -> DataFrame:
         # operand; its named labels are copied onto the many (right)
         # side's rows, which keep their full identity
         extras_side = "left"
-        routed = _route_labels(b.group_labels, left.columns)
+        routed = ts.route_labels(b.group_labels, left.columns, WELL_KNOWN)
         extras = tuple(c for c in routed if c not in on)
         one = left.select(*on, *extras, "value")
         left = one.groupBy(*on).agg(
@@ -937,42 +872,6 @@ def _eval_binop(ctx: PromCtx, b: BinOp) -> DataFrame:
             extras_side=extras_side,
         )
     return vo.vector_arith(left, right, b.op, on, extras=extras, extras_side=extras_side)
-
-
-def _fold(b: BinOp) -> float:
-    l, r = b.lhs.value, b.rhs.value
-    if b.op == "/":
-        # IEEE-754: x/0 is signed infinity, 0/0 NaN (Prometheus floats)
-        if r == 0:
-            return math.nan if l == 0 else math.copysign(math.inf, l)
-        return l / r
-    if b.op == "^":
-        # math.pow: negative base ^ fractional exponent is NaN, never a
-        # Python complex (which F.lit cannot lower)
-        try:
-            return math.pow(l, r)
-        except (ValueError, OverflowError):
-            return math.nan
-    return {
-        "+": l + r, "-": l - r, "*": l * r,
-        "%": math.fmod(l, r) if r else math.nan,
-        "atan2": math.atan2(l, r),
-    }[b.op]
-
-
-def _spine(ctx: PromCtx) -> DataFrame:
-    import datetime as dt
-
-    def to_epoch(x):
-        if isinstance(x, str):
-            x = dt.datetime.fromisoformat(x)
-        # naive bounds are UTC wall time; tz-aware bounds already carry
-        # their instant — replace() on them would shift the spine
-        if x.tzinfo is None:
-            x = x.replace(tzinfo=dt.timezone.utc)
-        return int(x.timestamp())
-
-    return ts.bucket_spine(ctx.spark, to_epoch(ctx.start), to_epoch(ctx.end), ctx.step_seconds)
 
 
 def _empty_matrix(ctx: PromCtx) -> DataFrame:

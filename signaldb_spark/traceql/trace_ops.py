@@ -614,9 +614,7 @@ def metrics_rate(
     (tempo.rs:1284-1304, its issue #552); Tempo defines the semantics:
     matching-span count per step divided by step seconds. Filter-first +
     one (bucket, by...) aggregation."""
-    from ..operators.timeseries import range_aggregate
-
-    return range_aggregate(
+    return ts_ops.range_aggregate(
         spans.filter(cond), ts_col, step_seconds, list(by_cols),
         (F.count(F.lit(1)) / F.lit(float(step_seconds))),
     )
@@ -634,9 +632,7 @@ def metrics_quantile(
     """TraceQL metrics ``{cond} | quantile_over_time(duration, φ)`` —
     exact interpolated quantile of a span field per step (same
     exactness argument as timeseries.quantile_over_time)."""
-    from ..operators.timeseries import range_aggregate
-
-    return range_aggregate(
+    return ts_ops.range_aggregate(
         spans.filter(cond), ts_col, step_seconds, list(by_cols),
         F.percentile(F.col(value_col).cast("double"), F.lit(phi)),
     )
@@ -728,9 +724,7 @@ def metrics_histogram(
         .otherwise(F.length(F.bin(v)))
         .cast("int")
     )
-    from ..operators.timeseries import with_bucket
-
-    b = with_bucket(spans.filter(cond), ts_col, step_seconds)
+    b = ts_ops.with_bucket(spans.filter(cond), ts_col, step_seconds)
     return (
         b.groupBy("bucket", exp.alias("le_exp"))
         .agg(F.count(F.lit(1)).cast("long").alias("count"))
@@ -795,11 +789,9 @@ def red_metrics(
     err = (
         error_cond if error_cond is not None else (F.col("status_code") == "Error")
     ).cast("int")
-    from ..operators.timeseries import with_bucket
-
     d = F.col(duration_col).cast("double")
     return (
-        with_bucket(spans, ts_col, step_seconds)
+        ts_ops.with_bucket(spans, ts_col, step_seconds)
         .groupBy("bucket", F.col(service_col).alias("service"))
         .agg(
             F.count(F.lit(1)).alias("requests"),

@@ -197,14 +197,25 @@ def test_gauge_last_and_range_fns(spark):
     assert run("delta", window_seconds=3600) == pytest.approx(10.0)  # last−first
 
 
-def test_fused_outer_agg_groups_range_aggregate_directly(spark):
-    """sum∘sum_over_time (and min∘min / max∘max) fuse into ONE grouped
-    aggregation (r12, mirroring the LogQL/PromQL lowerings): the
-    by-label groups the raw rows directly and the per-attribute-series
-    pass never materializes. Distinct attribute series under one label
-    value must still collapse together, and the plan must hold a single
-    partial+final HashAggregate pair — a second pair means the
-    per-series matrix came back."""
+@pytest.mark.parametrize(
+    "agg, fn, expected",
+    [
+        ("sum", "sum_over_time", {"api": 40.0, "web": 5.0}),
+        ("min", "min_over_time", {"api": 10.0, "web": 5.0}),
+        ("max", "max_over_time", {"api": 30.0, "web": 5.0}),
+    ],
+    ids=["sum-sum", "min-min", "max-max"],
+)
+def test_fused_outer_agg_groups_range_aggregate_directly(spark, agg, fn, expected):
+    """Every (outer op, range fn) pair of ts.EXACT_FUSIONS the IR admits
+    (sum∘sum, min∘min, max∘max — it has no count or bytes range fn and
+    no ``without`` form) fuses into ONE grouped aggregation, shared with
+    the LogQL/PromQL lowerings: the by-label groups the raw rows
+    directly and the per-attribute-series pass never materializes.
+    Distinct attribute series under one label value must still collapse
+    together, and the plan must hold a single partial+final
+    HashAggregate pair — a second pair means the per-series matrix came
+    back."""
     import re
 
     df = spark.createDataFrame(
@@ -216,8 +227,8 @@ def test_fused_outer_agg_groups_range_aggregate_directly(spark):
         "timestamp timestamp, service_name string, metric_name string, "
         "value double, attributes map<string,string>",
     )
-    q = validate(_q({"name": "temp", "type": "gauge", "fn": "sum_over_time",
-                     "window_seconds": 3600, "agg": "sum",
+    q = validate(_q({"name": "temp", "type": "gauge", "fn": fn,
+                     "window_seconds": 3600, "agg": agg,
                      "by": ["service_name"]}))
     out = lower_metrics(df, q)
     p = out._sc._jvm.PythonSQLUtils.explainString(
@@ -225,14 +236,7 @@ def test_fused_outer_agg_groups_range_aggregate_directly(spark):
     )
     assert len(re.findall(r"^\(\d+\) HashAggregate", p, re.M)) == 2, p
     got = {r["service_name"]: r["value"] for r in out.collect()}
-    assert got == {"api": pytest.approx(40.0), "web": pytest.approx(5.0)}
-
-    q2 = validate(_q({"name": "temp", "type": "gauge", "fn": "min_over_time",
-                      "window_seconds": 3600, "agg": "min",
-                      "by": ["service_name"]}))
-    got2 = {r["service_name"]: r["value"]
-            for r in lower_metrics(df, q2).collect()}
-    assert got2 == {"api": pytest.approx(10.0), "web": pytest.approx(5.0)}
+    assert got == pytest.approx(expected)
 
 
 # --------------------------------------------------- histogram quantile

@@ -140,17 +140,45 @@ def test_log_query_line_filters(ctx, duck):
     assert n == expected and n > 0
 
 
-def test_outer_sum_without_fused_matches_duckdb(ctx, duck):
-    """`sum without (level) (count_over_time(...))` rides the r12
-    outer-agg fusion (eval_metric collapses the outer sum into the
-    range aggregate). The without-form has no battery gate, so the
-    result is pinned against DuckDB's restatement here — and the plan
-    must hold exactly ONE grouped aggregation (one partial+final
-    HashAggregate pair); a second pair means the per-stream matrix
-    shuffle came back."""
+_DUCK_DURATION = "TRY_CAST(element_at(log_attributes, 'duration_ms')[1] AS DOUBLE)"
+
+
+@pytest.mark.parametrize(
+    "modifier, cols",
+    [
+        ("by (service_name)", ["service_name"]),
+        ("without (level)", ["service_name", "label_namespace"]),
+    ],
+    ids=["by", "without"],
+)
+@pytest.mark.parametrize(
+    "outer, inner, duck_value",
+    [
+        ("sum", "count_over_time({sel}[1h])", "count(*)"),
+        ("sum", "bytes_over_time({sel}[1h])", "sum(strlen(body))"),
+        ("sum", "sum_over_time({sel} | unwrap duration_ms [1h])",
+         f"sum({_DUCK_DURATION})"),
+        ("min", "min_over_time({sel} | unwrap duration_ms [1h])",
+         f"min({_DUCK_DURATION})"),
+        ("max", "max_over_time({sel} | unwrap duration_ms [1h])",
+         f"max({_DUCK_DURATION})"),
+    ],
+    ids=["sum-count", "sum-bytes", "sum-sum", "min-min", "max-max"],
+)
+def test_outer_sum_without_fused_matches_duckdb(
+    ctx, duck, outer, inner, duck_value, modifier, cols
+):
+    """Every (outer op, range fn) pair of ts.EXACT_FUSIONS, in the by and
+    the without form, rides the outer-agg fusion (eval_metric collapses
+    the outer aggregate into the range aggregate). The result is pinned
+    against DuckDB's restatement — and the plan must hold exactly ONE
+    grouped aggregation (one partial+final HashAggregate pair); a second
+    pair means the per-stream matrix shuffle came back."""
     got = query_metric(
         ctx,
-        'sum without (level) (count_over_time({service_name=~"api|web"}[1h]))',
+        f"{outer} {modifier} ("
+        + inner.format(sel='{service_name=~"api|web"}')
+        + ")",
     )
     import re
 
@@ -160,15 +188,16 @@ def test_outer_sum_without_fused_matches_duckdb(ctx, duck):
     # the formatted output names each operator twice (tree + detail
     # section) — count the numbered detail headers only
     assert len(re.findall(r"^\(\d+\) HashAggregate", p, re.M)) == 2, p
-    assert got.columns == ["bucket", "service_name", "label_namespace", "value"]
-    rows = {tuple(r) for r in got.collect()}
+    assert got.columns == ["bucket", *cols, "value"]
+    rows = {(*r[:-1], round(r[-1], 6)) for r in got.collect()}
+    keys = ", ".join(cols)
     exp = duck.execute(
-        """
+        f"""
         SELECT CAST(floor(epoch(timestamp)/3600)*3600 AS BIGINT) AS bucket,
-               service_name, label_namespace, CAST(count(*) AS DOUBLE)
+               {keys}, round(CAST({duck_value} AS DOUBLE), 6)
         FROM logs
         WHERE service_name SIMILAR TO 'api|web' AND timestamp BETWEEN ? AND ?
-        GROUP BY 1, 2, 3
+        GROUP BY ALL
         """,
         [START, END],
     ).fetchall()
@@ -843,23 +872,17 @@ def test_decolorize_then_line_format_composes(spark):
 
 def test_scalar_fold_ieee_semantics():
     """1/0 folds to +Inf, -1/0 to -Inf, 0/0 to NaN; negative base with
-    fractional exponent is NaN, never a Python complex."""
+    fractional exponent is NaN, never a Python complex; atan2 keeps the
+    quadrant of its operands."""
     import math
 
-    from signaldb_spark.logql.lowering import _scalar_fold
+    from signaldb_spark.operators.vector_ops import scalar_fold
 
-    class _L:
-        def __init__(self, v):
-            self.value = v
-
-    class _B:
-        def __init__(self, op, l, r):
-            self.op, self.lhs, self.rhs = op, _L(l), _L(r)
-
-    assert _scalar_fold(_B("/", 1.0, 0.0)) == math.inf
-    assert _scalar_fold(_B("/", -1.0, 0.0)) == -math.inf
-    assert math.isnan(_scalar_fold(_B("/", 0.0, 0.0)))
-    assert math.isnan(_scalar_fold(_B("^", -2.0, 0.5)))
+    assert scalar_fold("/", 1.0, 0.0) == math.inf
+    assert scalar_fold("/", -1.0, 0.0) == -math.inf
+    assert math.isnan(scalar_fold("/", 0.0, 0.0))
+    assert math.isnan(scalar_fold("^", -2.0, 0.5))
+    assert scalar_fold("atan2", 1.0, -1.0) == pytest.approx(3 * math.pi / 4)
 
 
 def test_logql_topk_by_grouping(ctx):
@@ -875,3 +898,19 @@ def test_logql_topk_by_grouping(ctx):
         per.setdefault((r.bucket, r.service_name), []).append(r)
     assert per and all(len(v) == 1 for v in per.values())
     assert len({s for _, s in per}) > 1
+
+
+def test_logql_topk_without_empty_ranks_per_series(ctx):
+    """topk without () (k, …) groups by every label — each series ranks
+    alone, so every series survives (PromQL semantics, the same
+    reading limitk and the outer aggregates give ``without ()``).
+    Without a modifier, and with by (), the ranking stays global."""
+    from collections import Counter
+
+    inner = 'count_over_time({service_name=~".+"}[1h])'
+    bare = Counter(map(tuple, query_metric(ctx, inner).collect()))
+    got = query_metric(ctx, f"topk without () (1, {inner})").collect()
+    assert Counter(map(tuple, got)) == bare
+    for q in (f"topk(1, {inner})", f"topk by () (1, {inner})"):
+        got = query_metric(ctx, q).collect()
+        assert len(got) == len({r.bucket for r in got}) < sum(bare.values())

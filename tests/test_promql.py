@@ -115,14 +115,32 @@ def test_rate_counter(ctx, duck):
     assert rows == {(b, s): v for b, s, v in exp} and rows
 
 
-def test_outer_sum_without_fused_matches_duckdb(ctx, duck):
-    """`sum without (service_name) (sum_over_time(...))` rides the r12
-    outer-agg fusion (_eval_agg routes the shape straight into
-    lower_range_fn grouped by the kept labels). The without-form has no
-    battery gate, so the result is pinned against DuckDB here, and the
-    plan must hold exactly ONE grouped aggregation pair."""
+@pytest.mark.parametrize(
+    "modifier, col",
+    [("by (job)", "service_name"), ("without (service_name)", "metric_name")],
+    ids=["by", "without"],
+)
+@pytest.mark.parametrize(
+    "outer, fn, duck_value",
+    [
+        ("sum", "sum_over_time", "sum(value)"),
+        ("sum", "count_over_time", "CAST(count(value) AS DOUBLE)"),
+        ("min", "min_over_time", "min(value)"),
+        ("max", "max_over_time", "max(value)"),
+    ],
+    ids=["sum-sum", "sum-count", "min-min", "max-max"],
+)
+def test_outer_sum_without_fused_matches_duckdb(
+    ctx, duck, outer, fn, duck_value, modifier, col
+):
+    """Every (outer op, range fn) pair of ts.EXACT_FUSIONS that PromQL
+    can emit, in the by and the without form, rides the outer-agg fusion
+    (_eval_agg routes the shape straight into lower_range_fn grouped by
+    the kept labels; ``job`` routes to service_name). The result is
+    pinned against DuckDB, and the plan must hold exactly ONE grouped
+    aggregation pair."""
     got = query_range(
-        ctx, "sum without (service_name) (sum_over_time(process_cpu_usage[10m]))"
+        ctx, f"{outer} {modifier} ({fn}(process_cpu_usage[10m]))"
     )
     import re
 
@@ -132,17 +150,18 @@ def test_outer_sum_without_fused_matches_duckdb(ctx, duck):
     # each operator is named twice in formatted output (tree + detail);
     # count the numbered detail headers only
     assert len(re.findall(r"^\(\d+\) HashAggregate", p, re.M)) == 2, p
-    rows = {(r.bucket, r.metric_name): round(r.value, 6) for r in got.collect()}
+    assert got.columns == ["bucket", col, "value"]
+    rows = {(r.bucket, r[col]): round(r.value, 6) for r in got.collect()}
     exp = duck.execute(
         f"""
-        SELECT {BUCKET} AS bucket, metric_name, round(sum(value), 6)
+        SELECT {BUCKET} AS bucket, {col}, round({duck_value}, 6)
         FROM metrics_gauge
         WHERE metric_name = 'process_cpu_usage' AND timestamp BETWEEN ? AND ?
         GROUP BY 1, 2
         """,
         [START, END],
     ).fetchall()
-    assert rows == {(b, m): v for b, m, v in exp} and rows
+    assert rows == {(b, c): v for b, c, v in exp} and rows
 
 
 def test_sum_by_drops_series(ctx):
@@ -171,6 +190,21 @@ def test_topk(ctx):
     for r in got:
         per_bucket.setdefault(r.bucket, []).append(r)
     assert per_bucket and all(len(v) <= 2 for v in per_bucket.values())
+
+
+def test_topk_without_empty_ranks_per_series(ctx):
+    """topk without () (k, m) groups by every label — each series ranks
+    alone and survives, the reading limitk and the outer aggregates
+    already give ``without ()``. Without a modifier, and with by (),
+    the ranking stays global (one series per bucket)."""
+    bare = {tuple(r) for r in query_range(ctx, "process_cpu_usage").collect()}
+    for q in ("topk without () (1, process_cpu_usage)",
+              "limitk without () (1, process_cpu_usage)"):
+        got = query_range(ctx, q).collect()
+        assert len(got) == len(bare) and {tuple(r) for r in got} == bare
+    for q in ("topk(1, process_cpu_usage)", "topk by () (1, process_cpu_usage)"):
+        got = query_range(ctx, q).collect()
+        assert len(got) == len({r.bucket for r in got}) < len(bare)
 
 
 def test_absent_of_missing_metric(ctx):
@@ -311,8 +345,6 @@ def test_histogram_fraction_hand_check(spark):
 
 def test_unary_minus_precedence():
     """Prometheus: -2^2 == -(2^2) == -4."""
-    from signaldb_spark.promql.lowering import _fold
-
     q = parse("-2 ^ 2")
     # outer node must be the negation
     assert isinstance(q, BinOp) and q.op == "-" and q.lhs.value == 0.0

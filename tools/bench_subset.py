@@ -37,9 +37,16 @@ def main() -> None:
     names = list(args.names)
     if args.top:
         here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        anchor = json.load(open(os.path.join(here, "bench_per_query.json")))
-        ranked = sorted(anchor["queries"].items(), key=lambda kv: -kv[1])
-        names += [k for k, _ in ranked[: args.top] if k in queries]
+        with open(os.path.join(here, "bench_per_query.json")) as fh:
+            anchor = json.load(fh)
+        ranked = [k for k, _ in sorted(anchor["queries"].items(),
+                                       key=lambda kv: -kv[1])[: args.top]]
+        missing = [k for k in ranked if k not in queries]
+        if missing:
+            print(f"note: {len(missing)} of the top {args.top} ranked names "
+                  f"are not registered, skipped: {', '.join(missing)}",
+                  file=sys.stderr)
+        names += [k for k in ranked if k in queries]
     unknown = [n for n in names if n not in queries]
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
