@@ -345,11 +345,8 @@ class SignalDBAPI:
         optimization, never a semantics change. Selector predicates and
         output stages apply per wave; the early-stop counts SURVIVING
         rows (read_recent_topk's transform contract)."""
-        import os as _os
-
         from .catalog import signal_table_path
-        from .storage.hot import HotStore, committed_watermark
-        from .storage.manifest import MANIFEST_DIR, ManifestTable
+        from .storage.hot import covering_snapshot
 
         if limit <= 0:
             # read_recent_topk's early-stop boundary probe indexes
@@ -364,11 +361,10 @@ class SignalDBAPI:
         path = signal_table_path(
             self.session.base, self.tenant, self.dataset, "logs"
         )
-        if not _os.path.isdir(_os.path.join(path, MANIFEST_DIR)):
+        snap = covering_snapshot(path)
+        if snap is None:
             return None
-        seqs = HotStore(path).sequences()
-        if seqs and seqs[-1] > committed_watermark(path):
-            return None  # hot rows are invisible to the manifest scan
+        mt, m = snap
         from .logql.lowering import _apply_output_stages, apply_selector
         from .maintenance import attr_demand
 
@@ -385,9 +381,9 @@ class SignalDBAPI:
             )
             return _apply_output_stages(apply_selector(wave_ctx, sel), sel)
 
-        top, _files = ManifestTable(path).read_recent_topk(
+        top, _files = mt.read_recent_topk(
             self.spark, "timestamp", limit, transform=transform,
-            tiebreak_col="trace_id",
+            tiebreak_col="trace_id", manifest=m,
         )
         return top
 
@@ -575,19 +571,14 @@ class SignalDBAPI:
         import os as _os
 
         from .catalog import signal_table_path
-        from .storage.hot import HotStore, watermark_of
-        from .storage.manifest import MANIFEST_DIR, ManifestTable
+        from .storage.hot import covering_snapshot
 
-        path = signal_table_path(
+        snap = covering_snapshot(signal_table_path(
             self.session.base, self.tenant, self.dataset, table
-        )
-        if not _os.path.isdir(_os.path.join(path, MANIFEST_DIR)):
+        ))
+        if snap is None:
             return None
-        seqs = HotStore(path).sequences()  # before the manifest read
-        mt = ManifestTable(path)
-        m = mt.load_manifest()
-        if seqs and seqs[-1] > watermark_of(m):
-            return None  # hot rows are invisible to the manifest scan
+        mt, m = snap
         between = None
         if start is not None and end is not None:
             between = ("timestamp", start, end)
@@ -1557,9 +1548,9 @@ class AdminAPI:
         the manifest snapshot)."""
         import os
 
-        from .catalog import _parquet_dir_exists, signal_table_path
+        from .catalog import _tree_sig, signal_table_path
         from .schemas.signal_schemas import SCHEMAS
-        from .storage.manifest import ManifestTable
+        from .storage.manifest import ManifestTable, manifest_table
 
         if not can_manage:
             return error_envelope(
@@ -1570,10 +1561,12 @@ class AdminAPI:
         created, skipped = [], []
         for table in SCHEMAS:
             path = signal_table_path(self.base, tenant_id, dataset, table)
-            mt = ManifestTable(path)
-            if os.path.isdir(mt.manifest_dir) or _parquet_dir_exists(path):
+            if manifest_table(path) is not None or any(
+                rel.endswith(".parquet") for rel, _mtime, _size in _tree_sig(path)
+            ):
                 skipped.append(table)
                 continue
+            mt = ManifestTable(path)
             os.makedirs(mt.manifest_dir, exist_ok=True)
             os.makedirs(mt.data_dir, exist_ok=True)
             mt.commit([], batch_id="provision")

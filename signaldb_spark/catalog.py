@@ -72,71 +72,67 @@ def pin_time_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
-# Lazy-plan memo for benchmark tables: building the SAME parquet relation
-# (file listing + footer schema inference, ~100ms of driver time per
-# spark.read.parquet) hundreds of times per session is pure planning
-# overhead — the engine surface re-resolves every table on every query
-# call. The memo holds the *unresolved lazy DataFrame* only: every action
-# still scans the parquet files, so no data or results are cached. Keys
-# are (sf_dir, table, on-disk signature); the signature (mtime/size of
-# the file, or entry stats of a part-file directory) drops the entry the
-# moment a writer replaces the table, and the whole map is keyed weakly
-# on the session so a stopped session's plans are never reused.
+# Lazy-plan memos: building the SAME parquet relation (file listing +
+# footer schema inference, ~100-400ms of driver time per spark.read) on
+# every query call or façade route is pure planning overhead. A memo
+# holds the *unresolved lazy DataFrame* only: every action still scans
+# parquet, so no data or results are cached. Entries are keyed by
+# relation IDENTITY and carry the on-disk signature that built them:
+#
+# - benchmark tables (``_TABLE_MEMO``): ``(sf_dir, table)``, signed by
+#   the file or part-file tree stat;
+# - signal relations (``_RELATION_MEMO``): ``("manifest", data_dir)``
+#   signed by the committed file list and recorded schema (a manifest
+#   version never mutates a file), ``("hot", table_path)`` signed by the
+#   published sequence tuple (a published batch is immutable), and
+#   ``("dir", path)`` signed by the tree stat of a bare parquet dir.
+#
+# A changed signature REPLACES the entry, so a writer replacing data can
+# never be served a stale plan and a superseded plan is never leaked:
+# each memo holds at most one entry per identity. Both maps are keyed
+# weakly on the session, so a stopped session's plans are never reused.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
-
-
-def _table_sig(path: str) -> tuple:
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    entries = []
-    with os.scandir(path) as it:
-        for e in it:
-            s = e.stat()
-            entries.append((e.name, s.st_mtime_ns, s.st_size))
-    entries.sort()
-    return (st.st_mtime_ns, tuple(entries))
-
-
-# Same memo idea for SIGNAL relations (manifest snapshot reads, hot-batch
-# unions, plain signal dirs): the façade re-resolves its table on every
-# route, and a hive-partitioned signal table costs a full JVM directory
-# listing + footer schema inference per spark.read (~100-400ms for the
-# 720-dir logs fixture). Keys embed what makes the relation immutable —
-# an explicit committed file list (manifest versions never mutate a
-# file), a hot-sequence tuple (published batches are immutable), or a
-# whole-tree stat signature for bare parquet dirs — so a writer
-# replacing data can never be served a stale plan. Values are lazy
-# DataFrames only; every action still scans parquet.
 _RELATION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def relation_memo(spark: SparkSession, key: tuple, build) -> DataFrame:
-    memo = _RELATION_MEMO.setdefault(spark, {})
-    hit = memo.get(key)
-    if hit is None:
-        hit = memo[key] = build()
-    return hit
+def relation_memo(
+    spark: SparkSession, ident: tuple, sig, build, store=_RELATION_MEMO
+) -> DataFrame:
+    """The memoized relation for ``ident`` if it was built at ``sig``,
+    else ``build()``, which then replaces the entry."""
+    memo = store.setdefault(spark, {})
+    hit = memo.get(ident)
+    if hit is None or hit[0] != sig:
+        hit = memo[ident] = (sig, build())
+    return hit[1]
 
 
 def _tree_sig(path: str) -> tuple:
+    """``(relative name, mtime_ns, size)`` of every file under ``path``,
+    sorted; a plain file signs as its own one entry and a missing path
+    as ``()``."""
+    if os.path.isfile(path):
+        top = os.path.dirname(path)
+        listing = [(top, [os.path.basename(path)])]
+    else:
+        top = path
+        listing = [(root, files) for root, _dirs, files in os.walk(path)]
     entries = []
-    for root, dirs, files in os.walk(path):
-        dirs.sort()
+    for root, files in listing:
         for f in files:
+            full = os.path.join(root, f)
             try:
-                st = os.stat(os.path.join(root, f))
+                st = os.stat(full)
             except FileNotFoundError:
                 # removed by a concurrent writer since the walk listed
                 # it: the signature changes without it, which already
                 # retires any plan built over the old tree
                 continue
-            rel = os.path.relpath(os.path.join(root, f), path)
-            entries.append((rel, st.st_mtime_ns, st.st_size))
+            entries.append((os.path.relpath(full, top), st.st_mtime_ns, st.st_size))
     entries.sort()
     return tuple(entries)
 
@@ -157,36 +153,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and parquet filter pushdown intact.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    memo = _TABLE_MEMO.setdefault(spark, {})
-    sig = _table_sig(path)
-    hit = memo.get((sf_dir, name))
-    if hit is not None and hit[0] == sig:
-        # time confs are re-pinned even on a hit: the engine owns time
-        # semantics at every read entry point (see pin_time_confs)
-        pin_time_confs(spark)
-        return hit[1]
-    # schema sniff must hit a parquet FILE: tables written by Spark (our
-    # sinks, tools/scale_probe.py) are directories of part files
-    sniff = path
-    if os.path.isdir(path):
-        parts = sorted(
-            p for p in os.listdir(path) if p.endswith(".parquet")
-        )
-        if parts:
-            sniff = os.path.join(path, parts[0])
-    ns_cols = [
-        f.name for f in pq.read_schema(sniff) if str(f.type) == "timestamp[ns]"
-    ]
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # time confs are pinned even on a memo hit: the engine owns time
+    # semantics at every read entry point (see pin_time_confs)
     pin_time_confs(spark)
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        # integer div, not float: double division rounds at the 1e15-µs
-        # scale and drifts ±1µs against exact truncation
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    memo[(sf_dir, name)] = (sig, df)
-    return df
+
+    def build() -> DataFrame:
+        # schema sniff must hit a parquet FILE: tables written by Spark
+        # (our sinks, tools/scale_probe.py) are directories of part files
+        sniff = path
+        if os.path.isdir(path):
+            parts = sorted(
+                p for p in os.listdir(path) if p.endswith(".parquet")
+            )
+            if parts:
+                sniff = os.path.join(path, parts[0])
+        ns_cols = [
+            f.name for f in pq.read_schema(sniff)
+            if str(f.type) == "timestamp[ns]"
+        ]
+        if ns_cols:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        for c in ns_cols:
+            # integer div, not float: double division rounds at the
+            # 1e15-µs scale and drifts ±1µs against exact truncation
+            df = df.withColumn(
+                c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
+            )
+        return df
+
+    return relation_memo(
+        spark, (sf_dir, name), _tree_sig(path), build, store=_TABLE_MEMO
+    )
 
 
 def load_tables(
@@ -226,9 +224,9 @@ def optional_table(
     # exactly the committed file set plus published hot batches above
     # the committed watermark, never a half-finished writer's files.
     from .storage.hot import HOT_DIR, hybrid_read
-    from .storage.manifest import MANIFEST_DIR
+    from .storage.manifest import manifest_table
 
-    if os.path.isdir(os.path.join(path, MANIFEST_DIR)) or os.path.isdir(
+    if manifest_table(path) is not None or os.path.isdir(
         os.path.join(path, HOT_DIR)
     ):
         df = hybrid_read(spark, path)
@@ -243,19 +241,9 @@ def optional_table(
             if table in SCHEMAS:
                 return spark.createDataFrame([], SCHEMAS[table])
         return df
-    if not _parquet_dir_exists(path):
+    sig = _tree_sig(path)
+    if not any(rel.endswith(".parquet") for rel, _mtime, _size in sig):
         return None
     return relation_memo(
-        spark,
-        ("signal_dir", path, _tree_sig(path)),
-        lambda: spark.read.parquet(path),
+        spark, ("dir", path), sig, lambda: spark.read.parquet(path)
     )
-
-
-def _parquet_dir_exists(path: str) -> bool:
-    if not os.path.isdir(path):
-        return False
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False

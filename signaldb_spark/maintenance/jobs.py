@@ -17,17 +17,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage.manifest import manifest_table
 from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
-
-
-def _manifest_table(table_path: str):
-    """ManifestTable handle if this table uses the snapshot-manifest
-    commit protocol (the default sink), else None."""
-    from ..storage.manifest import MANIFEST_DIR, ManifestTable
-
-    if os.path.isdir(os.path.join(table_path, MANIFEST_DIR)):
-        return ManifestTable(table_path)
-    return None
 
 
 def list_hour_partitions(table_path: str) -> list[tuple[str, int]]:
@@ -39,7 +30,7 @@ def list_hour_partitions(table_path: str) -> list[tuple[str, int]]:
     resurrect partitions. Identity comes from the manifest's recorded
     partition structs (hive-path fallback for pre-recording entries,
     storage.manifest.file_partitions) — never a fresh path parse."""
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is not None:
         out = set()
         for ident in mt.file_partitions().values():
@@ -71,7 +62,7 @@ def partition_file_counts(table_path: str) -> dict[tuple[str, int], int]:
     """File count per (day, hour) from ONE manifest parse (or one
     directory walk for legacy layouts) — status over a 1000-partition
     manifest table must not re-open the manifest per partition."""
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is not None:
         counts: dict[tuple[str, int], int] = {}
         for ident in mt.file_partitions().values():
@@ -88,7 +79,7 @@ def partition_file_counts(table_path: str) -> dict[tuple[str, int], int]:
 def partition_files(table_path: str, day: str, hour: int) -> list[str]:
     """Parquet files of one partition: the current snapshot's list for
     manifest tables (orphans excluded), a directory listing otherwise."""
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is not None:
         return sorted(
             f for f, p in mt.file_partitions().items()
@@ -123,7 +114,7 @@ def compaction_candidates(
     return largest-small-file-count first, so a bounded compactor pass
     burns its budget where fragmentation is worst. One manifest parse
     for the whole table."""
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is None:
         # legacy directory layout: stat() the files so candidacy stays
         # size-aware (a partition of two already-at-target files must
@@ -170,7 +161,7 @@ def compact_partition(
     commit swaps the replacement files in; concurrent readers keep
     their snapshot); the rename-aside path below serves legacy
     directory-layout tables only."""
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is not None:
         from ..storage.manifest import compact_partition_manifest
 
@@ -264,7 +255,7 @@ def compaction_cycle(
         if lease is None:
             continue
         try:
-            if target_bytes is not None and _manifest_table(table_path) is not None:
+            if target_bytes is not None and manifest_table(table_path) is not None:
                 from ..storage.manifest import compact_partition_manifest
 
                 n = compact_partition_manifest(
@@ -331,7 +322,7 @@ def maintenance_cycle(
     if keep_partitions is not None:
         dropped = apply_retention(table_path, keep_partitions)
     expired: list[str] = []
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is not None:
         expired = mt.expire_snapshots(keep_last=keep_snapshots)
     orphans = cleanup_orphans(table_path, grace_seconds=orphan_grace_seconds)
@@ -365,7 +356,7 @@ def cleanup_orphans(
     with ingest."""
     import time as _time
 
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is None:
         return []
     cutoff = (
@@ -403,7 +394,7 @@ def apply_retention(
     instead of being silently skipped, because a skipped file would
     never age out while staying in every query result (the reference
     compactor rework's #930 rule)."""
-    mt = _manifest_table(table_path)
+    mt = manifest_table(table_path)
     if mt is not None:
         from ..storage.manifest import _parse_hive_partition
 

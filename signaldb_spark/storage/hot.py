@@ -46,6 +46,7 @@ from .manifest import (
     collect_file_stats,
     file_schema,
     lifecycle_metadata,
+    manifest_table,
     stats_visible_writes,
     _declared_blooms,
     _stage_into_data,
@@ -154,15 +155,15 @@ class HotStore:
         # default single-footer schema pick would silently DROP a column
         # present only in newer batches (the cold union already handles
         # drift via unionByName(allowMissingColumns=True)).
-        # Relation memo keyed on the sequence tuple: a published batch
+        # Relation memo signed by the sequence tuple: a published batch
         # directory is immutable (the atomic-rename publish point), so
-        # the same sequence set is the same relation; gc'd sequences
-        # simply stop appearing in keys (catalog.relation_memo).
+        # the same sequence set is the same relation (catalog.relation_memo).
         from ..catalog import relation_memo
 
         return relation_memo(
             spark,
-            ("hot_read", self.table_path, tuple(use)),
+            ("hot", self.table_path),
+            tuple(use),
             lambda: spark.read.option("mergeSchema", "true")
             .parquet(*[self._seq_path(s) for s in use]),
         )
@@ -184,15 +185,34 @@ class HotStore:
         return dropped
 
 
-def committed_watermark(table_path: str, version: int | None = None) -> int:
-    """The high-water hot sequence covered by the cold snapshot
+def committed_watermark(table_path: str) -> int:
+    """The high-water hot sequence covered by the current cold snapshot
     (-1 before any flush commit)."""
-    return watermark_of(ManifestTable(table_path).load_manifest(version))
+    return watermark_of(ManifestTable(table_path).load_manifest())
 
 
 def watermark_of(manifest: dict) -> int:
     """The committed watermark of an already-loaded manifest version."""
     return int(manifest.get("props", {}).get(WATERMARK_PROP, -1))
+
+
+def covering_snapshot(table_path: str) -> tuple[ManifestTable, dict] | None:
+    """The one hot-before-cold check of the manifest-only readers (the
+    tail TopK and point-scan fast paths): ``(mt, manifest)`` when the
+    table is manifest-backed and the loaded version's watermark covers
+    every published hot batch, so the manifest alone answers exactly
+    what :func:`hybrid_read` would; ``None`` otherwise (the caller falls
+    back to the hybrid read). The hot sequences snapshot BEFORE the one
+    manifest load — a flush landing in between then shows in the
+    manifest's watermark (module docstring)."""
+    mt = manifest_table(table_path)
+    if mt is None:
+        return None
+    seqs = HotStore(table_path).sequences()  # MUST precede the manifest read
+    m = mt.load_manifest()
+    if seqs and seqs[-1] > watermark_of(m):
+        return None  # hot rows the manifest cannot see
+    return mt, m
 
 
 def hybrid_read(
@@ -206,27 +226,19 @@ def hybrid_read(
     omission — module docstring). ``None`` only when the table has
     neither committed files nor hot batches.
 
-    The watermark and the cold file list resolve from ONE pinned
-    manifest version: two independent resolutions would let a flush
-    commit land in between, pairing an old watermark with a new file
-    list — every row of the just-flushed batches would then appear in
-    BOTH halves of the union (the exact duplication the version pin
-    proves impossible). ``table`` is accepted for call-site symmetry
-    with the other readers; the hot/cold protocol itself is
-    table-agnostic."""
+    The watermark and the cold file list come from ONE loaded manifest
+    version: two independent resolutions would let a flush commit land
+    in between, pairing an old watermark with a new file list — every
+    row of the just-flushed batches would then appear in BOTH halves of
+    the union (the exact duplication the single load rules out).
+    ``table`` is accepted for call-site symmetry with the other readers;
+    the hot/cold protocol itself is table-agnostic."""
     store = HotStore(table_path)
     hot_seqs = store.sequences()  # MUST precede the manifest read
     mt = ManifestTable(table_path)
-    # version 0 (no commit yet) passes through VERBATIM: collapsing it
-    # to None would make the watermark and the cold read re-resolve the
-    # latest version independently, and a first flush committing between
-    # the two would pair watermark -1 with the new file list —
-    # duplicating every flushed row (exactly the race this pin closes;
-    # load_manifest(0)/read(version=0) handle the empty table).
-    version = mt.current_version()
-    wm = committed_watermark(table_path, version)
-    cold = mt.read(spark, version=version)
-    hot = store.read_hot(spark, above=wm, seqs=hot_seqs)
+    m = mt.load_manifest()
+    cold = mt.read(spark, manifest=m)
+    hot = store.read_hot(spark, above=watermark_of(m), seqs=hot_seqs)
     if cold is None:
         return hot
     if hot is None:

@@ -120,6 +120,15 @@ class UnclassifiableFile(Exception):
     'unclassifiable files are a loud error, not silently kept')."""
 
 
+def manifest_table(table_path: str) -> "ManifestTable | None":
+    """The one layout test: a :class:`ManifestTable` handle when the
+    table commits through snapshot manifests (the default sink), None
+    for a bare parquet directory or no table at all."""
+    if os.path.isdir(os.path.join(table_path, MANIFEST_DIR)):
+        return ManifestTable(table_path)
+    return None
+
+
 class ManifestTable:
     def __init__(self, table_path: str):
         self.table_path = table_path
@@ -385,22 +394,13 @@ class ManifestTable:
         [min, max] for ``col`` is disjoint from [lo, hi]. Files with no
         recorded stats are kept (pruning is an optimization, never a
         correctness filter). Returns (absolute paths, files_pruned)."""
-        m = manifest or self.load_manifest(version)
-        stats = m.get("stats", {})
-        lo_k, hi_k = _stat_key(lo), _stat_key(hi)
-        kept, pruned = [], 0
-        for f in m["files"]:
-            rng = stats.get(f, {}).get(col)
-            if rng is not None and (rng[1] < lo_k or rng[0] > hi_k):
-                pruned += 1
-                continue
-            kept.append(os.path.join(self.data_dir, f))
-        return kept, pruned
+        return self.pruned_files_multi([(col, lo, hi)], version, manifest)
 
     def pruned_files_multi(
         self,
         preds: list[tuple[str, object, object]],
         version: int | None = None,
+        manifest: dict | None = None,
     ) -> tuple[list[str], int]:
         """Conjunctive range pruning: drop a file when ANY predicate's
         recorded [min, max] is disjoint from its [lo, hi]. The layout
@@ -408,23 +408,12 @@ class ManifestTable:
         files have tight ranges on every clustered column at once);
         files without stats for a column pass that predicate, as ever.
         Returns (absolute paths, files_pruned)."""
-        m = self.load_manifest(version)
-        stats = m.get("stats", {})
-        keyed = [(c, _stat_key(lo), _stat_key(hi)) for c, lo, hi in preds]
-        kept, pruned = [], 0
-        for f in m["files"]:
-            fstats = stats.get(f, {})
-            drop = False
-            for c, lo_k, hi_k in keyed:
-                rng = fstats.get(c)
-                if rng is not None and (rng[1] < lo_k or rng[0] > hi_k):
-                    drop = True
-                    break
-            if drop:
-                pruned += 1
-            else:
-                kept.append(os.path.join(self.data_dir, f))
-        return kept, pruned
+        m = manifest or self.load_manifest(version)
+        kept = _range_kept(m, m["files"], preds)
+        return (
+            [os.path.join(self.data_dir, f) for f in kept],
+            len(m["files"]) - len(kept),
+        )
 
     def pruned_files_point(
         self, col: str, value, version: int | None = None,
@@ -455,21 +444,12 @@ class ManifestTable:
         from .blooms import bloom_might_contain, bucket_of, load_sidecar
 
         m = manifest or self.load_manifest(version)
-        candidates = list(m["files"])
-        pruned = 0
-
+        # the [min, max] layers: ``between`` and ``col = value`` as the
+        # range [value, value]
+        ranges = [(col, value, value)]
         if between is not None:
-            bcol, lo, hi = between
-            lo_k, hi_k = _stat_key(lo), _stat_key(hi)
-            stats = m.get("stats", {})
-            kept = []
-            for f in candidates:
-                rng = stats.get(f, {}).get(bcol)
-                if rng is not None and (rng[1] < lo_k or rng[0] > hi_k):
-                    pruned += 1
-                    continue
-                kept.append(f)
-            candidates = kept
+            ranges.insert(0, between)
+        candidates = _range_kept(m, m["files"], ranges)
 
         props = m.get("props", {})
         if props.get("bucket.col") == col:
@@ -480,22 +460,10 @@ class ManifestTable:
             kept = []
             for f in candidates:
                 b = (parts.get(f) or _parse_hive_partition(f) or {}).get(part)
-                if b is not None and int(b) != target:
-                    pruned += 1
-                    continue
-                kept.append(f)
+                if b is None or int(b) == target:
+                    kept.append(f)
             candidates = kept
-
-        stats = m.get("stats", {})
-        v_k = _stat_key(value)
-        kept = []
-        for f in candidates:
-            rng = stats.get(f, {}).get(col)
-            if rng is not None and (rng[1] < v_k or rng[0] > v_k):
-                pruned += 1
-                continue
-            kept.append(f)
-        candidates = kept
+        pruned = len(m["files"]) - len(candidates)
 
         blooms = m.get("blooms", {})
 
@@ -551,6 +519,7 @@ class ManifestTable:
         spark: SparkSession,
         version: int | None = None,
         between: tuple[str, object, object] | None = None,
+        manifest: dict | None = None,
     ) -> DataFrame | None:
         """Snapshot read: exactly the committed file set (explicit list +
         basePath keeps hive-style partition columns AND partition
@@ -560,25 +529,24 @@ class ManifestTable:
         the manifest's per-file column stats before Spark plans the
         scan; the caller must still apply the row-level predicate (file
         stats bound files, not rows)."""
-        m = self.load_manifest(version)
+        m = manifest or self.load_manifest(version)
         if between is not None:
             fs, _ = self.pruned_files(*between, manifest=m)
         else:
             fs = [os.path.join(self.data_dir, f) for f in m["files"]]
         if not fs:
             return None
-        # Relation memo keyed on the explicit committed file list: a
-        # manifest version never mutates a file, so the same (basePath,
-        # files) pair is the same immutable relation — re-listing and
-        # re-inferring footers per façade route is pure planning
-        # overhead (catalog.relation_memo; every action still scans).
-        # The recorded schema is part of the key: it types the relation.
+        # Relation memo signed by the explicit file list: a manifest
+        # version never mutates a file, so the same (basePath, files)
+        # pair is the same immutable relation (catalog.relation_memo;
+        # every action still scans). The recorded schema types the
+        # relation, so it signs it too.
         from ..catalog import relation_memo
 
         return relation_memo(
             spark,
-            ("manifest_read", self.data_dir, tuple(fs),
-             json.dumps(m.get("schema"), sort_keys=True)),
+            ("manifest", self.data_dir),
+            (tuple(fs), json.dumps(m.get("schema"), sort_keys=True)),
             lambda: self.scan(spark, m, fs),
         )
 
@@ -590,6 +558,7 @@ class ManifestTable:
         version: int | None = None,
         transform=None,
         tiebreak_col: str | None = None,
+        manifest: dict | None = None,
     ) -> tuple[DataFrame | None, int]:
         """Statistics-ordered TopK scan for the dominant observability
         shape ``ORDER BY ts DESC LIMIT n`` — read the most-promising
@@ -627,7 +596,7 @@ class ManifestTable:
         values or synthesize rows, or the file-stats boundary check is
         no longer an upper bound.
         """
-        m = self.load_manifest(version)
+        m = manifest or self.load_manifest(version)
         stats = m.get("stats", {})
         blind = [f for f in m["files"] if stats.get(f, {}).get(ts_col) is None]
         known = sorted(
@@ -832,6 +801,24 @@ def _stat_key(v):
     return v
 
 
+def _range_kept(manifest: dict, files: list[str], preds) -> list[str]:
+    """The one stats range test: ``files`` minus those whose recorded
+    [min, max] for some ``(col, lo, hi)`` of ``preds`` is disjoint from
+    [lo, hi]. A file without stats for a column passes that predicate,
+    so the kept set is the intersection of the per-predicate tests."""
+    stats = manifest.get("stats", {})
+    keyed = [(c, _stat_key(lo), _stat_key(hi)) for c, lo, hi in preds]
+
+    def disjoint(f: str) -> bool:
+        fstats = stats.get(f, {})
+        return any(
+            (rng := fstats.get(c)) is not None and (rng[1] < lo or rng[0] > hi)
+            for c, lo, hi in keyed
+        )
+
+    return [f for f in files if not disjoint(f)]
+
+
 def _parallel_files(fn, rel_files: list[str], max_workers: int = 16) -> list:
     """Map ``fn`` over per-file metadata operations with a bounded
     thread pool, preserving input order. Below the pool's own overhead
@@ -888,21 +875,18 @@ def lifecycle_metadata(
     data_dir: str,
     rel_files: list[str],
     sort_cols: list[str] | None,
-    ident: dict | None = None,
 ) -> dict:
     """The per-file lifecycle entries every producer records in its
-    commit — partition identity (``ident`` when the producer knows it
-    outright, else parsed once from its own just-written hive layout),
-    on-disk bytes, and the sort claim IFF the producer actually sorted
-    (declared-sort-orders honesty). One definition so the three writers
-    (batch sink, hot flush, compactor) cannot drift."""
+    commit — partition identity (parsed once from the producer's own
+    just-written hive layout), on-disk bytes, and the sort claim IFF the
+    producer actually sorted (declared-sort-orders honesty). One
+    definition so the three writers (batch sink, hot flush, compactor)
+    cannot drift."""
     return {
-        "partitions": (
-            {f: ident for f in rel_files}
-            if ident is not None
-            else {f: p for f in rel_files
-                  if (p := _parse_hive_partition(f)) is not None}
-        ),
+        "partitions": {
+            f: p for f in rel_files
+            if (p := _parse_hive_partition(f)) is not None
+        },
         "sizes": dict(zip(rel_files, _parallel_files(
             lambda f: os.path.getsize(os.path.join(data_dir, f)), rel_files
         ))),
@@ -1046,12 +1030,9 @@ def compact_partition_manifest(
 
     mt = ManifestTable(table_path)
     m = mt.load_manifest()
-    ident = {"date_day": day, "hour": int(hour)}
-    parts = mt.file_partitions(strict=True, manifest=m)
     old = [
-        f for f, p in parts.items()
-        if p.get("date_day") == ident["date_day"]
-        and p.get("hour") == ident["hour"]
+        f for f, p in mt.file_partitions(strict=True, manifest=m).items()
+        if p.get("date_day") == day and p.get("hour") == int(hour)
     ]
     if max_input_bytes is not None:
         sizes = mt.file_sizes(manifest=m)
@@ -1060,45 +1041,46 @@ def compact_partition_manifest(
         return 0
     df = mt.scan(spark, m, [os.path.join(mt.data_dir, f) for f in old])
     sort_cols = [c for c in SORT_ORDERS.get(table, ["timestamp"]) if c in df.columns]
+    # a bucketed table keeps its layout: the replacement files land in
+    # the hour's bucket directories like every other producer's, so the
+    # hive layout stays uniform and bucket pruning still applies
+    bucket = m.get("props", {}).get("bucket.part")
+    parts = [bucket] if bucket in df.columns else []
     attempt = uuid.uuid4().hex[:8]
     staging = os.path.join(table_path, "_staging", f"compact-{day}-{hour}-{attempt}")
     out = df.drop("date_day", "hour").repartition(target_files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     writer = out.write.mode("overwrite")
+    if parts:
+        writer = writer.partitionBy(*parts)
     for k, v in BLOOM_WRITE_OPTIONS.items():
         writer = writer.option(k, v)
     with stats_visible_writes(spark):
         writer.parquet(staging)
     # staged files land inside the existing partition directory
-    part_dir = os.path.join(mt.data_dir, f"date_day={day}", f"hour={hour}")
-    os.makedirs(part_dir, exist_ok=True)
-    rel_files = []
-    for i, n in enumerate(sorted(os.listdir(staging))):
-        if not n.endswith(".parquet"):
-            continue
-        fname = f"compact-{attempt}-{i:05d}.parquet"
-        os.replace(os.path.join(staging, n), os.path.join(part_dir, fname))
-        rel_files.append(os.path.join(f"date_day={day}", f"hour={hour}", fname))
-    shutil.rmtree(staging, ignore_errors=True)
+    hour_dir = os.path.join(f"date_day={day}", f"hour={hour}")
+    rel_files = [
+        os.path.join(hour_dir, f)
+        for f in _stage_into_data(
+            staging, os.path.join(mt.data_dir, hour_dir), f"compact-{attempt}"
+        )
+    ]
     stats = collect_file_stats(mt.data_dir, rel_files, ("timestamp",))
     # keep replacement files probe-able: when the table declares bloom
     # columns, the compactor (a producer like any other) rebuilds their
-    # sidecars for the files it writes. Bucket layout is NOT preserved
-    # by this (day, hour)-scoped rewrite — the replacement file's
-    # partition struct simply lacks the bucket key, so bucket pruning
-    # passes it through (evidence-based pruning stays correct) and its
-    # fresh bloom carries the pruning instead. The bucket column is then
-    # an ordinary column of the replacement file, and so of its schema.
+    # sidecars for the files it writes
     inputs = set(old)
     committed = mt.commit(
         rel_files,
         remove_files=old,
         stats=stats,
         blooms=_declared_blooms(table_path, m, rel_files),
-        schema=out.schema,
+        schema=file_schema(out, parts),
         precondition=lambda cur: inputs.issubset(cur["files"]),
-        **lifecycle_metadata(mt.data_dir, rel_files, sort_cols, ident=ident),
+        # partition identity {date_day, hour[, bucket]} from the layout
+        # this rewrite just produced
+        **lifecycle_metadata(mt.data_dir, rel_files, sort_cols),
     )
     return len(rel_files) if committed else 0
 

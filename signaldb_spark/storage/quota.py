@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from .manifest import DATA_DIR, MANIFEST_DIR, ManifestTable
+from .manifest import manifest_table
 
 
 class StorageQuotaExceeded(Exception):
@@ -95,16 +95,12 @@ def _table_live_bytes(table_path: str) -> int:
     """Live bytes of one table: the CURRENT manifest snapshot's files
     (orphans from failed attempts excluded), or every parquet file for
     legacy directory layouts."""
-    if os.path.isdir(os.path.join(table_path, MANIFEST_DIR)):
-        mt = ManifestTable(table_path)
-        total = 0
-        for f in mt.files():
-            p = os.path.join(table_path, DATA_DIR, f)
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                continue  # racing compaction; the next refresh catches up
-        return total
+    mt = manifest_table(table_path)
+    if mt is not None:
+        # recorded sizes; a file committed before size recording is
+        # stat()ed, and one a racing compaction removed counts 0 until
+        # the next refresh
+        return sum(mt.file_sizes().values())
     total = 0
     for root, _dirs, files in os.walk(table_path):
         for f in files:

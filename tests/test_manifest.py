@@ -980,6 +980,39 @@ def test_compaction_rebuilds_blooms_for_replacements(spark, tmp_path):
     assert pruned > 0
 
 
+def test_partial_compaction_keeps_bucket_layout(spark, tmp_path):
+    """Compacting one hour of a bucket_by table rewrites it into the
+    hour's bucket directories: later reads see every row (a flat
+    replacement next to bucket dirs made partition discovery refuse
+    the table) and point lookups still bucket-prune the compacted hour."""
+    from signaldb_spark.storage.blooms import bucket_of
+
+    table = str(tmp_path / "t")
+    rows = _trace_rows(spark, 120).withColumn(
+        "hour", (F.col("hour") % 2).cast("int")
+    )
+    for b in range(3):
+        assert write_batch_manifest(
+            rows.filter(F.col("value") % 9 == 3 * b), table, "traces",
+            batch_id=b, bucket_by=("trace_id", 4),
+        )
+    mt = ManifestTable(table)
+    assert compact_partition_manifest(spark, table, "traces", "2024-01-01", 0) > 0
+    assert mt.read(spark).count() == 120
+    m = mt.load_manifest()
+    hour0 = [f for f in m["files"] if f.startswith("date_day=2024-01-01/hour=0/")]
+    assert hour0 and all("compact-" in f for f in hour0)
+    assert {m["parts"][f]["trace_id_bucket"] for f in hour0} == {0, 1, 2, 3}
+    probe = _tid(4)  # hour 0
+    target = bucket_of(probe, 4)
+    fs, pruned = mt.pruned_files_point("trace_id", probe)
+    kept0 = [f for f in fs if "/hour=0/" in f]
+    assert kept0 and all(f"trace_id_bucket={target}/" in f for f in kept0)
+    assert pruned >= len(hour0) - 1
+    got = mt.point_lookup(spark, "trace_id", probe).collect()
+    assert [r["value"] for r in got] == [12]
+
+
 def test_expire_snapshots_reclaims_sidecars(spark, tmp_path):
     from signaldb_spark.storage.blooms import BLOOMS_DIR
 

@@ -98,9 +98,10 @@ def test_legacy_manifest_reads_as_before_until_rewritten(spark, tmp_path):
 
 
 def test_bucketed_table_after_compaction_reads_the_same(spark, tmp_path):
-    """After compaction a bucket_by table's bucket column lives inside
-    the replacement file: the recorded schema carries it, and reads with
-    and without the record return the same schema and rows."""
+    """After compaction a bucket_by table keeps its bucket directories:
+    the bucket column stays path-derived, out of the recorded schema,
+    and reads with and without the record return the same schema and
+    rows."""
     table = str(tmp_path / "t")
     rows = spark.range(64).select(
         F.lower(F.lpad(F.conv(F.col("id").cast("string"), 10, 16), 32, "0"))
@@ -116,8 +117,11 @@ def test_bucketed_table_after_compaction_reads_the_same(spark, tmp_path):
         rows, table, "traces", batch_id=1, bucket_by=("trace_id", 4)
     )
     mt = ManifestTable(table)
-    assert compact_partition_manifest(spark, table, "traces", "2024-01-01", 0) == 1
-    assert "trace_id_bucket" in _names(mt.load_manifest())
+    n = compact_partition_manifest(spark, table, "traces", "2024-01-01", 0)
+    m = mt.load_manifest()
+    assert n == len(m["files"]) > 1
+    assert all("/trace_id_bucket=" in f for f in m["files"])
+    assert "trace_id_bucket" not in _names(m)
     catalog._RELATION_MEMO.pop(spark, None)
     recorded = mt.read(spark)
     recorded_rows = sorted(map(str, recorded.collect()))

@@ -1,12 +1,12 @@
-"""Round-13 optimization pins: signal-relation memoization.
+"""Signal-relation memoization pins.
 
-Round 12 memoized the *benchmark* tables; the façade's signal tables
-(manifest snapshot reads, hot-batch unions, bare parquet dirs) still
-re-listed and re-inferred on every route. The relation memo extends the
-same contract to them: keys embed what makes the relation immutable (an
+The façade's signal tables (manifest snapshot reads, hot-batch unions,
+bare parquet dirs) would otherwise re-list and re-infer on every route.
+The relation memo is keyed by relation identity (kind, path) and each
+entry carries the signature that makes the relation immutable (an
 explicit committed file list, a hot-sequence tuple, a whole-tree stat
-signature), values are LAZY DataFrames only — every action still scans
-parquet.
+signature); a changed signature replaces the entry. Values are LAZY
+DataFrames only — every action still scans parquet.
 """
 
 from __future__ import annotations
@@ -31,11 +31,15 @@ def _write_plain(spark, path, n=5):
 def test_relation_memo_same_key_same_object(spark, tmp_path):
     p = str(tmp_path / "t")
     _write_plain(spark, p)
-    a = relation_memo(spark, ("k", p), lambda: spark.read.parquet(p))
-    b = relation_memo(spark, ("k", p), lambda: spark.read.parquet(p))
+    a = relation_memo(spark, ("k", p), 1, lambda: spark.read.parquet(p))
+    b = relation_memo(spark, ("k", p), 1, lambda: spark.read.parquet(p))
     assert b is a
-    c = relation_memo(spark, ("k2", p), lambda: spark.read.parquet(p))
+    c = relation_memo(spark, ("k2", p), 1, lambda: spark.read.parquet(p))
     assert c is not a
+    # a new signature under the same identity replaces the entry
+    d = relation_memo(spark, ("k", p), 2, lambda: spark.read.parquet(p))
+    assert d is not a
+    assert catalog._RELATION_MEMO[spark][("k", p)] == (2, d)
 
 
 def test_optional_table_plain_dir_memo_and_invalidation(spark, tmp_path):
@@ -78,6 +82,22 @@ def test_manifest_read_memo_per_version(spark, tmp_path):
     assert c.count() == 6 and a.count() == 4
 
 
+def test_optional_table_one_memo_entry_per_manifest_table(spark, tmp_path):
+    """Each commit supersedes the table's relation: the memo replaces
+    the entry instead of keeping one per committed file list."""
+    base = str(tmp_path)
+    tp = os.path.join(base, "acme", "prod", "logs")
+    catalog._RELATION_MEMO.pop(spark, None)
+    for batch in (1, 2, 3):
+        write_batch_manifest(_batch(spark, batch, str(batch)), tp, "logs", batch)
+        df = optional_table(spark, base, "acme", "prod", "logs")
+        assert df.count() == sum(range(1, batch + 1))
+    entries = [
+        k for k in catalog._RELATION_MEMO[spark] if str(k[1]).startswith(tp)
+    ]
+    assert len(entries) == 1, entries
+
+
 def test_hot_read_memo_keyed_on_sequences(spark, tmp_path):
     tp = str(tmp_path / "tbl")
     store = HotStore(tp)
@@ -112,9 +132,9 @@ def test_hybrid_read_still_lazy_not_cached_data(spark, tmp_path):
 def test_relation_memo_weakly_keyed_per_session(spark, tmp_path):
     p = str(tmp_path / "t2")
     _write_plain(spark, p)
-    relation_memo(spark, ("weak", p), lambda: spark.read.parquet(p))
+    relation_memo(spark, ("weak", p), "sig", lambda: spark.read.parquet(p))
     assert spark in catalog._RELATION_MEMO
-    assert ("weak", p) in catalog._RELATION_MEMO[spark]
+    assert catalog._RELATION_MEMO[spark][("weak", p)][0] == "sig"
 
 
 def test_tree_sig_skips_a_file_that_vanishes_mid_walk(tmp_path, monkeypatch):
@@ -135,3 +155,8 @@ def test_tree_sig_skips_a_file_that_vanishes_mid_walk(tmp_path, monkeypatch):
     monkeypatch.setattr(catalog.os, "stat", flaky_stat)
     sig = catalog._tree_sig(str(root))
     assert [e[0] for e in sig] == [os.path.join("hour=1", "a.parquet")]
+    # a plain file signs as its own one entry; a vanished one as ()
+    kept = str(root / "hour=1" / "a.parquet")
+    assert [e[0] for e in catalog._tree_sig(kept)] == ["a.parquet"]
+    assert catalog._tree_sig(kept)[0][2] == 1
+    assert catalog._tree_sig(gone) == ()
