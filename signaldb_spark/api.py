@@ -1336,8 +1336,9 @@ class SignalDBAPI:
                                 "files_before": counts.get((d, h), 0),
                                 "files_after": after})
         if not dry_run:
-            # legacy directory-layout tables swap files on compaction;
-            # re-pin the session's frames on the new listing
+            # the session's frames pin the pre-compaction file list,
+            # which expire_snapshots later deletes: re-pin them on the
+            # new snapshot
             self.session.refresh()
         return {"status": "success", "dry_run": dry_run, "data": results}
 
@@ -1542,10 +1543,10 @@ class AdminAPI:
         pins that this endpoint must actually create them, not 201 on a
         log line (endpoints/tenant.rs:356-359). Requires tenant-admin
         privilege (tenant.rs:121-127). Idempotent: an existing table —
-        manifest-committed OR legacy parquet layout — is left untouched
-        and reported as skipped (committing an empty manifest over a
-        legacy table would shadow every file in it, since readers prefer
-        the manifest snapshot)."""
+        manifest-committed OR a bare parquet directory — is left
+        untouched and reported as skipped. A bare directory is read-only
+        input: committing an empty manifest over it would shadow every
+        file in it, since readers prefer the manifest snapshot."""
         import os
 
         from .catalog import _tree_sig, signal_table_path

@@ -6,89 +6,81 @@ streaming two-pass rewrite with sort orders, retention/, attr_stats.rs,
 attr_promotion.rs). The reference streams partitions under a memory
 pool; Spark's sortWithinPartitions + write spills automatically, so a
 compaction is a three-line read→sort→write job per closed partition.
+
+Every job here maintains manifest-committed tables only
+(storage.manifest). A bare parquet directory is read-only input: the
+listing functions see no partitions in it, and the mutating entry
+points (:func:`compact_partition`, :func:`apply_retention`) refuse it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
-import shutil
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..storage.manifest import manifest_table
-from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
+from ..storage.manifest import (
+    ManifestTable,
+    compact_partition_manifest,
+    manifest_table,
+)
+
+
+def _manifest_or_raise(table_path: str, action: str) -> ManifestTable:
+    """The table's manifest handle; a mutating job on a bare directory
+    raises instead of rewriting files no manifest tracks, or silently
+    skipping them (the reference compactor rework's #930 rule)."""
+    mt = manifest_table(table_path)
+    if mt is None:
+        raise ValueError(
+            f"{action}: {table_path} is not a manifest-committed table "
+            "(a bare parquet directory is read-only input)"
+        )
+    return mt
+
+
+def _hour_keys(mt: ManifestTable | None, strict: bool = False) -> dict[str, tuple[str, int]]:
+    """(date_day, hour) of each live file of a manifest table, from ONE
+    manifest parse; files without an absolute-hour identity are left
+    out. Empty for a bare directory or no table."""
+    if mt is None:
+        return {}
+    return {
+        f: (str(ident["date_day"]), ident["hour"])
+        for f, ident in mt.file_partitions(strict=strict).items()
+        if "date_day" in ident and isinstance(ident.get("hour"), int)
+    }
 
 
 def list_hour_partitions(table_path: str) -> list[tuple[str, int]]:
     """Enumerate (date_day, hour) partition pairs of the two-level
     layout — the absolute-hour unit retention/compaction operate on.
 
-    Manifest tables enumerate from the CURRENT SNAPSHOT's file list, not
-    the directory tree: orphaned files from crashed attempts must not
-    resurrect partitions. Identity comes from the manifest's recorded
-    partition structs (hive-path fallback for pre-recording entries,
+    Enumerates the CURRENT SNAPSHOT's file list, not the directory tree:
+    orphaned files from crashed attempts must not resurrect partitions.
+    Identity comes from the manifest's recorded partition structs
+    (hive-path fallback for pre-recording entries,
     storage.manifest.file_partitions) — never a fresh path parse."""
-    mt = manifest_table(table_path)
-    if mt is not None:
-        out = set()
-        for ident in mt.file_partitions().values():
-            if "date_day" in ident and isinstance(ident.get("hour"), int):
-                out.add((str(ident["date_day"]), ident["hour"]))
-        return sorted(out)
-    if not os.path.isdir(table_path):
-        return []
-    out_l: list[tuple[str, int]] = []
-    for day_name in os.listdir(table_path):
-        if not day_name.startswith("date_day="):
-            continue
-        day = day_name.split("=", 1)[1]
-        day_path = os.path.join(table_path, day_name)
-        for name in os.listdir(day_path):
-            if name.startswith("hour="):
-                try:
-                    out_l.append((day, int(name.split("=", 1)[1])))
-                except ValueError:
-                    continue
-    return sorted(out_l)
-
-
-def _part_path(table_path: str, day: str, hour: int) -> str:
-    return os.path.join(table_path, f"date_day={day}", f"hour={hour}")
+    return sorted(set(_hour_keys(manifest_table(table_path)).values()))
 
 
 def partition_file_counts(table_path: str) -> dict[tuple[str, int], int]:
-    """File count per (day, hour) from ONE manifest parse (or one
-    directory walk for legacy layouts) — status over a 1000-partition
-    manifest table must not re-open the manifest per partition."""
-    mt = manifest_table(table_path)
-    if mt is not None:
-        counts: dict[tuple[str, int], int] = {}
-        for ident in mt.file_partitions().values():
-            if "date_day" in ident and isinstance(ident.get("hour"), int):
-                key = (str(ident["date_day"]), ident["hour"])
-                counts[key] = counts.get(key, 0) + 1
-        return counts
-    return {
-        (d, h): len(partition_files(table_path, d, h))
-        for d, h in list_hour_partitions(table_path)
-    }
+    """File count per (day, hour) from ONE manifest parse — status over
+    a 1000-partition table must not re-open the manifest per
+    partition."""
+    return dict(Counter(_hour_keys(manifest_table(table_path)).values()))
 
 
 def partition_files(table_path: str, day: str, hour: int) -> list[str]:
-    """Parquet files of one partition: the current snapshot's list for
-    manifest tables (orphans excluded), a directory listing otherwise."""
-    mt = manifest_table(table_path)
-    if mt is not None:
-        return sorted(
-            f for f, p in mt.file_partitions().items()
-            if p.get("date_day") == day and p.get("hour") == int(hour)
-        )
-    p = _part_path(table_path, day, hour)
-    if not os.path.isdir(p):
-        return []
-    return sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+    """Parquet files of one partition: the current snapshot's list
+    (orphans excluded)."""
+    return sorted(
+        f for f, key in _hour_keys(manifest_table(table_path)).items()
+        if key == (day, int(hour))
+    )
 
 
 def is_partition_closed(hour: int, day: dt.date, lateness_seconds: int, now: dt.datetime) -> bool:
@@ -115,34 +107,11 @@ def compaction_candidates(
     burns its budget where fragmentation is worst. One manifest parse
     for the whole table."""
     mt = manifest_table(table_path)
-    if mt is None:
-        # legacy directory layout: stat() the files so candidacy stays
-        # size-aware (a partition of two already-at-target files must
-        # NOT qualify); the rewrite granularity for these tables remains
-        # whole-partition — only manifest tables can scope inputs
-        small_l: dict[tuple[str, int], int] = {}
-        for d, h in list_hour_partitions(table_path):
-            p = _part_path(table_path, d, h)
-            n = sum(
-                1 for f in os.listdir(p)
-                if f.endswith(".parquet")
-                and os.path.getsize(os.path.join(p, f)) < target_bytes
-            )
-            if n:
-                small_l[(d, h)] = n
-        return sorted(
-            (k for k, n in small_l.items() if n >= min_small_files),
-            key=lambda k: (-small_l[k], k),
-        )
-    parts = mt.file_partitions(strict=True)
-    sizes = mt.file_sizes()
-    small: dict[tuple[str, int], int] = {}
-    for f, ident in parts.items():
-        if "date_day" not in ident or not isinstance(ident.get("hour"), int):
-            continue
-        if sizes.get(f, 0) < target_bytes:
-            key = (str(ident["date_day"]), ident["hour"])
-            small[key] = small.get(key, 0) + 1
+    sizes = mt.file_sizes() if mt is not None else {}
+    small = Counter(
+        key for f, key in _hour_keys(mt, strict=True).items()
+        if sizes.get(f, 0) < target_bytes
+    )
     return sorted(
         (k for k, n in small.items() if n >= min_small_files),
         key=lambda k: (-small[k], k),
@@ -157,48 +126,15 @@ def compact_partition(
     the table's clustering sort (rewriter.rs:591-616), keep bloom
     filters. Returns the number of files after rewrite.
 
-    Manifest tables compact under snapshot isolation (ONE manifest
-    commit swaps the replacement files in; concurrent readers keep
-    their snapshot); the rename-aside path below serves legacy
-    directory-layout tables only."""
-    mt = manifest_table(table_path)
-    if mt is not None:
-        from ..storage.manifest import compact_partition_manifest
-
-        return compact_partition_manifest(
-            spark, table_path, table, day, hour, target_files
-        )
-    part_path = _part_path(table_path, day, hour)
-    df = spark.read.parquet(part_path)
-    sort_cols = [c for c in SORT_ORDERS.get(table, ["timestamp"]) if c in df.columns]
-    # stage under an underscore dir: Spark's partition discovery ignores
-    # _-prefixed paths, so concurrent readers never see the half-written
-    # rewrite (a `hour=N.compact_tmp` sibling would be discovered as a
-    # bogus partition value)
-    tmp = os.path.join(table_path, "_compact_tmp", f"{day}-{hour}")
-    writer = (
-        df.repartition(target_files)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
+    The rewrite is snapshot-isolated: ONE manifest commit swaps the
+    replacement files in, concurrent readers keep their snapshot, and
+    there is no window without the partition's data
+    (storage.manifest.compact_partition_manifest). A bare parquet
+    directory raises ``ValueError``."""
+    _manifest_or_raise(table_path, "compact_partition")
+    return compact_partition_manifest(
+        spark, table_path, table, day, hour, target_files
     )
-    for k, v in BLOOM_WRITE_OPTIONS.items():
-        writer = writer.option(k, v)
-    from ..storage.manifest import stats_visible_writes
-
-    with stats_visible_writes(spark):
-        writer.parquet(tmp)
-    # rename-aside swap: old partition moves aside (one rename), new one
-    # moves in (one rename), THEN the old data is deleted — the no-data
-    # window shrinks to a single rename and a crash between the renames
-    # is recoverable from the _old sibling. (The fully windowless path is
-    # storage.manifest.compact_partition_manifest — snapshot-isolated
-    # commits for object stores, where rename isn't atomic at all.)
-    old = os.path.join(table_path, "_compact_tmp", f"{day}-{hour}-old")
-    os.rename(part_path, old)
-    os.rename(tmp, part_path)
-    shutil.rmtree(old)
-    shutil.rmtree(os.path.join(table_path, "_compact_tmp"), ignore_errors=True)
-    return len([f for f in os.listdir(part_path) if f.endswith(".parquet")])
 
 
 def compaction_cycle(
@@ -240,12 +176,10 @@ def compaction_cycle(
     if target_bytes is not None:
         candidates = compaction_candidates(table_path, target_bytes, min_small_files)
     else:
-        # legacy count-based candidacy: any partition above the file
-        # target (small-file candidates only, src/compactor/src/planner.rs)
-        candidates = [
-            (d, h) for d, h in list_hour_partitions(table_path)
-            if len(partition_files(table_path, d, h)) > target_files
-        ]
+        # count-based candidacy: any partition above the file target
+        # (small-file candidates only, src/compactor/src/planner.rs)
+        counts = partition_file_counts(table_path)
+        candidates = sorted(k for k, n in counts.items() if n > target_files)
     for day, hour in candidates:
         if max_partitions_per_cycle is not None and len(done) >= max_partitions_per_cycle:
             break
@@ -255,15 +189,10 @@ def compaction_cycle(
         if lease is None:
             continue
         try:
-            if target_bytes is not None and manifest_table(table_path) is not None:
-                from ..storage.manifest import compact_partition_manifest
-
-                n = compact_partition_manifest(
-                    spark, table_path, table, day, hour, target_files,
-                    max_input_bytes=target_bytes,
-                )
-            else:
-                n = compact_partition(spark, table_path, table, day, hour, target_files)
+            n = compact_partition_manifest(
+                spark, table_path, table, day, hour, target_files,
+                max_input_bytes=target_bytes,
+            )
             if n:
                 done.append((day, hour))
         finally:
@@ -384,66 +313,57 @@ def apply_retention(
 ) -> list[tuple[str, int]]:
     """Drop (day, hour) partitions outside the retention window
     (retention cutoff job, src/compactor/src/retention/). Returns the
-    dropped partitions; empty day directories are removed too.
+    dropped partitions.
 
-    Manifest tables drop via ONE snapshot commit removing the files
-    (readers on the old snapshot stay whole; the bytes die later in
-    expire_snapshots) — the Iceberg retention semantics. The pass runs
-    on STRICT manifest partition identity: a live file whose partition
-    cannot be classified raises storage.manifest.UnclassifiableFile
-    instead of being silently skipped, because a skipped file would
-    never age out while staying in every query result (the reference
-    compactor rework's #930 rule)."""
-    mt = manifest_table(table_path)
-    if mt is not None:
-        from ..storage.manifest import _parse_hive_partition
+    The drop is ONE snapshot commit removing the files (readers on the
+    old snapshot stay whole; the bytes die later in expire_snapshots) —
+    the Iceberg retention semantics. The pass runs on STRICT manifest
+    partition identity: a live file whose partition cannot be
+    classified raises storage.manifest.UnclassifiableFile instead of
+    being silently skipped, because a skipped file would never age out
+    while staying in every query result (the reference compactor
+    rework's #930 rule). For the same reason a bare parquet directory
+    raises ``ValueError`` rather than being skipped; a table not created
+    yet has nothing to drop."""
+    from ..storage.manifest import _parse_hive_partition
 
-        def _key(cur_parts: dict, f: str):
-            ident = cur_parts.get(f) or _parse_hive_partition(f) or {}
-            if "date_day" in ident and isinstance(ident.get("hour"), int):
-                return (str(ident["date_day"]), ident["hour"])
-            return None
+    if not os.path.isdir(table_path):
+        return []
+    mt = _manifest_or_raise(table_path, "apply_retention")
 
-        # plan-commit loop with an input-scoped precondition (the mirror
-        # of compaction's): the drop lands only if the dropped
-        # partitions' CURRENT file membership still equals the plan. A
-        # concurrent compaction that swapped old files for replacements
-        # between our plan and commit would otherwise survive the drop —
-        # its replacement files aren't in our remove list — resurrecting
-        # the partition retention just reported dropped. On a failed
-        # precondition we re-plan from the fresh snapshot and retry.
-        for _ in range(20):
-            dropped_set: set[tuple[str, int]] = set()
-            remove = []
-            for f, ident in mt.file_partitions(strict=True).items():
-                if "date_day" not in ident or not isinstance(ident.get("hour"), int):
-                    continue  # non-time-partitioned table: retention n/a
-                key = (str(ident["date_day"]), ident["hour"])
-                if key not in keep:
-                    remove.append(f)
-                    dropped_set.add(key)
-            if not remove:
-                return sorted(dropped_set)
-            planned, keys = set(remove), set(dropped_set)
+    def _key(cur_parts: dict, f: str):
+        ident = cur_parts.get(f) or _parse_hive_partition(f) or {}
+        if "date_day" in ident and isinstance(ident.get("hour"), int):
+            return (str(ident["date_day"]), ident["hour"])
+        return None
 
-            def unchanged(cur, planned=planned, keys=keys):
-                parts = cur.get("parts") or {}
-                live = {f for f in cur["files"] if _key(parts, f) in keys}
-                return live == planned
+    # plan-commit loop with an input-scoped precondition (the mirror of
+    # compaction's): the drop lands only if the dropped partitions'
+    # CURRENT file membership still equals the plan. A concurrent
+    # compaction that swapped old files for replacements between our
+    # plan and commit would otherwise survive the drop — its
+    # replacement files aren't in our remove list — resurrecting the
+    # partition retention just reported dropped. On a failed
+    # precondition we re-plan from the fresh snapshot and retry.
+    for _ in range(20):
+        # files without an absolute-hour identity belong to a
+        # non-time-partitioned table: retention n/a
+        remove = {
+            f: key for f, key in _hour_keys(mt, strict=True).items()
+            if key not in keep
+        }
+        dropped = sorted(set(remove.values()))
+        if not remove:
+            return dropped
 
-            if mt.commit([], remove_files=remove, precondition=unchanged):
-                return sorted(dropped_set)
-        raise RuntimeError(
-            "retention lost the planning race 20 times; aborting")
-    dropped = []
-    for day, hour in list_hour_partitions(table_path):
-        if (day, hour) not in keep:
-            shutil.rmtree(_part_path(table_path, day, hour))
-            dropped.append((day, hour))
-            day_dir = os.path.join(table_path, f"date_day={day}")
-            if os.path.isdir(day_dir) and not os.listdir(day_dir):
-                os.rmdir(day_dir)
-    return dropped
+        def unchanged(cur, planned=set(remove), keys=set(dropped)):
+            parts = cur.get("parts") or {}
+            live = {f for f in cur["files"] if _key(parts, f) in keys}
+            return live == planned
+
+        if mt.commit([], remove_files=list(remove), precondition=unchanged):
+            return dropped
+    raise RuntimeError("retention lost the planning race 20 times; aborting")
 
 
 def attribute_stats(

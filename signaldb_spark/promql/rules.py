@@ -7,9 +7,8 @@ labels of the expression and gets the recorded metric name.
 Shape: one ``query_range`` evaluation (all the scale properties of the
 query engine apply), one projection back into the at-rest gauge layout
 (bucket → timestamp, series columns → label columns), one idempotent
-batch append keyed by the rule's evaluation window — replaying an
-evaluation is a no-op (the manifest's batch lineage; a bare-directory
-table rewrites the same files instead).
+manifest commit keyed by the rule's evaluation window — replaying an
+evaluation is a no-op (the manifest's batch lineage).
 """
 
 from __future__ import annotations
@@ -65,29 +64,31 @@ def record_rule(
     table_path: str,
     batch_id: str | None = None,
 ) -> None:
-    """Evaluate + append to a gauge table in the layout its readers
-    resolve: a manifest commit (the default sink's layout), unless the
-    table is an existing bare parquet directory. ``batch_id`` defaults
-    to the rule name + window, so re-evaluating the same window never
-    appends duplicates."""
+    """Evaluate + commit to a gauge table through the manifest, the
+    layout every sink writes. ``batch_id`` defaults to the rule name +
+    window, so re-evaluating the same window never appends duplicates.
+    An existing bare parquet directory raises ``ValueError``: a manifest
+    committed over it would shadow its files."""
     import os
     import re
 
     from ..storage.hot import HOT_DIR
     from ..storage.manifest import manifest_table, write_batch_manifest
-    from ..streaming.ingest import write_batch
 
+    if (
+        manifest_table(table_path) is None
+        and os.path.isdir(table_path)
+        and not os.path.isdir(os.path.join(table_path, HOT_DIR))
+    ):
+        raise ValueError(
+            f"record_rule: {table_path} is a bare parquet directory, not a "
+            "manifest-committed table"
+        )
     df = evaluate_rule(ctx, expr, record_name)
     bid = batch_id or re.sub(
         r"[^A-Za-z0-9_.-]", "-", f"rule-{record_name}-{ctx.start}-{ctx.end}"
     )
-    bare = (
-        manifest_table(table_path) is None
-        and os.path.isdir(table_path)
-        and not os.path.isdir(os.path.join(table_path, HOT_DIR))
-    )
-    write = write_batch if bare else write_batch_manifest
-    write(df, table_path, "metrics_gauge", batch_id=bid)
+    write_batch_manifest(df, table_path, "metrics_gauge", batch_id=bid)
 
 
 def alert_rule(ctx: PromCtx, expr: str, for_seconds: float = 0.0) -> DataFrame:

@@ -6,7 +6,7 @@ never for point lookups on high-cardinality random identifiers — every
 file's [min, max] over hex trace ids spans essentially the whole key
 space, so a trace-by-id query plans every file in the time window. The
 parquet-level bloom filters the writers enable
-(streaming/ingest.BLOOM_WRITE_OPTIONS) only help AFTER a file is
+(storage/manifest.BLOOM_WRITE_OPTIONS) only help AFTER a file is
 opened: the scan still issues one footer + bloom-page read per file,
 O(files) object-store round trips at 100 TB.
 

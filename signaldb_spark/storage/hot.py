@@ -42,6 +42,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .manifest import (
+    BLOOM_WRITE_OPTIONS,
+    SORT_ORDERS,
     ManifestTable,
     collect_file_stats,
     file_schema,
@@ -268,8 +270,6 @@ def flush_hot(
     (separating visibility from reclaim keeps the flush commit the only
     correctness-critical step).
     """
-    from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
-
     store = HotStore(table_path)
     seqs = store.sequences()
     wm = committed_watermark(table_path)

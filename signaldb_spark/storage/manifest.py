@@ -46,6 +46,25 @@ from pyspark.sql import types as T
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 
+# parquet bloom filters on point-lookup columns, mirroring the
+# reference's table properties (src/common/src/schema/mod.rs:69-105:
+# trace_id/span_id fpp 0.01) — config, not code (SURVEY §4.1)
+BLOOM_WRITE_OPTIONS = {
+    "parquet.bloom.filter.enabled#trace_id": "true",
+    "parquet.bloom.filter.enabled#span_id": "true",
+    "parquet.bloom.filter.expected.ndv#trace_id": "50000",
+    "parquet.compression": "zstd",
+}
+
+SORT_ORDERS = {
+    # compaction/write clustering (rewriter.rs:591-616)
+    "traces": ["timestamp", "trace_id"],
+    "logs": ["timestamp", "service_name", "severity_text"],
+    "metrics_gauge": ["timestamp", "metric_name", "service_name"],
+    "metrics_sum": ["timestamp", "metric_name", "service_name"],
+    "metrics_histogram": ["timestamp", "metric_name", "service_name"],
+}
+
 # Write-side SQL confs every manifest-feeding parquet write must carry,
 # REGARDLESS of who built the SparkSession. Spark's default timestamp
 # encoding is legacy INT96, which records NO parquet min/max statistics:
@@ -943,7 +962,6 @@ def write_batch_manifest(
     in table properties — together the point-lookup pruning substrate
     :meth:`ManifestTable.pruned_files_point` reads. The commit records
     the written schema (the partition columns stay path-derived)."""
-    from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
     from .blooms import bucket_expr, bucket_part_name, collect_file_blooms
 
     mt = ManifestTable(table_path)
@@ -1026,7 +1044,6 @@ def compact_partition_manifest(
     would resurrect rows retention already dropped; the staged
     replacement files are then unreferenced orphans for
     maintenance.cleanup_orphans' grace window."""
-    from ..streaming.ingest import BLOOM_WRITE_OPTIONS, SORT_ORDERS
 
     mt = ManifestTable(table_path)
     m = mt.load_manifest()

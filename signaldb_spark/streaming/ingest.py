@@ -19,100 +19,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import signal_table_path
 from ..sources.otlp import OTLP_LOGS_SCHEMA, flatten_otlp_logs, with_dead_letter_flag
+from ..storage.manifest import write_batch_manifest
 
-# parquet bloom filters on point-lookup columns, mirroring the
-# reference's table properties (src/common/src/schema/mod.rs:69-105:
-# trace_id/span_id fpp 0.01) — config, not code (SURVEY §4.1)
-BLOOM_WRITE_OPTIONS = {
-    "parquet.bloom.filter.enabled#trace_id": "true",
-    "parquet.bloom.filter.enabled#span_id": "true",
-    "parquet.bloom.filter.expected.ndv#trace_id": "50000",
-    "parquet.compression": "zstd",
-}
-
-SORT_ORDERS = {
-    # compaction/write clustering (rewriter.rs:591-616)
-    "traces": ["timestamp", "trace_id"],
-    "logs": ["timestamp", "service_name", "severity_text"],
-    "metrics_gauge": ["timestamp", "metric_name", "service_name"],
-    "metrics_sum": ["timestamp", "metric_name", "service_name"],
-    "metrics_histogram": ["timestamp", "metric_name", "service_name"],
-}
-
-
-def write_batch(df: DataFrame, table_path: str, table: str, batch_id: int | None = None) -> bool:
-    """(date_day, hour)-partitioned append used by foreachBatch — the
-    absolute-hour partitioning of the reference's Hour(timestamp) spec
-    (hour-of-day alone would collide across days and break
-    retention/compaction units).
-
-    Idempotency: with ``batch_id`` set, the batch writes to a staging
-    dir then moves files into the partition tree under
-    batch-deterministic names; a replayed batch rewrites the same file
-    names (os.replace), so the at-least-once replay of foreachBatch
-    cannot duplicate rows. Without batch_id this is a plain append.
-    Sorting within partitions applies the table's clustering order at
-    write time so even pre-compaction files scan well. Returns False,
-    with no Spark job run, when the batch's marker says it already
-    landed."""
-    import os
-    import shutil
-
-    sort_cols = [c for c in SORT_ORDERS.get(table, []) if c in df.columns]
-    # guard the empty list: sortWithinPartitions() with zero columns
-    # raises CANNOT_BE_EMPTY, so a frame carrying none of the table's
-    # sort columns would crash the sink instead of writing unsorted
-    from ..storage.manifest import stats_visible_writes
-
-    sorted_df = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-    if batch_id is None:
-        writer = sorted_df.write.mode("append").partitionBy("date_day", "hour")
-        for k, v in BLOOM_WRITE_OPTIONS.items():
-            writer = writer.option(k, v)
-        with stats_visible_writes(df.sparkSession):
-            writer.parquet(table_path)
-        return True
-    marker = os.path.join(table_path, f"_batch_{batch_id}_done")
-    if os.path.exists(marker):
-        return False
-    staging = os.path.join(table_path, "_staging", f"batch-{batch_id}")
-    writer = sorted_df.write.mode("overwrite").partitionBy("date_day", "hour")
-    for k, v in BLOOM_WRITE_OPTIONS.items():
-        writer = writer.option(k, v)
-    with stats_visible_writes(df.sparkSession):
-        writer.parquet(staging)
-    # a crashed earlier attempt may have moved MORE files than this
-    # replay produces (parallelism change, speculative tasks): sweep the
-    # batch's files table-wide first so the replay fully supersedes it.
-    # NEVER descend into the manifest store's data/ (or the hot store):
-    # manifest-committed files share the batch-{id}- naming, and a
-    # checkpoint replayed with use_manifest flipped off would otherwise
-    # unlink files the manifest still references. Legacy hive layouts
-    # only contain date_day=*/hour=* dirs, so the exclusion is inert.
-    prefix = f"batch-{batch_id}-"
-    for root, dirs, files in os.walk(table_path):
-        dirs[:] = [
-            d for d in dirs
-            if not d.startswith("_") and d not in ("data", "hot")
-        ]
-        for f in files:
-            if f.startswith(prefix) and f.endswith(".parquet"):
-                os.unlink(os.path.join(root, f))
-    # move files under deterministic names: replay overwrites, never dupes
-    for root, _dirs, files in os.walk(staging):
-        rel = os.path.relpath(root, staging)
-        for i, f in enumerate(sorted(files)):
-            if not f.endswith(".parquet"):
-                continue
-            dest_dir = os.path.join(table_path, rel)
-            os.makedirs(dest_dir, exist_ok=True)
-            os.replace(
-                os.path.join(root, f),
-                os.path.join(dest_dir, f"batch-{batch_id}-{i:05d}.parquet"),
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    open(marker, "w").close()
-    return True
+# the binaryFile source's columns: one wire body per file
+_WIRE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
 
 def dead_letter_path(base: str, tenant: str, dataset: str, signal: str) -> str:
@@ -174,21 +84,18 @@ def _observed_or_probed(obs: Observation, fired: bool, rows: DataFrame) -> int:
 
 
 def _write_table(df: DataFrame, base: str, tenant: str, dataset: str,
-                 table: str, batch_id: int, use_manifest: bool) -> bool:
-    """Commit one table of a batch; rows violating its required columns
-    go to the table's dead-letter sink instead. Returns whether the
-    table write ran (False: an already-committed replay)."""
+                 table: str, batch_id: int) -> bool:
+    """Commit one table of a batch through the manifest; rows violating
+    its required columns go to the table's dead-letter sink instead.
+    Returns whether the table write ran (False: an already-committed
+    replay)."""
     table_path = signal_table_path(base, tenant, dataset, table)
-    if use_manifest:
-        from ..storage import write_batch_manifest as write
-    else:
-        write = write_batch
     violated = required_violation(df, table)
     if violated is None:
-        return write(df, table_path, table, batch_id=batch_id)
+        return write_batch_manifest(df, table_path, table, batch_id=batch_id)
     obs = Observation()
     ok = df.observe(obs, F.count_if(violated).alias("n")).filter(~violated)
-    wrote = write(ok, table_path, table, batch_id=batch_id)
+    wrote = write_batch_manifest(ok, table_path, table, batch_id=batch_id)
     bad = df.filter(violated)
     if _observed_or_probed(obs, wrote, bad):
         write_dead_letters(
@@ -202,7 +109,6 @@ def _write_table(df: DataFrame, base: str, tenant: str, dataset: str,
 def _commit_batch(
     decoded: DataFrame, dead: Column, payload: Column, route,
     base: str, tenant: str, dataset: str, signal: str, batch_id: int,
-    use_manifest: bool = True,
 ) -> None:
     """The commit every ``foreachBatch`` sink shares. ``decoded`` is the
     micro-batch with its undecodable rows marked by ``dead``;
@@ -232,7 +138,7 @@ def _commit_batch(
 
     try:
         wrote = [
-            _write_table(df, base, tenant, dataset, table, batch_id, use_manifest)
+            _write_table(df, base, tenant, dataset, table, batch_id)
             for table, df in route(good, hold).items()
         ]
         undecodable = decoded.filter(dead)
@@ -291,6 +197,107 @@ def _charge_ingest(rate_limiter, tenant: str, batch_df: DataFrame, size_col) -> 
                                   clamp_to_capacity=True)
 
 
+def _wire_decoded(batch_df: DataFrame, parse) -> DataFrame:
+    """Decode each wire body of a binaryFile batch with ``parse``
+    (bytes → JSON string) in a Python worker. A body ``parse`` rejects
+    keeps its hex in ``_dead_payload`` (``value`` null) instead of
+    failing the batch."""
+
+    def decode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            vals, dead = [], []
+            for p in pdf["content"]:
+                try:
+                    vals.append(parse(bytes(p)))
+                except Exception:
+                    dead.append(bytes(p).hex())
+            yield pd.DataFrame(
+                {
+                    "value": vals + [None] * len(dead),
+                    "_dead_payload": [None] * len(vals) + dead,
+                }
+            )
+
+    return batch_df.select("content").mapInPandas(
+        decode, "value string, _dead_payload string"
+    )
+
+
+def _ingest(
+    spark: SparkSession,
+    source_dir: str,
+    base: str,
+    tenant: str,
+    dataset: str,
+    signal: str,
+    route,
+    checkpoint_dir: str | None,
+    available_now: bool,
+    rate_limiter=None,
+    usage_tracker=None,
+    schema=None,
+    parse=None,
+    stream: str | None = None,
+):
+    """The driver behind every ingest entry point: a file stream of at
+    most 16 files per trigger whose ``foreachBatch`` sink charges the
+    tenant's budgets, splits undecodable payloads off and commits
+    ``route(good, hold)`` through :func:`_commit_batch`, dead-lettering
+    under ``signal``.
+
+    A text source holds OTLP/JSON lines checked against ``schema``; with
+    ``parse`` the source is binary, one wire body per file, decoded by
+    :func:`_wire_decoded`. The checkpoint defaults to
+    ``base/_checkpoints/tenant/dataset/<stream or signal>``.
+    ``available_now=True`` drains everything then stops (read-your-writes
+    for tests / batch backfill); ``False`` runs continuous micro-batches
+    (the 5s WAL drain analog)."""
+    checkpoint = checkpoint_dir or os.path.join(
+        base, "_checkpoints", tenant, dataset, stream or signal
+    )
+    wire = parse is not None
+    reader = spark.readStream.format("binaryFile" if wire else "text")
+    if wire:
+        from ..shipping import ensure_package_on_workers
+
+        ensure_package_on_workers(spark)
+        reader = reader.schema(_WIRE_SCHEMA)
+    raw = reader.option("maxFilesPerTrigger", "16").load(source_dir)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        # rate limit first (ratelimit.rs order: 429 rate before 429
+        # quota); wire bodies charge their on-the-wire length (the
+        # binaryFile `length` column) before the decode spends any
+        # executor work
+        size = F.col("length") if wire else F.octet_length("value")
+        _charge_ingest(rate_limiter, tenant, batch_df, size)
+        if usage_tracker is not None:
+            usage_tracker.check_ingest(tenant)  # raises StorageQuotaExceeded
+        # split poison payloads off the batch BEFORE flattening: the raw
+        # payload is preserved in the dead-letter sink and the batch
+        # itself is marked processed by the checkpoint — one bad payload
+        # cannot wedge the drain loop (processor.rs:125-127 semantics).
+        # Both source kinds share the commit and its required-column
+        # dead-lettering: bad rows must not differ by ingest path.
+        if wire:
+            decoded = _wire_decoded(batch_df, parse)
+            dead, payload = F.col("_dead_payload").isNotNull(), F.col("_dead_payload")
+        else:
+            decoded = with_dead_letter_flag(batch_df, schema)
+            dead, payload = F.col("_dead"), F.col("value")
+        _commit_batch(decoded, dead, payload, route,
+                      base, tenant, dataset, signal, batch_id)
+
+    writer = raw.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint)
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    return writer.trigger(processingTime="5 seconds").start()
+
+
 def ingest_otlp_logs_stream(
     spark: SparkSession,
     source_dir: str,
@@ -299,7 +306,6 @@ def ingest_otlp_logs_stream(
     dataset: str = "prod",
     checkpoint_dir: str | None = None,
     available_now: bool = True,
-    use_manifest: bool = True,
     usage_tracker=None,
     rate_limiter=None,
 ):
@@ -318,42 +324,17 @@ def ingest_otlp_logs_stream(
     for tests / batch backfill); ``False`` runs continuous micro-batches
     (the 5s WAL drain analog is the default trigger).
 
-    ``use_manifest=True`` (the DEFAULT — the reference gets the same
-    semantics from Iceberg everywhere, storage-layout.md:45-96) commits
-    each micro-batch through the snapshot-manifest protocol
-    (storage.write_batch_manifest): the object-store-safe path — readers
-    see atomic snapshots, replays that produce different file counts stay
-    idempotent, crashed attempts are orphans for expire_snapshots.
-    ``use_manifest=False`` opts out to deterministic-rename marker files,
-    which assume POSIX rename atomicity (local-FS only)."""
-    checkpoint = checkpoint_dir or os.path.join(base, "_checkpoints", tenant, dataset, "logs")
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "16")
-        .load(source_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # rate limit first (ratelimit.rs order: 429 rate before 429 quota)
-        _charge_ingest(rate_limiter, tenant, batch_df, F.octet_length("value"))
-        if usage_tracker is not None:
-            usage_tracker.check_ingest(tenant)  # raises StorageQuotaExceeded
-        # split poison payloads off the batch BEFORE flattening: the raw
-        # line is preserved in the dead-letter sink and the batch itself
-        # is marked processed by the checkpoint — one bad payload cannot
-        # wedge the drain loop (processor.rs:125-127 semantics).
-        # (no withWatermark here: foreachBatch hands us a batch df where
-        # it is a no-op — event-time lateness gating lives in the
-        # maintenance partition-close check, is_partition_closed)
-        _commit_batch(
-            with_dead_letter_flag(batch_df, OTLP_LOGS_SCHEMA),
-            F.col("_dead"), F.col("value"),
-            lambda good, _hold: {"logs": flatten_otlp_logs(good, json_col="value")},
-            base, tenant, dataset, "logs", batch_id, use_manifest,
-        )
-
-    return _drain_stream(
-        raw.writeStream.foreachBatch(sink), checkpoint, available_now
+    Every micro-batch commits through the snapshot-manifest protocol
+    (storage.write_batch_manifest), the semantics the reference gets
+    from Iceberg (storage-layout.md:45-96): readers see atomic
+    snapshots, a replay that produces a different file count stays
+    idempotent, and a crashed attempt's files are orphans for
+    maintenance.cleanup_orphans."""
+    return _ingest(
+        spark, source_dir, base, tenant, dataset, "logs",
+        lambda good, _hold: {"logs": flatten_otlp_logs(good, json_col="value")},
+        checkpoint_dir, available_now, rate_limiter=rate_limiter,
+        usage_tracker=usage_tracker, schema=OTLP_LOGS_SCHEMA,
     )
 
 
@@ -431,15 +412,6 @@ def stream_interval_join(
     return joined
 
 
-def _drain_stream(writer, checkpoint: str, available_now: bool):
-    writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="5 seconds").start()
-
-
 def ingest_otlp_traces_stream(
     spark: SparkSession,
     source_dir: str,
@@ -448,7 +420,6 @@ def ingest_otlp_traces_stream(
     dataset: str = "prod",
     checkpoint_dir: str | None = None,
     available_now: bool = True,
-    use_manifest: bool = True,
     rate_limiter=None,
 ):
     """File-source OTLP/JSON trace ingest → hour-partitioned traces
@@ -457,25 +428,12 @@ def ingest_otlp_traces_stream(
     the logs stream."""
     from ..sources.otlp import OTLP_TRACES_SCHEMA, flatten_otlp_traces
 
-    checkpoint = checkpoint_dir or os.path.join(
-        base, "_checkpoints", tenant, dataset, "traces"
+    return _ingest(
+        spark, source_dir, base, tenant, dataset, "traces",
+        lambda good, _hold: {"traces": flatten_otlp_traces(good, json_col="value")},
+        checkpoint_dir, available_now, rate_limiter=rate_limiter,
+        schema=OTLP_TRACES_SCHEMA,
     )
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "16")
-        .load(source_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _charge_ingest(rate_limiter, tenant, batch_df, F.octet_length("value"))
-        _commit_batch(
-            with_dead_letter_flag(batch_df, OTLP_TRACES_SCHEMA),
-            F.col("_dead"), F.col("value"),
-            lambda good, _hold: {"traces": flatten_otlp_traces(good, json_col="value")},
-            base, tenant, dataset, "traces", batch_id, use_manifest,
-        )
-
-    return _drain_stream(raw.writeStream.foreachBatch(sink), checkpoint, available_now)
 
 
 def ingest_otlp_metrics_stream(
@@ -486,7 +444,6 @@ def ingest_otlp_metrics_stream(
     dataset: str = "prod",
     checkpoint_dir: str | None = None,
     available_now: bool = True,
-    use_manifest: bool = True,
     rate_limiter=None,
 ):
     """File-source OTLP/JSON metrics ingest: one stream, per-type
@@ -498,30 +455,17 @@ def ingest_otlp_metrics_stream(
     all of them."""
     from ..sources.otlp import OTLP_METRICS_SCHEMA, metric_base, route_metric_base
 
-    checkpoint = checkpoint_dir or os.path.join(
-        base, "_checkpoints", tenant, dataset, "metrics"
+    # parse ONCE per batch: the five-kind routing fans out to five
+    # table writes, and without the held base each write would re-run
+    # from_json over the whole batch — at ingest scale a 5x decode tax
+    # (sources/otlp.py metric_base). Null required columns (a poison
+    # datapoint) dead-letter per table.
+    return _ingest(
+        spark, source_dir, base, tenant, dataset, "metrics",
+        lambda good, hold: route_metric_base(hold(metric_base(good, "value"))),
+        checkpoint_dir, available_now, rate_limiter=rate_limiter,
+        schema=OTLP_METRICS_SCHEMA,
     )
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "16")
-        .load(source_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _charge_ingest(rate_limiter, tenant, batch_df, F.octet_length("value"))
-        # parse ONCE per batch: the five-kind routing fans out to five
-        # table writes, and without the held base each write would
-        # re-run from_json over the whole batch — at ingest scale a 5x
-        # decode tax (sources/otlp.py metric_base). Null required
-        # columns (a poison datapoint) dead-letter per table.
-        _commit_batch(
-            with_dead_letter_flag(batch_df, OTLP_METRICS_SCHEMA),
-            F.col("_dead"), F.col("value"),
-            lambda good, hold: route_metric_base(hold(metric_base(good, "value"))),
-            base, tenant, dataset, "metrics", batch_id, use_manifest,
-        )
-
-    return _drain_stream(raw.writeStream.foreachBatch(sink), checkpoint, available_now)
 
 
 def ingest_otlp_traces_pb_stream(
@@ -568,36 +512,6 @@ def ingest_otlp_pb_stream(
         "logs": otlp_pb.parse_logs_request,
         "metrics": otlp_pb.parse_metrics_request,
     }[signal]
-    checkpoint = checkpoint_dir or os.path.join(
-        base, "_checkpoints", tenant, dataset, f"{signal}_pb"
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("maxFilesPerTrigger", "16")
-        .load(source_dir)
-    )
-
-    from ..shipping import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            vals, dead = [], []
-            for p in pdf["content"]:
-                try:
-                    vals.append(json.dumps(parse_fn(bytes(p))))
-                except Exception:
-                    dead.append(bytes(p).hex())
-            yield pd.DataFrame(
-                {
-                    "value": vals + [None] * len(dead),
-                    "_dead_payload": [None] * len(vals) + dead,
-                }
-            )
 
     def route(good: DataFrame, hold) -> dict[str, DataFrame]:
         if signal == "traces":
@@ -605,25 +519,13 @@ def ingest_otlp_pb_stream(
         if signal == "logs":
             return {"logs": otlp.flatten_otlp_logs(good, json_col="value")}
         # parse once per batch — the five-table fan-out must not re-run
-        # from_json (and here the Python wire decode above it) five times
+        # from_json (and here the Python wire decode under it) five times
         return otlp.route_metric_base(hold(otlp.metric_base(good, "value")))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # wire bodies charge their on-the-wire length (the binaryFile
-        # `length` column), BEFORE the decode spends any executor work
-        _charge_ingest(rate_limiter, tenant, batch_df, F.col("length"))
-        decoded = batch_df.select("content").mapInPandas(
-            decode, "value string, _dead_payload string"
-        )
-        # the SAME commit (and the same required-column dead-lettering)
-        # as the JSON paths — bad rows must not differ by ingest path
-        _commit_batch(
-            decoded, F.col("_dead_payload").isNotNull(), F.col("_dead_payload"),
-            route, base, tenant, dataset, signal, batch_id,
-        )
-
-    return _drain_stream(
-        raw.writeStream.foreachBatch(sink), checkpoint, available_now
+    return _ingest(
+        spark, source_dir, base, tenant, dataset, signal, route,
+        checkpoint_dir, available_now, rate_limiter=rate_limiter,
+        parse=lambda body: json.dumps(parse_fn(body)), stream=f"{signal}_pb",
     )
 
 
@@ -647,52 +549,13 @@ def ingest_remote_write_stream(
     dead-letter instead of poisoning the stream."""
     from ..sources import remote_write as rw
 
-    checkpoint = checkpoint_dir or os.path.join(
-        base, "_checkpoints", tenant, dataset, "remote_write"
-    )
-    raw = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("maxFilesPerTrigger", "16")
-        .load(source_dir)
-    )
-
-    from ..shipping import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            vals, dead = [], []
-            for p in pdf["content"]:
-                try:
-                    vals.append(rw.decode_snappy_protobuf(bytes(p)))
-                except Exception:
-                    dead.append(bytes(p).hex())
-            yield pd.DataFrame(
-                {
-                    "value": vals + [None] * len(dead),
-                    "_dead_payload": [None] * len(vals) + dead,
-                }
-            )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _charge_ingest(rate_limiter, tenant, batch_df, F.col("length"))
-        decoded = batch_df.select("content").mapInPandas(
-            decode, "value string, _dead_payload string"
-        )
-        # the held decode feeds every routed table: the Python wire
-        # decode runs once per batch, not once per table write
-        _commit_batch(
-            decoded, F.col("_dead_payload").isNotNull(), F.col("_dead_payload"),
-            lambda good, hold: rw.flatten_remote_write(hold(good)),
-            base, tenant, dataset, "remote_write", batch_id,
-        )
-
-    return _drain_stream(
-        raw.writeStream.foreachBatch(sink), checkpoint, available_now
+    # the held decode feeds every routed table: the Python wire decode
+    # runs once per batch, not once per table write
+    return _ingest(
+        spark, source_dir, base, tenant, dataset, "remote_write",
+        lambda good, hold: rw.flatten_remote_write(hold(good)),
+        checkpoint_dir, available_now, rate_limiter=rate_limiter,
+        parse=rw.decode_snappy_protobuf,
     )
 
 

@@ -39,9 +39,10 @@ class TenantSession:
 
     def refresh(self) -> None:
         """Re-discover the tenant's tables — required after maintenance
-        that swaps files under a legacy directory-layout table (manifest
-        tables keep snapshots readable; the rename-aside compaction path
-        does not)."""
+        that rewrites a table: the session's frames pin the file list of
+        the snapshot they resolved, and once a compaction or retention
+        commit replaces those files, ``expire_snapshots`` later deletes
+        them."""
         self._tables = {}
         for t in SIGNAL_TABLES:
             df = optional_table(self.spark, self.base, self.tenant, self.dataset, t)

@@ -4,8 +4,8 @@ Seeded synthetic traces/logs/metrics spread across ≥3 hour partitions,
 with ≥10% nulls on nullable columns and attribute maps carrying both
 shared and per-row keys — mirrors the reference's test generators
 (tests-integration/src/generators/data_generator.rs) without copying
-them. Written as hour-partitioned parquet via the engine's own sink
-layout so partition pruning is exercised in tests.
+them. Committed hour-partitioned through the engine's own manifest sink
+so partition pruning is exercised in tests.
 """
 
 from __future__ import annotations
@@ -251,8 +251,11 @@ def gen_profiles(n: int = 100, seed: int = 42) -> list[tuple]:
 
 def write_signal_tables(spark: SparkSession, base: str, tenant: str = "acme", dataset: str = "prod"):
     """Materialize the fixture tables hour-partitioned under
-    {base}/{tenant}/{dataset}/{table}/ — the engine's storage layout."""
+    {base}/{tenant}/{dataset}/{table}/ — the engine's storage layout:
+    each table is one manifest commit (batch ``fixture``), as the ingest
+    sinks write it."""
     from .catalog import signal_table_path
+    from .storage.manifest import write_batch_manifest
 
     logs = spark.createDataFrame(gen_logs(), LOGS)
     traces = spark.createDataFrame(gen_traces(), TRACES)
@@ -269,10 +272,8 @@ def write_signal_tables(spark: SparkSession, base: str, tenant: str = "acme", da
         ("metrics_histogram", hist),
         ("profiles", profiles),
     ]:
-        (
-            df.repartition(4)
-            .write.mode("overwrite")
-            .partitionBy("date_day", "hour")
-            .parquet(signal_table_path(base, tenant, dataset, name))
+        write_batch_manifest(
+            df.repartition(4), signal_table_path(base, tenant, dataset, name),
+            name, batch_id="fixture",
         )
     return {"logs": logs.count(), "traces": traces.count(), "gauge": gauge.count()}

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -336,21 +337,48 @@ def test_retention_replans_when_compaction_swapped_files(
     assert mt.read(spark).count() == 10  # hour-3 rows truly gone
 
 
-def test_legacy_dir_candidacy_is_size_aware(spark, tmp_path):
-    """Directory-layout (non-manifest) tables: candidacy still counts
-    only files below target size — a partition of two at-target files
-    must not qualify for a whole-partition rewrite."""
-    path = str(tmp_path / "legacy")
-    big = _rows(spark, 4000, hour=1).repartition(2)
-    big.write.partitionBy("date_day", "hour").mode("append").parquet(path)
-    small = _rows(spark, 5, hour=2).repartition(3)
-    small.write.partitionBy("date_day", "hour").mode("append").parquet(path)
-    sizes = [
-        os.path.getsize(os.path.join(path, "date_day=2024-01-01", "hour=1", f))
-        for f in os.listdir(os.path.join(path, "date_day=2024-01-01", "hour=1"))
-        if f.endswith(".parquet")
-    ]
-    threshold = min(sizes)  # both hour-1 files are at/above target
-    cands = compaction_candidates(path, target_bytes=threshold,
-                                  min_small_files=2)
-    assert cands == [("2024-01-01", 2)]
+# ---------------------------------- bare directories are read-only input
+
+
+def test_bare_directory_is_refused_and_left_in_place(spark, tmp_path):
+    """A hive directory no manifest tracks is read-only input: the
+    listing functions see no partitions in it, and compaction,
+    retention and a recording rule raise, naming the path, without
+    touching a file. (Rewriting it would need a non-atomic swap; a
+    manifest committed over it would shadow its files.)"""
+    from signaldb_spark.maintenance.jobs import compact_partition
+    from signaldb_spark.promql.lowering import PromCtx
+    from signaldb_spark.promql.rules import record_rule
+    from signaldb_spark.schemas.signal_schemas import METRICS_GAUGE
+    from signaldb_spark.storage.manifest import manifest_table
+    from signaldb_spark.testing import gen_metrics
+
+    gauge = spark.createDataFrame(gen_metrics()[0], METRICS_GAUGE)
+    path = str(tmp_path / "metrics_gauge")
+    gauge.repartition(3).write.partitionBy("date_day", "hour").parquet(path)
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(root, f), path),
+             os.path.getsize(os.path.join(root, f)))
+            for root, _dirs, files in os.walk(path) for f in files
+        )
+
+    before = tree()
+    assert any(rel.endswith(".parquet") for rel, _size in before)
+    assert list_hour_partitions(path) == []
+    assert partition_file_counts(path) == {}
+    assert partition_files(path, "2024-01-01", 0) == []
+    assert compaction_candidates(path, target_bytes=1 << 30) == []
+
+    with pytest.raises(ValueError, match=re.escape(path)):
+        compact_partition(spark, path, "metrics_gauge", "2024-01-01", 0)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        apply_retention(path, keep=set())
+    ctx = PromCtx(spark, gauge, None, None,
+                  "2024-01-01 00:00:00", "2024-01-01 01:00:00", 600)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        record_rule(ctx, "sum by (service_name) (process_cpu_usage)",
+                    "job:cpu:sum", path)
+    assert tree() == before
+    assert manifest_table(path) is None

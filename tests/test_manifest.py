@@ -172,7 +172,7 @@ def test_streaming_ingest_through_manifest(spark, tmp_path):
     }]})
     (src / "a.json").write_text(payload)
     ingest_otlp_logs_stream(
-        spark, str(src), base, checkpoint_dir=str(tmp_path / "ck1"), use_manifest=True
+        spark, str(src), base, checkpoint_dir=str(tmp_path / "ck1")
     )
     mt = ManifestTable(signal_table_path(base, "acme", "prod", "logs"))
     first = mt.read(spark)
@@ -181,7 +181,7 @@ def test_streaming_ingest_through_manifest(spark, tmp_path):
     # replay with a NEW checkpoint: the stream reprocesses batch 0, but
     # the manifest's batch lineage refuses the duplicate commit
     ingest_otlp_logs_stream(
-        spark, str(src), base, checkpoint_dir=str(tmp_path / "ck2"), use_manifest=True
+        spark, str(src), base, checkpoint_dir=str(tmp_path / "ck2")
     )
     assert ManifestTable(mt.table_path).read(spark).count() == n
 
@@ -792,26 +792,6 @@ def test_read_hot_merges_schemas_across_batches(spark, tmp_path):
     hot = store.read_hot(spark)
     assert "new_attr" in hot.columns
     assert hot.filter(F.col("new_attr").isNotNull()).count() == 3
-
-
-def test_legacy_replay_sweep_never_touches_manifest_data(spark, tmp_path):
-    """A checkpoint replayed with use_manifest flipped off must not
-    unlink manifest-committed files that share the batch-{id}- naming."""
-    from signaldb_spark.storage.manifest import ManifestTable, write_batch_manifest
-    from signaldb_spark.streaming.ingest import write_batch
-
-    table = str(tmp_path / "t")
-    write_batch_manifest(_rows(spark, 10).repartition(1), table, "logs", batch_id=7)
-    mt = ManifestTable(table)
-    committed = mt.files()
-    assert committed and all("batch-7-" in f for f in committed)
-    # legacy-path replay of the SAME batch id over the same table root
-    write_batch(_rows(spark, 6), table, "logs", batch_id=7)
-    import os
-
-    for f in committed:
-        assert os.path.exists(f), "manifest-committed file was swept"
-    assert mt.read(spark).count() == 10
 
 
 def test_tail_rejects_metric_queries_and_runs_output_stages(spark, tmp_path):

@@ -582,13 +582,11 @@ def test_exphist_quantile_negative_buckets(spark):
     assert get(0.875) == pytest.approx(1.5)
 
 
-@pytest.mark.parametrize("layout", ["bare", "manifest"])
-def test_recording_rule_roundtrip(spark, tmp_path_factory, layout):
+def test_recording_rule_roundtrip(spark, tmp_path_factory):
     """evaluate → persist → re-query: the recorded series is readable
     through the normal PromQL path under its new name, and re-recording
-    the same window does not duplicate samples — on a bare parquet
-    directory and on a manifest-committed table (the default sink's
-    layout) holding the same rows."""
+    the same window does not duplicate samples, on a manifest-committed
+    table (the layout every sink writes)."""
     from pyspark.sql import functions as F
 
     from signaldb_spark.catalog import optional_table, signal_table_path
@@ -596,27 +594,24 @@ def test_recording_rule_roundtrip(spark, tmp_path_factory, layout):
     from signaldb_spark.promql.rules import record_rule
     from signaldb_spark.schemas.signal_schemas import METRICS_GAUGE, METRICS_SUM
     from signaldb_spark.storage.manifest import write_batch_manifest
-    from signaldb_spark.testing import gen_metrics, write_signal_tables
+    from signaldb_spark.testing import gen_metrics
 
     base = str(tmp_path_factory.mktemp("rule_signals"))
-    if layout == "bare":
-        write_signal_tables(spark, base)
-    else:
-        g, s, _h = gen_metrics()
-        for name, rows, schema in (
-            ("metrics_gauge", g, METRICS_GAUGE), ("metrics_sum", s, METRICS_SUM)
-        ):
-            write_batch_manifest(
-                spark.createDataFrame(rows, schema),
-                signal_table_path(base, "acme", "prod", name), name, batch_id=0,
-            )
+    g, s, _h = gen_metrics()
+    for name, rows, schema in (
+        ("metrics_gauge", g, METRICS_GAUGE), ("metrics_sum", s, METRICS_SUM)
+    ):
+        write_batch_manifest(
+            spark.createDataFrame(rows, schema),
+            signal_table_path(base, "acme", "prod", name), name, batch_id=0,
+        )
     t = lambda n: optional_table(spark, base, "acme", "prod", n)
     ctx = PromCtx(spark, t("metrics_gauge"), t("metrics_sum"), None, START, END, STEP)
     path = signal_table_path(base, "acme", "prod", "metrics_gauge")
     record_rule(ctx, "sum by (service_name) (process_cpu_usage)", "job:cpu:sum", path)
     n1 = t("metrics_gauge").filter(F.col("metric_name") == "job:cpu:sum").count()
     assert n1 > 0
-    # replay: same batch id -> same files, no duplicates
+    # replay: the batch id is already committed, no duplicates
     record_rule(ctx, "sum by (service_name) (process_cpu_usage)", "job:cpu:sum", path)
     assert (
         t("metrics_gauge").filter(F.col("metric_name") == "job:cpu:sum").count() == n1

@@ -528,8 +528,9 @@ def test_compaction_cycle_multi_instance(spark, tmp_path):
     """Two concurrent compactor passes split the closed partitions with
     no overlap and no loss — the lease-guarded run loop
     (src/compactor/src/lib.rs planner→lease→rewriter)."""
-    from signaldb_spark.maintenance.jobs import compaction_cycle
+    from signaldb_spark.maintenance.jobs import compaction_cycle, partition_file_counts
     from signaldb_spark.maintenance.lease import LeaseManager, partition_unit
+    from signaldb_spark.storage import write_batch_manifest
 
     base = str(tmp_path)
     path = signal_table_path(base, "acme", "prod", "logs")
@@ -541,14 +542,9 @@ def test_compaction_cycle_multi_instance(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "timestamp timestamp, body string, date_day string, hour int"
     )
-    df.repartition(3).write.partitionBy("date_day", "hour").parquet(path)
+    write_batch_manifest(df.repartition(3), path, "logs", batch_id=0)
     now = dt.datetime(2024, 1, 2)  # everything closed
-    candidates = {
-        (d, h)
-        for d, h in list_hour_partitions(path)
-        if len([f for f in os.listdir(os.path.join(path, f"date_day={d}", f"hour={h}"))
-                if f.endswith(".parquet")]) > 1
-    }
+    candidates = {k for k, n in partition_file_counts(path).items() if n > 1}
     assert len(candidates) >= 2
     # instance A holds one candidate's lease mid-work; B's cycle must
     # skip exactly that partition and compact the rest
@@ -568,7 +564,7 @@ def test_compaction_cycle_multi_instance(spark, tmp_path):
     assert a_done == [(held_day, held_hour)]  # only the remaining unit
     # a third pass finds no candidates at all — the cycle is idempotent
     assert compaction_cycle(spark, base, "acme", "prod", "logs", now=now) == []
-    assert spark.read.parquet(path).count() == len(rows)
+    assert optional_table(spark, base, "acme", "prod", "logs").count() == len(rows)
 
 
 def test_dead_letter_sink_e2e(spark, tmp_path_factory):

@@ -15,7 +15,6 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import json
-import os
 import threading
 
 import pytest
@@ -26,7 +25,9 @@ from signaldb_spark.storage.manifest import ManifestTable
 from signaldb_spark.streaming.ingest import (
     ingest_otlp_logs_stream,
     ingest_otlp_metrics_stream,
+    ingest_otlp_pb_stream,
     ingest_otlp_traces_stream,
+    ingest_remote_write_stream,
     read_dead_letters,
 )
 from signaldb_spark.tenancy import TenantSession
@@ -179,6 +180,47 @@ def test_one_batch_drain_runs_only_the_table_writes(landed):
     assert jobs == {"logs": 1, "traces": 1, "metrics": len(METRIC_TABLES)}
 
 
+def test_one_wire_batch_drain_runs_only_the_table_writes(spark, tmp_path):
+    """The binary-wire sinks hold their Python decode once per batch and
+    write each routed table once: a protobuf metrics batch costs one job
+    per metric table, a remote_write batch of gauge, counter and native
+    histogram samples one job per table it lands in."""
+    from signaldb_spark.sources.otlp_pb import encode_metrics_request
+    from signaldb_spark.sources.remote_write import (
+        encode_write_request,
+        snappy_compress_literal,
+    )
+
+    rw = {"timeseries": [
+        {"labels": [{"name": "__name__", "value": "http_requests_total"},
+                    {"name": "job", "value": "api"}],
+         "samples": [{"value": 7.0, "timestamp": 1704067200000}]},
+        {"labels": [{"name": "__name__", "value": "mem_bytes"},
+                    {"name": "job", "value": "api"}],
+         "samples": [{"value": 128.0, "timestamp": 1704067200000}]},
+        {"labels": [{"name": "__name__", "value": "req_size_bytes"},
+                    {"name": "job", "value": "web"}],
+         "histograms": [{
+             "count_int": 10, "sum": 30.0, "schema": 0, "zero_count_int": 0,
+             "positive_spans": [{"offset": 1, "length": 3}],
+             "positive_deltas": [2, 4, -4],
+             "timestamp": 1704067200000}]},
+    ]}
+    jobs = {}
+    for name, body, fn, extra in (
+        ("metrics_pb", encode_metrics_request(json.loads(_metrics_payload())),
+         ingest_otlp_pb_stream, ("metrics",)),
+        ("remote_write", snappy_compress_literal(encode_write_request(rw)),
+         ingest_remote_write_stream, ()),
+    ):
+        src = tmp_path / name
+        src.mkdir()
+        (src / "b.bin").write_bytes(body)
+        base = str(tmp_path / f"{name}_tables")
+        jobs[name] = _drain_jobs(spark, _drain(fn, spark, str(src), base, *extra))
+    assert jobs == {"metrics_pb": len(METRIC_TABLES), "remote_write": 3}
+
+
 def test_refresh_and_relation_builds_run_no_jobs(spark, landed):
     """After a commit, re-resolving the tenant and building manifest
     relations infers nothing from footers: zero jobs."""
@@ -215,10 +257,7 @@ def test_recorded_schema_reads_like_inference_on_every_table(spark, landed):
         ), table
 
 
-@pytest.mark.parametrize("use_manifest", [True, False])
-def test_replayed_poison_batch_dead_letters_exactly_once(
-    spark, tmp_path, use_manifest
-):
+def test_replayed_poison_batch_dead_letters_exactly_once(spark, tmp_path):
     """Replay one batch id that holds an undecodable line and a datapoint
     with a null required column. The replay's writes are skipped, so its
     observations never fire: the drain must fall back to probes, not
@@ -243,8 +282,7 @@ def test_replayed_poison_batch_dead_letters_exactly_once(
 
     for attempt in range(2):  # a fresh checkpoint replays batch 0
         _drain(ingest_otlp_metrics_stream, spark, str(src), base,
-               checkpoint_dir=str(tmp_path / f"ck{attempt}"),
-               use_manifest=use_manifest)
+               checkpoint_dir=str(tmp_path / f"ck{attempt}"))
         counts, dead = state()
         assert counts == {t: 1 for t in METRIC_TABLES}, attempt
         assert dead["metrics"] == ["garbage {"], attempt
@@ -269,18 +307,3 @@ def test_partly_committed_replay_probes_the_undecodable_count(spark, tmp_path):
     dead = read_dead_letters(spark, base, "acme", "prod", "metrics")
     assert [r.payload for r in dead.collect()] == ["garbage {"]
     assert optional_table(spark, base, "acme", "prod", "metrics_sum").count() == 2
-
-
-def test_write_batch_reports_whether_it_wrote(spark, tmp_path):
-    """The legacy marker sink says when a replay skipped the write."""
-    from pyspark.sql import functions as F
-
-    from signaldb_spark.streaming.ingest import write_batch
-
-    df = spark.range(3).select(
-        F.col("id"), F.lit("2024-01-01").alias("date_day"), F.lit(0).alias("hour")
-    )
-    path = str(tmp_path / "t")
-    assert write_batch(df, path, "logs", batch_id=0) is True
-    assert write_batch(df, path, "logs", batch_id=0) is False
-    assert os.path.exists(os.path.join(path, "_batch_0_done"))
