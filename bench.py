@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from signaldb_spark.registry import all_queries  # noqa: E402
-from signaldb_spark.session import get_spark  # noqa: E402
+from signaldb_spark.session import get_spark, graft_cpus  # noqa: E402
 
 QUERIES = all_queries()
 
@@ -41,6 +41,17 @@ def _family(name: str) -> str:
         if name == f or name.startswith(f + "_"):
             return f
     return "core"
+
+
+def parallelism(spark) -> dict:
+    """The run's effective parallelism: small query inputs run as one
+    task by design (``storage.manifest.SMALL_SCAN_BYTES``), so a reader
+    of the bench line needs the core count to tell serial-by-choice
+    from starved."""
+    return {
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "spark_graft_cpus": graft_cpus(),
+    }
 
 
 def main() -> None:
@@ -80,6 +91,7 @@ def main() -> None:
         json.dump(
             {"metric": "headline_total", "value": round(total, 3),
              "unit": "sec", "queries": timings, "sf": sf_val, "n": len(timings),
+             **parallelism(spark),
              # self-describing provenance: a fresh run writes an empty
              # notes map; any hand-splice/adjudication of individual
              # query values MUST be recorded here (query -> note) so the
@@ -113,6 +125,7 @@ def main() -> None:
                 "per_query_file": "bench_per_query.json",
                 "write_paths": write_paths,
                 "sf": sf_val,
+                **parallelism(spark),
             }
         )
     )

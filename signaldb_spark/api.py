@@ -594,7 +594,7 @@ class SignalDBAPI:
             return mt.scan(
                 self.spark, m, [_os.path.join(mt.data_dir, m["files"][0])]
             ).limit(0)
-        return mt.scan(self.spark, m, fs)
+        return mt.query_scan(self.spark, m, fs)
 
     # GET /tempo/api/search — q (TraceQL) or tags (logfmt), newest-N
 
@@ -1549,9 +1549,13 @@ class AdminAPI:
         file in it, since readers prefer the manifest snapshot."""
         import os
 
-        from .catalog import _tree_sig, signal_table_path
+        from .catalog import signal_table_path
         from .schemas.signal_schemas import SCHEMAS
-        from .storage.manifest import ManifestTable, manifest_table
+        from .storage.manifest import (
+            ManifestTable,
+            bare_parquet_table,
+            manifest_table,
+        )
 
         if not can_manage:
             return error_envelope(
@@ -1562,9 +1566,7 @@ class AdminAPI:
         created, skipped = [], []
         for table in SCHEMAS:
             path = signal_table_path(self.base, tenant_id, dataset, table)
-            if manifest_table(path) is not None or any(
-                rel.endswith(".parquet") for rel, _mtime, _size in _tree_sig(path)
-            ):
+            if manifest_table(path) is not None or bare_parquet_table(path):
                 skipped.append(table)
                 continue
             mt = ManifestTable(path)

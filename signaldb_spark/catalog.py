@@ -224,7 +224,7 @@ def optional_table(
     # exactly the committed file set plus published hot batches above
     # the committed watermark, never a half-finished writer's files.
     from .storage.hot import HOT_DIR, hybrid_read
-    from .storage.manifest import manifest_table
+    from .storage.manifest import bare_parquet_table, manifest_table
 
     if manifest_table(path) is not None or os.path.isdir(
         os.path.join(path, HOT_DIR)
@@ -241,9 +241,8 @@ def optional_table(
             if table in SCHEMAS:
                 return spark.createDataFrame([], SCHEMAS[table])
         return df
-    sig = _tree_sig(path)
-    if not any(rel.endswith(".parquet") for rel, _mtime, _size in sig):
+    if not bare_parquet_table(path):
         return None
     return relation_memo(
-        spark, ("dir", path), sig, lambda: spark.read.parquet(path)
+        spark, ("dir", path), _tree_sig(path), lambda: spark.read.parquet(path)
     )

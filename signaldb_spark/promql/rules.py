@@ -67,19 +67,14 @@ def record_rule(
     """Evaluate + commit to a gauge table through the manifest, the
     layout every sink writes. ``batch_id`` defaults to the rule name +
     window, so re-evaluating the same window never appends duplicates.
-    An existing bare parquet directory raises ``ValueError``: a manifest
-    committed over it would shadow its files."""
-    import os
+    A bare parquet directory (``storage.manifest.bare_parquet_table``)
+    raises ``ValueError``: a manifest committed over it would shadow its
+    files. An empty directory holds nothing to shadow and commits."""
     import re
 
-    from ..storage.hot import HOT_DIR
-    from ..storage.manifest import manifest_table, write_batch_manifest
+    from ..storage.manifest import bare_parquet_table, write_batch_manifest
 
-    if (
-        manifest_table(table_path) is None
-        and os.path.isdir(table_path)
-        and not os.path.isdir(os.path.join(table_path, HOT_DIR))
-    ):
+    if bare_parquet_table(table_path):
         raise ValueError(
             f"record_rule: {table_path} is a bare parquet directory, not a "
             "manifest-committed table"

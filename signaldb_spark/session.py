@@ -64,6 +64,11 @@ def _install_jvm_function_memo() -> None:
     _memoized_get_jvm_function = memoized
 
 
+def graft_cpus() -> int:
+    """The local core count ``SPARK_GRAFT_CPUS`` resolves to (32 unset)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 def get_spark(app_name: str = "signaldb-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) the session.
 
@@ -72,7 +77,7 @@ def get_spark(app_name: str = "signaldb-spark", shuffle_partitions: int | None =
     hundreds of empty tasks, while a cluster deployment would raise it to
     ~2-3x total cores.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = graft_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     # Python workers deserialize our pandas UDFs by module reference —

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .manifest import (
     BLOOM_WRITE_OPTIONS,
+    HOT_DIR,
     SORT_ORDERS,
     ManifestTable,
     collect_file_stats,
@@ -54,7 +55,6 @@ from .manifest import (
     _stage_into_data,
 )
 
-HOT_DIR = "hot"
 WATERMARK_PROP = "hot_watermark"
 # \d{8,}: ack formats with {seq:08d}, which prints MORE than 8 digits
 # past 99,999,999 — an exactly-8 anchor would make such published
@@ -217,11 +217,7 @@ def covering_snapshot(table_path: str) -> tuple[ManifestTable, dict] | None:
     return mt, m
 
 
-def hybrid_read(
-    spark: SparkSession,
-    table_path: str,
-    table: str | None = None,
-) -> DataFrame | None:
+def hybrid_read(spark: SparkSession, table_path: str) -> DataFrame | None:
     """The querier's hot/cold union at one chokepoint: hot sequence list
     snapshots FIRST, then the cold snapshot and its watermark resolve,
     then hot batches at or below the watermark drop (no dup / no
@@ -233,8 +229,10 @@ def hybrid_read(
     in between, pairing an old watermark with a new file list — every
     row of the just-flushed batches would then appear in BOTH halves of
     the union (the exact duplication the single load rules out).
-    ``table`` is accepted for call-site symmetry with the other readers;
-    the hot/cold protocol itself is table-agnostic."""
+
+    The cold half is :meth:`ManifestTable.read`'s memoized relation, one
+    partition when small. The union with a hot half is left as it is:
+    the hot tier has no production writer yet."""
     store = HotStore(table_path)
     hot_seqs = store.sequences()  # MUST precede the manifest read
     mt = ManifestTable(table_path)

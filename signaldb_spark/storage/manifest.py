@@ -45,6 +45,14 @@ from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
+HOT_DIR = "hot"
+
+# A query relation whose files' recorded bytes sum to at most this runs
+# as ONE partition (ManifestTable.query_scan): below it, Spark's
+# per-exchange job and stage overhead costs more than a parallel scan
+# saves, even for a query that reads every column. Measured on 4 cores
+# (docs/bench_adjudications.md, "Small inputs").
+SMALL_SCAN_BYTES = 8 << 20
 
 # parquet bloom filters on point-lookup columns, mirroring the
 # reference's table properties (src/common/src/schema/mod.rs:69-105:
@@ -146,6 +154,23 @@ def manifest_table(table_path: str) -> "ManifestTable | None":
     if os.path.isdir(os.path.join(table_path, MANIFEST_DIR)):
         return ManifestTable(table_path)
     return None
+
+
+def bare_parquet_table(table_path: str) -> bool:
+    """The one bare-table test: a directory with neither snapshot
+    manifests nor a hot store whose tree holds a ``.parquet`` file.
+    Such a table is read-only input — a manifest committed over it
+    would shadow its files. An empty directory is not one: it holds
+    nothing to shadow."""
+    if manifest_table(table_path) is not None or os.path.isdir(
+        os.path.join(table_path, HOT_DIR)
+    ):
+        return False
+    return any(
+        n.endswith(".parquet")
+        for _root, _dirs, names in os.walk(table_path)
+        for n in names
+    )
 
 
 class ManifestTable:
@@ -533,6 +558,23 @@ class ManifestTable:
             reader = reader.schema(T.StructType.fromJson(recorded))
         return reader.parquet(*paths)
 
+    def query_scan(
+        self, spark: SparkSession, manifest: dict, paths: list[str]
+    ) -> DataFrame:
+        """:meth:`scan` for a query relation: when the recorded bytes of
+        ``paths`` sum to at most :data:`SMALL_SCAN_BYTES` the relation is
+        ``coalesce(1)`` over the scan. Its ``SinglePartition`` output
+        satisfies every clustered and ordered distribution, so no
+        aggregate, window, sort or join above it adds an exchange: the
+        query runs as one job and one task, while filters and column
+        pruning still reach the file scan. Above the threshold the scan
+        keeps Spark's file splits. Maintenance inputs, writes and the
+        stats-ordered top-k waves use :meth:`scan` directly."""
+        sizes = self.file_sizes(manifest=manifest)
+        total = sum(sizes[os.path.relpath(p, self.data_dir)] for p in paths)
+        df = self.scan(spark, manifest, paths)
+        return df.coalesce(1) if total <= SMALL_SCAN_BYTES else df
+
     def read(
         self,
         spark: SparkSession,
@@ -547,7 +589,10 @@ class ManifestTable:
         ``between=(col, lo, hi)`` additionally prunes the file list by
         the manifest's per-file column stats before Spark plans the
         scan; the caller must still apply the row-level predicate (file
-        stats bound files, not rows)."""
+        stats bound files, not rows).
+
+        The relation is a :meth:`query_scan`: one partition when the
+        kept files are small, Spark's file splits otherwise."""
         m = manifest or self.load_manifest(version)
         if between is not None:
             fs, _ = self.pruned_files(*between, manifest=m)
@@ -566,7 +611,7 @@ class ManifestTable:
             spark,
             ("manifest", self.data_dir),
             (tuple(fs), json.dumps(m.get("schema"), sort_keys=True)),
-            lambda: self.scan(spark, m, fs),
+            lambda: self.query_scan(spark, m, fs),
         )
 
     def read_recent_topk(
@@ -1065,7 +1110,10 @@ def compact_partition_manifest(
     parts = [bucket] if bucket in df.columns else []
     attempt = uuid.uuid4().hex[:8]
     staging = os.path.join(table_path, "_staging", f"compact-{day}-{hour}-{attempt}")
-    out = df.drop("date_day", "hour").repartition(target_files)
+    # one output file needs no shuffle: the one task that writes it
+    # reads the inputs itself instead of a shuffle of them
+    out = df.drop("date_day", "hour")
+    out = out.coalesce(1) if target_files == 1 else out.repartition(target_files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     writer = out.write.mode("overwrite")

@@ -236,15 +236,37 @@ def _truncate_newest(
     """Deterministic newest-N trace truncation + the ``spss`` span cap
     (order_traces_for_truncation, trace.rs:602-644): traces rank by
     their most-recent span DESC with trace_id tiebreak; each kept trace
-    then returns at most ``spans_per_trace`` of its newest spans."""
-    ranked = (
-        df.groupBy("trace_id")
-        .agg(F.max("start_time_unix_nano").alias("_latest"))
-        .orderBy(F.col("_latest").desc(), F.col("trace_id").desc())
-        .limit(limit)
-        .select("trace_id")
+    then returns at most ``spans_per_trace`` of its newest spans.
+
+    The ranking is windows over ``df`` itself — the per-trace max, then
+    a dense rank over ``(_latest desc, trace_id desc)`` — not a join
+    with a ranked ``groupBy`` of ``df``: each join branch would re-run
+    ``df``'s scan and its span limit. Over the span-limited search
+    input (at most ``limit*50`` rows, one partition after its
+    TakeOrderedAndProject) the windows add no exchange, so the search
+    plans one scan and runs one job. The structural and aggregate
+    searches rank their matched spans the same way; over a multi-
+    partition input Spark plans a partial ``WindowGroupLimit`` below
+    the global rank, so only each partition's newest ``limit`` traces
+    move to the one ranking task. A null trace_id
+    takes a rank like any trace but returns no rows, as the inner join
+    it replaces did."""
+    # the joined layout (trace_id first); backquoted, since select()
+    # extras carry dotted names
+    cols = [
+        F.col(f"`{c}`")
+        for c in ("trace_id", *[c for c in df.columns if c != "trace_id"])
+    ]
+    latest = F.max("start_time_unix_nano").over(Window.partitionBy("trace_id"))
+    rank = F.dense_rank().over(
+        Window.orderBy(F.col("_latest").desc(), F.col("trace_id").desc())
     )
-    out = df.join(F.broadcast(ranked), "trace_id")
+    out = (
+        df.withColumn("_latest", latest)
+        .withColumn("_trk", rank)
+        .filter((F.col("_trk") <= limit) & F.col("trace_id").isNotNull())
+        .select(*cols)
+    )
     if spans_per_trace is not None:
         w = Window.partitionBy("trace_id").orderBy(
             F.col("start_time_unix_nano").desc(), F.col("span_id").desc()

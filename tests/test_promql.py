@@ -622,6 +622,23 @@ def test_recording_rule_roundtrip(spark, tmp_path_factory):
     assert len(out) > 0
 
 
+def test_recording_rule_into_empty_directory_commits(spark, ctx, tmp_path):
+    """An existing directory that holds no parquet file is not a bare
+    table (``storage.manifest.bare_parquet_table``): it could shadow
+    nothing, so a recording rule commits into it and reads back."""
+    from pyspark.sql import functions as F
+
+    from signaldb_spark.promql.rules import record_rule
+    from signaldb_spark.storage.manifest import ManifestTable
+
+    path = tmp_path / "metrics_gauge"
+    (path / "data").mkdir(parents=True)
+    record_rule(ctx, "sum by (service_name) (process_cpu_usage)", "job:cpu:sum",
+                str(path))
+    recorded = ManifestTable(str(path)).read(spark)
+    assert recorded.filter(F.col("metric_name") == "job:cpu:sum").count() > 0
+
+
 def test_at_start_end_sentinels(spark, ctx):
     """@ start() / @ end() resolve against the query window and
     replicate the pinned value across every step (promql-functions.md:31

@@ -1,5 +1,6 @@
 """Write-path job budget: between landing a batch and reading it back the
-engine runs no Spark job beyond the table writes and the query itself.
+engine runs no Spark job beyond the table writes and the query itself,
+and a query over small inputs runs as one job.
 
 The sinks fold their dead-letter and required-column probes into the
 write job (``DataFrame.observe``), and the manifest records the written
@@ -15,13 +16,20 @@ from __future__ import annotations
 import contextlib
 import datetime as dt
 import json
+import re
 import threading
 
 import pytest
 
 from signaldb_spark import catalog
 from signaldb_spark.catalog import optional_table, signal_table_path
-from signaldb_spark.storage.manifest import ManifestTable
+from signaldb_spark.logql.lowering import LowerCtx, query_metric
+from signaldb_spark.schemas.signal_schemas import LOGS
+from signaldb_spark.storage.manifest import (
+    SMALL_SCAN_BYTES,
+    ManifestTable,
+    write_batch_manifest,
+)
 from signaldb_spark.streaming.ingest import (
     ingest_otlp_logs_stream,
     ingest_otlp_metrics_stream,
@@ -31,6 +39,8 @@ from signaldb_spark.streaming.ingest import (
     read_dead_letters,
 )
 from signaldb_spark.tenancy import TenantSession
+from signaldb_spark.testing import gen_logs, write_signal_tables
+from signaldb_spark.traceql.trace_ops import search_traceql
 
 T0 = int(dt.datetime(2024, 1, 1, 0, 30, tzinfo=dt.timezone.utc).timestamp() * 1e9)
 METRIC_TABLES = (
@@ -307,3 +317,72 @@ def test_partly_committed_replay_probes_the_undecodable_count(spark, tmp_path):
     dead = read_dead_letters(spark, base, "acme", "prod", "metrics")
     assert [r.payload for r in dead.collect()] == ["garbage {"]
     assert optional_table(spark, base, "acme", "prod", "metrics_sum").count() == 2
+
+
+def _formatted_plan(df) -> str:
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def test_small_manifest_metric_query_runs_one_job(spark, landed):
+    """A LogQL metric query over a small manifest table: the relation is
+    one partition (``ManifestTable.query_scan``), so the plan holds no
+    exchange and the query runs as one Spark job."""
+    base, _jobs = landed
+    logs = optional_table(spark, base, "acme", "prod", "logs")
+    ctx = LowerCtx(spark, logs, "2024-01-01 00:00:00", "2024-01-01 02:00:00", 3600)
+    df = query_metric(
+        ctx, 'sum by (service_name) (count_over_time({service_name="api"}[1h]))'
+    )
+    assert "Exchange" not in _formatted_plan(df)
+    with _job_group(spark, "small-metric-query") as jobs:
+        rows = df.collect()
+        assert jobs() == 1
+    assert sum(r.value for r in rows) == 30
+
+
+def test_relation_above_the_threshold_keeps_file_splits(spark, tmp_path):
+    """The decision reads the manifest's recorded bytes: at the threshold
+    the relation is one partition, one byte above it keeps Spark's file
+    splits and a grouped aggregate plans its exchange again."""
+    path = str(tmp_path / "logs")
+    write_batch_manifest(
+        spark.createDataFrame(gen_logs(), LOGS).repartition(4), path, "logs",
+        batch_id=0,
+    )
+    mt = ManifestTable(path)
+    files = mt.load_manifest()["files"]
+    assert len(files) > 1
+
+    def recorded_total(total):
+        sizes = {f: total // len(files) for f in files}
+        sizes[files[0]] += total - sum(sizes.values())
+        mt.commit([], sizes=sizes)
+        # a live file's recorded size never changes, so the relation
+        # memo signs by file list; rewriting the sizes needs a build
+        catalog._RELATION_MEMO.pop(spark, None)
+        return mt.read(spark)
+
+    at = recorded_total(SMALL_SCAN_BYTES)
+    assert at.rdd.getNumPartitions() == 1
+    above = recorded_total(SMALL_SCAN_BYTES + 1)
+    assert above.rdd.getNumPartitions() > 1
+    assert "Exchange" in _formatted_plan(above.groupBy("service_name").count())
+    assert above.count() == at.count() == len(gen_logs())
+
+
+def test_traceql_search_scans_once(spark, tmp_path):
+    """The newest-N truncation ranks with windows over the span-limited
+    rows, not with a join against its own ranking: the search plans one
+    parquet scan and runs one job."""
+    write_signal_tables(spark, str(tmp_path))
+    traces = optional_table(spark, str(tmp_path), "acme", "prod", "traces")
+    df = search_traceql(traces, '{ .service.name = "api" }', limit=5,
+                        spans_per_trace=2)
+    plan = _formatted_plan(df)
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+    with _job_group(spark, "traceql-search") as jobs:
+        rows = df.collect()
+        assert jobs() == 1
+    assert rows
