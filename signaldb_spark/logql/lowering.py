@@ -274,14 +274,16 @@ def matcher_expr(df: DataFrame, sel: LogSelector, m: Matcher) -> Column:
             and f"label_{m.label}" not in df.columns
             and not sel.stages
         ):
-            # bloom-prunable containment conjunct on attr_tokens for
-            # attribute equality (logql.rs:192-201). Gated for
+            # containment conjunct on attr_tokens for attribute
+            # equality (logql.rs:192-201). It prunes nothing here: no
+            # writer sets a bloom on attr_tokens, and Spark does not
+            # push array_contains into the parquet scan; it only keeps
+            # the predicate in the reference's shape. Gated for
             # neutrality: skipped when parser stages could source the
             # label from the body (tokens only cover log_attributes),
             # for the empty value (absent labels have no token to
             # contain), and rows from files predating attr_tokens
-            # (null array) are admitted via the isNull branch — those
-            # rows cannot be bloom-pruned anyway.
+            # (null array) are admitted via the isNull branch.
             token = f"{m.label}={m.value}"
             return (s == m.value) & (
                 F.col("attr_tokens").isNull()

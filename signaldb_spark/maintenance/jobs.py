@@ -120,11 +120,11 @@ def compaction_candidates(
 
 def compact_partition(
     spark: SparkSession, table_path: str, table: str, day: str, hour: int,
-    target_files: int = 1,
 ) -> int:
-    """Rewrite one (day, hour) partition: coalesce small files, apply
-    the table's clustering sort (rewriter.rs:591-616), keep bloom
-    filters. Returns the number of files after rewrite.
+    """Rewrite one (day, hour) partition into one file (one per bucket
+    on a ``bucket_by`` table), sorted by the table's order
+    (rewriter.rs:591-616), keeping bloom filters. Returns the number of
+    files after rewrite.
 
     The rewrite is snapshot-isolated: ONE manifest commit swaps the
     replacement files in, concurrent readers keep their snapshot, and
@@ -132,9 +132,7 @@ def compact_partition(
     (storage.manifest.compact_partition_manifest). A bare parquet
     directory raises ``ValueError``."""
     _manifest_or_raise(table_path, "compact_partition")
-    return compact_partition_manifest(
-        spark, table_path, table, day, hour, target_files
-    )
+    return compact_partition_manifest(spark, table_path, table, day, hour)
 
 
 def compaction_cycle(
@@ -146,7 +144,6 @@ def compaction_cycle(
     lateness_seconds: int = 3600,
     now: dt.datetime | None = None,
     manager=None,
-    target_files: int = 1,
     target_bytes: int | None = None,
     min_small_files: int = 2,
     max_partitions_per_cycle: int | None = None,
@@ -176,10 +173,10 @@ def compaction_cycle(
     if target_bytes is not None:
         candidates = compaction_candidates(table_path, target_bytes, min_small_files)
     else:
-        # count-based candidacy: any partition above the file target
+        # count-based candidacy: any partition of more than one file
         # (small-file candidates only, src/compactor/src/planner.rs)
         counts = partition_file_counts(table_path)
-        candidates = sorted(k for k, n in counts.items() if n > target_files)
+        candidates = sorted(k for k, n in counts.items() if n > 1)
     for day, hour in candidates:
         if max_partitions_per_cycle is not None and len(done) >= max_partitions_per_cycle:
             break
@@ -190,8 +187,7 @@ def compaction_cycle(
             continue
         try:
             n = compact_partition_manifest(
-                spark, table_path, table, day, hour, target_files,
-                max_input_bytes=target_bytes,
+                spark, table_path, table, day, hour, max_input_bytes=target_bytes,
             )
             if n:
                 done.append((day, hour))
@@ -211,7 +207,6 @@ def maintenance_cycle(
     lateness_seconds: int = 3600,
     now: dt.datetime | None = None,
     manager=None,
-    target_files: int = 1,
     orphan_grace_seconds: float = 259200.0,
 ) -> dict:
     """The full maintenance pass a manifest table needs, in reference
@@ -245,7 +240,6 @@ def maintenance_cycle(
     compacted = compaction_cycle(
         spark, base, tenant, dataset, table,
         lateness_seconds=lateness_seconds, now=now, manager=manager,
-        target_files=target_files,
     )
     dropped: list[tuple[str, int]] = []
     if keep_partitions is not None:

@@ -12,13 +12,6 @@ import weakref
 
 from pyspark.sql import SparkSession
 
-# Parquet bloom filters for point-lookup columns, mirroring the reference's
-# table properties (src/common/src/schema/mod.rs:69-105: trace_id/span_id
-# fpp 0.01). In Spark these are writer options, set at write time by the
-# sinks in signaldb_spark.sources; listed here as the canonical set.
-BLOOM_FILTER_COLUMNS = ("trace_id", "span_id", "attr_tokens")
-
-
 # --- py4j round-trip elision for expression construction ---------------
 #
 # Every `F.<fn>(...)` in classic PySpark resolves the JVM static method

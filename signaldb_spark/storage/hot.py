@@ -42,17 +42,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .manifest import (
-    BLOOM_WRITE_OPTIONS,
     HOT_DIR,
-    SORT_ORDERS,
     ManifestTable,
-    collect_file_stats,
-    file_schema,
-    lifecycle_metadata,
+    _write_commit,
     manifest_table,
     stats_visible_writes,
-    _declared_blooms,
-    _stage_into_data,
 )
 
 WATERMARK_PROP = "hot_watermark"
@@ -276,51 +270,11 @@ def flush_hot(
         return wm
     hi = max(todo)
     df = store.read_hot(spark, above=wm, seqs=seqs)
-    mt = ManifestTable(table_path)
-    m = mt.load_manifest()
     batch_id = f"hotflush-{hi}"
-    if batch_id in m["batches"]:
-        # replayed range already committed — but a LATER flush may have
-        # advanced the watermark past hi since our read; report the real
-        # committed mark, consistent with the CAS-abort branch below
-        return max(hi, committed_watermark(table_path))
-    attempt = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_path, "_staging", f"{batch_id}-{attempt}")
-    sort_cols = [c for c in SORT_ORDERS.get(table, []) if c in df.columns]
-    sorted_df = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-    parts = [c for c in partition_cols if c in df.columns]
-    writer = sorted_df.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts)
-    for k, v in BLOOM_WRITE_OPTIONS.items():
-        writer = writer.option(k, v)
-    with stats_visible_writes(df.sparkSession):
-        writer.parquet(staging)
-    rel_files = _stage_into_data(staging, mt.data_dir, f"{batch_id}-{attempt}")
-    use_stats = [c for c in stats_cols if c in df.columns]
-    stats = (
-        collect_file_stats(mt.data_dir, rel_files, tuple(use_stats))
-        if use_stats
-        else None
-    )
-    committed = mt.commit(
-        rel_files,
+    files = _write_commit(
+        df, ManifestTable(table_path), batch_id,
+        [c for c in partition_cols if c in df.columns], table, stats_cols,
         batch_id=batch_id,
-        stats=stats,
-        # the flush is a producer like the batch sink and the compactor:
-        # when the table declares bloom columns, its files get sidecars
-        # too (a flushed file without one is still correct — just never
-        # bloom-pruned — but the declared contract is better kept
-        # uniform)
-        blooms=_declared_blooms(table_path, m, rel_files),
-        # the merged hot schema (a column added in a newer hot batch
-        # joins the recorded schema by name)
-        schema=file_schema(df, parts),
-        # lifecycle metadata, same as write_batch_manifest: partition
-        # identity from this writer's own just-written layout, on-disk
-        # bytes for size-aware candidacy, and the sort claim ONLY when
-        # this flush actually sorted (declared-sort-orders honesty)
-        **lifecycle_metadata(mt.data_dir, rel_files, sort_cols),
         properties={WATERMARK_PROP: hi},
         # CAS on the watermark: only commit if it is still the one this
         # flush planned against. A racing flush that advanced it first
@@ -332,4 +286,7 @@ def flush_hot(
         # them up.
         precondition=lambda cur: watermark_of(cur) == wm,
     )
-    return hi if committed else committed_watermark(table_path)
+    # not committed: a replay of an already-committed range, or a racing
+    # flush won the CAS. Either way the committed watermark is the
+    # answer, and a replayed range's is at least ``hi``
+    return hi if files is not None else committed_watermark(table_path)

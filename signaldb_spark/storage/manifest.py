@@ -84,8 +84,18 @@ SORT_ORDERS = {
 # (reference: docs/architecture/storage-layout.md:294-306,
 # src/common/src/iceberg/schemas.rs:459-486), so the write paths here
 # must be self-sufficient rather than trusting session.py's pin.
+#
+# Planned writes are off for the same reason: a sort claim must be true.
+# A planned partitioned write drops the producer's sort and re-sorts by
+# the partition columns alone whenever the optimizer folds a literal
+# partition column out of the sort (a literal date_day and hour before a
+# computed bucket column). Unplanned, the write runs the producer's sort
+# and, when a folded literal leaves that sort not starting with the
+# partition columns, sorts its output by them with Spark's stable
+# in-memory sort, which keeps the producer's order within each file.
 _WRITE_CONFS = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    "spark.sql.optimizer.plannedWrite.enabled": "false",
 }
 
 
@@ -280,13 +290,15 @@ class ManifestTable:
         candidacy reads instead of stat()ing every file per planning
         pass.
 
-        ``sort_orders`` maps added file → the column list the producer
-        ACTUALLY sorted that file by. The honesty invariant of the
-        reference's declared-sort-orders change: a declaration is only
-        ever written by the producer that performed the sort, so a
-        declared ordering is physically true per file by construction;
-        producers that didn't sort declare nothing and the file is
-        classified inexact (see :meth:`declared_ordering`).
+        ``sort_orders`` maps added file → the column list that file's
+        rows are in, in that order. The honesty invariant of the
+        reference's declared-sort-orders change: only the producer that
+        wrote the file in that order may claim it. Sorting the input is
+        not enough — a partitioned write may re-sort it — so the claim
+        comes from :func:`_write_commit`, whose sort the write keeps
+        (``tests/test_lifecycle_scoped.py`` reads claimed files back).
+        A file without a claim is classified inexact (see
+        :meth:`declared_ordering`).
 
         ``blooms`` maps added file → {col: bloom entry} (the Iceberg
         puffin-blob reference analog; see storage/blooms.py) — what
@@ -410,13 +422,17 @@ class ManifestTable:
         """Classify the live file population against a declared sort
         order — the reference's declared-data-ordering contract
         (openspec/changes/declared-sort-orders): ``"exact"`` when EVERY
-        live file carries a producer-written claim for (a prefix
-        extension of) ``sort_cols``, ``"inexact"`` when any file lacks
-        the claim (pre-change files, external adds), ``"none"`` for an
-        empty claim set. Inexact never makes results wrong — it only
+        live file carries a claim that starts with ``sort_cols``,
+        ``"inexact"`` when only some do (files committed without one:
+        external adds, z-order rewrites, tables with no configured
+        order), ``"none"`` when none do or the table is empty. A claim
+        is recorded only for a file whose rows are in that order, so
+        ``"exact"`` means every live file reads back sorted by
+        ``sort_cols``. Inexact never makes results wrong — it only
         withholds sort-elimination-style shortcuts; compaction converges
-        a mixed population back to exact because the rewriter sorts and
-        claims (the proposal's one-shot-cutover story)."""
+        a mixed population back to exact because the compactor's files
+        are sorted and claimed (the proposal's one-shot-cutover
+        story)."""
         m = self.load_manifest(version)
         sorts = m.get("sorts") or {}
         if not m["files"]:
@@ -781,15 +797,6 @@ def _parse_hive_partition(rel: str) -> dict | None:
     return out
 
 
-def file_schema(df: DataFrame, partition_cols) -> T.StructType:
-    """The schema of the columns a ``partitionBy(*partition_cols)``
-    write of ``df`` puts inside its files — what a producer passes to
-    :meth:`ManifestTable.commit` as ``schema``."""
-    return T.StructType(
-        [f for f in df.schema.fields if f.name not in set(partition_cols)]
-    )
-
-
 def _nullable(dt: T.DataType) -> T.DataType:
     """``dt`` with every level nullable and no field metadata — the form
     Spark's file sources read any parquet schema back as, so a recorded
@@ -832,21 +839,6 @@ def _next_schema(
         elif have[f["name"]] != f["type"]:
             return None
     return {**old, "fields": fields}
-
-
-def _declared_blooms(table_path: str, manifest: dict, rel_files: list[str]):
-    """Bloom sidecars for ``rel_files`` on the columns the table declares
-    (the ``bloom.cols`` property), or None when it declares none — how
-    every producer after the first keeps its files probe-able."""
-    cols = tuple(
-        c for c in manifest.get("props", {}).get("bloom.cols", "").split(",")
-        if c
-    )
-    if not cols:
-        return None
-    from .blooms import collect_file_blooms
-
-    return collect_file_blooms(table_path, rel_files, cols)
 
 
 def _stat_key(v):
@@ -935,31 +927,6 @@ def collect_file_stats(
     return {rel: e for rel, e in zip(rel_files, entries) if e}
 
 
-def lifecycle_metadata(
-    data_dir: str,
-    rel_files: list[str],
-    sort_cols: list[str] | None,
-) -> dict:
-    """The per-file lifecycle entries every producer records in its
-    commit — partition identity (parsed once from the producer's own
-    just-written hive layout), on-disk bytes, and the sort claim IFF the
-    producer actually sorted (declared-sort-orders honesty). One
-    definition so the three writers (batch sink, hot flush, compactor)
-    cannot drift."""
-    return {
-        "partitions": {
-            f: p for f in rel_files
-            if (p := _parse_hive_partition(f)) is not None
-        },
-        "sizes": dict(zip(rel_files, _parallel_files(
-            lambda f: os.path.getsize(os.path.join(data_dir, f)), rel_files
-        ))),
-        "sort_orders": (
-            {f: sort_cols for f in rel_files} if sort_cols else None
-        ),
-    }
-
-
 def _stage_into_data(staging: str, data_dir: str, prefix: str) -> list[str]:
     """Move staged hive-layout parquet files under unique names in
     data/. The move is local simulation of a direct-to-final-key upload
@@ -982,6 +949,92 @@ def _stage_into_data(staging: str, data_dir: str, prefix: str) -> list[str]:
     return rel_files
 
 
+def _write_commit(
+    df: DataFrame,
+    mt: ManifestTable,
+    prefix: str,
+    partition_cols,
+    table: str | None,
+    stats_cols: tuple[str, ...],
+    batch_id: int | str | None = None,
+    remove_files: list[str] | tuple = (),
+    properties: dict | None = None,
+    precondition=None,
+) -> list[str] | None:
+    """The one producer of manifest-table files: write ``df`` under
+    ``partitionBy(*partition_cols)``, move the files into ``data/`` under
+    ``prefix``-unique names, and make ONE commit that adds them (with
+    ``batch_id``, ``remove_files``, ``properties`` and ``precondition``
+    as :meth:`ManifestTable.commit` takes them). Returns the committed
+    files relative to ``data/``, or None when nothing committed: a
+    ``batch_id`` already in the lineage (checked before any Spark job
+    runs, so a replayed sink write runs none) or a false precondition.
+
+    What every file gets, whoever produced it:
+
+    - the sort: ``SORT_ORDERS[table]`` (the columns of it ``df`` has),
+      led by the partition columns. A partitioned write needs its input
+      ordered by the partition columns; a sort that starts with them
+      already is, so the unplanned write (see ``_WRITE_CONFS``) keeps
+      it. The files are then in the table's order and the commit claims
+      exactly that order. ``table=None`` (or a table with no configured
+      order) writes in input order and claims nothing;
+    - ``BLOOM_WRITE_OPTIONS`` and the write confs of
+      :func:`stats_visible_writes`;
+    - [min, max] stats for ``stats_cols`` from the footers;
+    - bloom sidecars for the columns the table declares (the
+      ``bloom.cols`` property, including one ``properties`` sets here);
+    - partition identity parsed from the just-written hive layout,
+      on-disk bytes, and the schema of the columns inside the files
+      (the partition columns stay path-derived)."""
+    m = mt.load_manifest()
+    if batch_id is not None and batch_id in m["batches"]:
+        return None
+    parts = list(partition_cols)
+    claim = [c for c in SORT_ORDERS.get(table, ()) if c in df.columns]
+    if claim:
+        df = df.sortWithinPartitions(*parts, *claim)
+    attempt = f"{prefix}-{uuid.uuid4().hex[:8]}"
+    staging = os.path.join(mt.table_path, "_staging", attempt)
+    writer = df.write.mode("overwrite").options(**BLOOM_WRITE_OPTIONS)
+    if parts:
+        writer = writer.partitionBy(*parts)
+    with stats_visible_writes(df.sparkSession):
+        writer.parquet(staging)
+    rel_files = _stage_into_data(staging, mt.data_dir, attempt)
+    declared = {**m.get("props", {}), **(properties or {})}.get("bloom.cols", "")
+    bloom_cols = tuple(c for c in declared.split(",") if c)
+    blooms = None
+    if bloom_cols:
+        from .blooms import collect_file_blooms
+
+        blooms = collect_file_blooms(mt.table_path, rel_files, bloom_cols)
+    committed = mt.commit(
+        rel_files,
+        remove_files=remove_files,
+        batch_id=batch_id,
+        stats=(
+            collect_file_stats(mt.data_dir, rel_files, stats_cols)
+            if stats_cols else None
+        ),
+        properties=properties,
+        precondition=precondition,
+        partitions={
+            f: p for f in rel_files
+            if (p := _parse_hive_partition(f)) is not None
+        },
+        sizes=dict(zip(rel_files, _parallel_files(
+            lambda f: os.path.getsize(os.path.join(mt.data_dir, f)), rel_files
+        ))),
+        sort_orders={f: claim for f in rel_files} if claim else None,
+        blooms=blooms,
+        schema=T.StructType(
+            [f for f in df.schema.fields if f.name not in set(parts)]
+        ),
+    )
+    return rel_files if committed else None
+
+
 def write_batch_manifest(
     df: DataFrame,
     table_path: str,
@@ -997,23 +1050,20 @@ def write_batch_manifest(
     count (each attempt's names carry a fresh attempt id; only the
     committing attempt's files enter the manifest; the rest are
     never-referenced orphans, reclaimed by maintenance.cleanup_orphans
-    after its grace window). Returns True if this call committed.
+    after its grace window). Returns True if this call committed; a
+    batch id already committed returns False without running a Spark
+    job.
 
-    ``bloom_cols`` builds per-file bloom sidecars for those columns at
-    commit (storage/blooms.py) and records the column list as a table
-    property so the compactor keeps replacement files probe-able.
-    ``bucket_by=(col, n)`` adds the hash-bucket hive partition column
-    (the Iceberg bucket-transform analog) and records the bucket spec
-    in table properties — together the point-lookup pruning substrate
-    :meth:`ManifestTable.pruned_files_point` reads. The commit records
-    the written schema (the partition columns stay path-derived)."""
-    from .blooms import bucket_expr, bucket_part_name, collect_file_blooms
+    ``bloom_cols`` declares per-file bloom sidecar columns as a table
+    property (``bloom.cols``), so this and every later producer builds
+    sidecars for its files (storage/blooms.py). ``bucket_by=(col, n)``
+    adds the hash-bucket hive partition column (the Iceberg
+    bucket-transform analog) and records the bucket spec in table
+    properties — together the point-lookup pruning substrate
+    :meth:`ManifestTable.pruned_files_point` reads. The write and commit
+    are :func:`_write_commit`'s."""
+    from .blooms import bucket_expr, bucket_part_name
 
-    mt = ManifestTable(table_path)
-    if batch_id in mt.load_manifest()["batches"]:
-        return False  # no Spark job ran: callers observing the write rely on it
-    attempt = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_path, "_staging", f"batch-{batch_id}-{attempt}")
     properties: dict[str, str] = {}
     if bucket_by is not None:
         bcol, n = bucket_by
@@ -1025,32 +1075,10 @@ def write_batch_manifest(
         })
     if bloom_cols:
         properties["bloom.cols"] = ",".join(bloom_cols)
-    sort_cols = [c for c in SORT_ORDERS.get(table, []) if c in df.columns]
-    sorted_df = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-    writer = sorted_df.write.mode("overwrite").partitionBy(*partition_cols)
-    for k, v in BLOOM_WRITE_OPTIONS.items():
-        writer = writer.option(k, v)
-    with stats_visible_writes(df.sparkSession):
-        writer.parquet(staging)
-    rel_files = _stage_into_data(staging, mt.data_dir, f"batch-{batch_id}-{attempt}")
-    stats = collect_file_stats(mt.data_dir, rel_files, stats_cols) if stats_cols else None
-    blooms = (
-        collect_file_blooms(table_path, rel_files, bloom_cols)
-        if bloom_cols else None
-    )
-    return mt.commit(
-        rel_files,
-        batch_id=batch_id,
-        stats=stats,
-        blooms=blooms,
-        properties=properties or None,
-        schema=file_schema(df, partition_cols),
-        # honest by construction: this writer just sorted each file by
-        # sort_cols (within the partitionBy groups), so it may declare
-        # exactly that — and declares nothing when the table has no
-        # configured sort order
-        **lifecycle_metadata(mt.data_dir, rel_files, sort_cols),
-    )
+    return _write_commit(
+        df, ManifestTable(table_path), f"batch-{batch_id}", partition_cols,
+        table, stats_cols, batch_id=batch_id, properties=properties or None,
+    ) is not None
 
 
 def compact_partition_manifest(
@@ -1059,16 +1087,15 @@ def compact_partition_manifest(
     table: str,
     day: str,
     hour: int,
-    target_files: int = 1,
     max_input_bytes: int | None = None,
 ) -> int:
     """Compact one (day, hour) partition under snapshot isolation: write
-    the coalesced+sorted replacement files, then ONE manifest commit
-    that swaps them in. Concurrent readers on the previous version keep
-    reading the old files (deleted only by expire_snapshots); there is
-    no window where the partition is absent. Returns the number of
-    replacement files committed, 0 when there was nothing to do OR the
-    commit aborted (see below).
+    one sorted replacement file (one per bucket on a ``bucket_by``
+    table), then ONE manifest commit that swaps them in. Concurrent
+    readers on the previous version keep reading the old files (deleted
+    only by expire_snapshots); there is no window where the partition is
+    absent. Returns the number of replacement files committed, 0 when
+    there was nothing to do OR the commit aborted (see below).
 
     Input selection is manifest-derived (recorded partition structs,
     hive-path fallback), never a path-prefix string match — the
@@ -1102,52 +1129,20 @@ def compact_partition_manifest(
     if not old:
         return 0
     df = mt.scan(spark, m, [os.path.join(mt.data_dir, f) for f in old])
-    sort_cols = [c for c in SORT_ORDERS.get(table, ["timestamp"]) if c in df.columns]
     # a bucketed table keeps its layout: the replacement files land in
     # the hour's bucket directories like every other producer's, so the
     # hive layout stays uniform and bucket pruning still applies
     bucket = m.get("props", {}).get("bucket.part")
-    parts = [bucket] if bucket in df.columns else []
-    attempt = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_path, "_staging", f"compact-{day}-{hour}-{attempt}")
-    # one output file needs no shuffle: the one task that writes it
-    # reads the inputs itself instead of a shuffle of them
-    out = df.drop("date_day", "hour")
-    out = out.coalesce(1) if target_files == 1 else out.repartition(target_files)
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts)
-    for k, v in BLOOM_WRITE_OPTIONS.items():
-        writer = writer.option(k, v)
-    with stats_visible_writes(spark):
-        writer.parquet(staging)
-    # staged files land inside the existing partition directory
-    hour_dir = os.path.join(f"date_day={day}", f"hour={hour}")
-    rel_files = [
-        os.path.join(hour_dir, f)
-        for f in _stage_into_data(
-            staging, os.path.join(mt.data_dir, hour_dir), f"compact-{attempt}"
-        )
-    ]
-    stats = collect_file_stats(mt.data_dir, rel_files, ("timestamp",))
-    # keep replacement files probe-able: when the table declares bloom
-    # columns, the compactor (a producer like any other) rebuilds their
-    # sidecars for the files it writes
+    parts = ["date_day", "hour", *([bucket] if bucket in df.columns else [])]
     inputs = set(old)
-    committed = mt.commit(
-        rel_files,
+    # one output file per directory needs no shuffle: the one task that
+    # writes them reads the inputs itself
+    files = _write_commit(
+        df.coalesce(1), mt, "compact", parts, table, ("timestamp",),
         remove_files=old,
-        stats=stats,
-        blooms=_declared_blooms(table_path, m, rel_files),
-        schema=file_schema(out, parts),
         precondition=lambda cur: inputs.issubset(cur["files"]),
-        # partition identity {date_day, hour[, bucket]} from the layout
-        # this rewrite just produced
-        **lifecycle_metadata(mt.data_dir, rel_files, sort_cols),
     )
-    return len(rel_files) if committed else 0
+    return len(files or ())
 
 
 def zorder_compact_table(
@@ -1199,25 +1194,14 @@ def zorder_compact_table(
             col = F.unix_micros(F.col(c)) if dtype == "timestamp" else F.col(c)
             lo, hi = df.agg(F.min(col), F.max(col)).collect()[0]
             codes.append(linear_code(col, lo, hi))
-    attempt = uuid.uuid4().hex[:8]
-    staging = os.path.join(table_path, "_staging", f"zorder-{attempt}")
-    out = zorder_rewrite(df, codes, n_files)
-    with stats_visible_writes(spark):
-        out.write.mode("overwrite").parquet(staging)
-    rel_files = _stage_into_data(staging, mt.data_dir, f"zorder-{attempt}")
-    all_stats_cols = tuple(dict.fromkeys((*cols, *stats_cols)))
-    stats = collect_file_stats(mt.data_dir, rel_files, all_stats_cols)
     inputs = set(old)
-    committed = mt.commit(
-        rel_files,
+    # no table order: z-order is a space-filling clustering, not a
+    # lexicographic sort on any declared column list, so it claims none
+    files = _write_commit(
+        zorder_rewrite(df, codes, n_files), mt, "zorder", (), None,
+        tuple(dict.fromkeys((*cols, *stats_cols))),
         remove_files=old,
-        stats=stats,
-        blooms=_declared_blooms(table_path, m, rel_files),
         properties={"zorder.cols": ",".join(cols)},
-        schema=out.schema,
         precondition=lambda cur: inputs.issubset(cur["files"]),
-        # no sort claim: z-order is a space-filling clustering, not a
-        # lexicographic sort on any declared column list (honesty rule)
-        **lifecycle_metadata(mt.data_dir, rel_files, None),
     )
-    return len(rel_files) if committed else 0
+    return len(files or ())

@@ -206,7 +206,7 @@ class AggregateQuery:
 
 _AGG_RE = re.compile(
     r"^(\{[^{}]*\})\s*\|\s*(count|sum|avg|min|max)\(\s*([A-Za-z_][\w.]*)?\s*\)"
-    r"\s*(>=|<=|!=|=|>|<)\s*(-?[0-9]+(?:\.[0-9]+)?)$"
+    r"\s*(>=|<=|!=|=|>|<)\s*(-?[0-9]+(?:\.[0-9]+)?(?:ns|us|µs|ms|s|m|h)?)$"
 )
 
 
@@ -239,7 +239,8 @@ def parse_traceql_expr(
     :func:`parse_traceql` — widened grammar, or a Disjunction for
     top-level ``||``), one structural ``{A} OP {B}`` with OP in
     ``>``/``>>``/``~``, or one spanset aggregate filter
-    ``{A} | agg(col) op n``."""
+    ``{A} | agg(col) op n`` (``n`` a number or a duration such as
+    ``1ms``)."""
     m = _STRUCT_RE.match(q.strip())
     if m is not None:
         return StructuralQuery(m.group(2), _conj(m.group(1)), _conj(m.group(3)))
@@ -261,7 +262,10 @@ def parse_traceql_expr(
             a.group(2),
             col,
             a.group(4),
-            float(a.group(5)),
+            # a unit-suffixed threshold (``avg(duration) > 1ms``) is a
+            # duration, compared in nanoseconds like duration_nanos
+            _parse_duration_nanos(v) if (v := a.group(5))[-1].isalpha()
+            else float(v),
         )
     return parse_traceql(q)
 

@@ -302,6 +302,90 @@ def test_declared_ordering_classification_and_convergence(spark, tmp_path):
     assert mt.declared_ordering(["value"]) == "none"
 
 
+def _claimed_files_read_back_sorted(table: str) -> int:
+    """Every live file with a ``sorts`` claim holds its rows in that
+    order; returns how many claimed files were checked."""
+    import pyarrow.parquet as pq
+
+    mt = ManifestTable(table)
+    m = mt.load_manifest()
+    sorts = m.get("sorts") or {}
+    checked = 0
+    for f in m["files"]:
+        claim = sorts.get(f)
+        if claim is None:
+            continue
+        rows = pq.ParquetFile(os.path.join(mt.data_dir, f)).read(
+            columns=claim
+        ).to_pylist()
+        keys = [tuple(r[c] for c in claim) for r in rows]
+        assert keys == sorted(keys), (f, claim)
+        checked += 1
+    return checked
+
+
+def test_sort_claims_hold_on_disk(spark, tmp_path):
+    """Declared ⇒ physically true per file, for every producer that
+    claims: the batch sink (partition columns computed from the
+    timestamp, as ingest derives them, and literal, as ``_rows`` builds
+    them), the hot flush, and a ``bucket_by`` table before and after
+    partition compaction. Input rows arrive shuffled, several per
+    timestamp, so a dropped sort shows on every claimed column."""
+    from signaldb_spark.storage.hot import HotStore, flush_hot
+
+    def shuffled(df):
+        return df.withColumn(
+            "timestamp",
+            F.lit(dt.datetime(2024, 1, 1, 3)).cast("timestamp")
+            + F.make_interval(secs=((F.col("id") * 7919) % 97).cast("double")),
+        ).select(
+            "*",
+            F.concat(F.lit("svc-"), (F.col("id") % 5).cast("string"))
+            .alias("service_name"),
+            F.element_at(F.array(F.lit("info"), F.lit("warn")),
+                         (F.col("id") % 2 + 1).cast("int")).alias("severity_text"),
+        ).orderBy(F.rand(7)).repartition(3)
+
+    computed = str(tmp_path / "computed")
+    df = shuffled(_rows(spark, 400)).withColumn(
+        "timestamp", F.col("timestamp") + F.make_interval(
+            mins=((F.col("id") % 3) * 40).cast("int"))
+    )
+    assert write_batch_manifest(
+        df.withColumn("date_day", F.to_date("timestamp"))
+        .withColumn("hour", F.hour("timestamp")),
+        computed, "logs", batch_id=0,
+    )
+    assert len(list_hour_partitions(computed)) > 1
+
+    literal = str(tmp_path / "literal")
+    assert write_batch_manifest(shuffled(_rows(spark, 400)), literal, "logs",
+                                batch_id=0)
+
+    hot = str(tmp_path / "hot")
+    store = HotStore(hot)
+    for b in range(2):
+        store.ack(shuffled(_rows(spark, 200, start_id=200 * b)))
+    assert flush_hot(spark, hot, "logs") == 2
+
+    bucketed = str(tmp_path / "bucketed")
+    for b in range(3):
+        assert write_batch_manifest(
+            shuffled(_rows(spark, 200, start_id=200 * b))
+            .withColumn("trace_id", F.format_string("%032x", "id")),
+            bucketed, "logs", batch_id=b, bucket_by=("trace_id", 4),
+        )
+    checked = {t: _claimed_files_read_back_sorted(t)
+               for t in (computed, literal, hot, bucketed)}
+    assert compact_partition_manifest(
+        spark, bucketed, "logs", "2024-01-01", 3) == 4
+    checked["compacted"] = _claimed_files_read_back_sorted(bucketed)
+    assert all(checked.values()), checked
+    for t in (computed, literal, hot, bucketed):
+        assert ManifestTable(t).declared_ordering(
+            ["timestamp", "service_name", "severity_text"]) == "exact", t
+
+
 def test_retention_replans_when_compaction_swapped_files(
     spark, tmp_path, monkeypatch
 ):

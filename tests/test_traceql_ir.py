@@ -920,6 +920,28 @@ def test_spanset_aggregate_routes_fields(spark, tree_spans):
     assert {(r.trace_id, r.span_id) for r in got2} == {("t2", 8)}
 
 
+def test_spanset_aggregate_duration_threshold(spark, tree_spans):
+    """A unit-suffixed threshold is a duration in nanoseconds:
+    `avg(duration) > 5ms` is `avg(duration) > 5000000`."""
+    from signaldb_spark.traceql.parser import parse_traceql_expr
+    from signaldb_spark.traceql.structural import aggregate_search
+
+    for q, threshold in (
+        ("{ } | avg(duration) > 1ms", 1e6),
+        ('{ .service.name = "api" } | max(duration) <= 1.5s', 1.5e9),
+        ("{ } | min(duration) >= 250us", 250e3),
+    ):
+        aq = parse_traceql_expr(q)
+        assert (aq.agg_col, aq.threshold) == ("duration", threshold), q
+    df = tree_spans.withColumn(
+        "duration_nanos", F.col("span_id") * F.lit(1_000_000)
+    )
+    aq = parse_traceql_expr('{ name = "db" } | avg(duration) > 5ms')
+    # db spans: ids 4 (4ms) and 8 (8ms); per-trace avg: t1=4ms no, t2=8ms yes
+    assert {(r.trace_id, r.span_id)
+            for r in aggregate_search(df, aq).collect()} == {("t2", 8)}
+
+
 def test_structural_search_applies_window_and_limit(spark):
     """search_traceql applies start/end and the trace limit to
     structural queries — previously all history returned untruncated."""

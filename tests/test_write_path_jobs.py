@@ -28,6 +28,7 @@ from signaldb_spark.schemas.signal_schemas import LOGS
 from signaldb_spark.storage.manifest import (
     SMALL_SCAN_BYTES,
     ManifestTable,
+    compact_partition_manifest,
     write_batch_manifest,
 )
 from signaldb_spark.streaming.ingest import (
@@ -317,6 +318,25 @@ def test_partly_committed_replay_probes_the_undecodable_count(spark, tmp_path):
     dead = read_dead_letters(spark, base, "acme", "prod", "metrics")
     assert [r.payload for r in dead.collect()] == ["garbage {"]
     assert optional_table(spark, base, "acme", "prod", "metrics_sum").count() == 2
+
+
+def test_one_partition_compaction_runs_one_job(spark, tmp_path):
+    """Compacting one (day, hour) partition runs one Spark job: the
+    recorded schema types its input relation (no inference job) and the
+    one task that writes the replacement file reads the inputs itself
+    (no shuffle)."""
+    path = str(tmp_path / "logs")
+    logs = spark.createDataFrame(gen_logs(), LOGS)
+    for b in range(3):
+        assert write_batch_manifest(logs.repartition(2), path, "logs", batch_id=b)
+    mt = ManifestTable(path)
+    part = mt.file_partitions()[mt.load_manifest()["files"][0]]
+    day, hour = part["date_day"], part["hour"]
+    before = mt.read(spark).count()
+    with _job_group(spark, "compact-one-partition") as jobs:
+        assert compact_partition_manifest(spark, path, "logs", day, hour) == 1
+        assert jobs() == 1
+    assert mt.read(spark).count() == before
 
 
 def _formatted_plan(df) -> str:
