@@ -21,9 +21,10 @@ under the DuckDB oracle:
   the determinism contract a partition-order-dependent cut would break.
 
 Fixture: a manifest-backed traces table (write_batch_manifest with
-bloom_cols + bucket_by) built 1:1 from day-1 events — 24 hour dirs x
-buckets, one file each, so sidecar count stays bounded at every SF —
-and a tie-heavy logs table whose timestamps are truncated to the hour.
+bucket_by; trace_id sidecars come with the table kind) built 1:1 from
+day-1 events — 24 hour dirs x buckets, one file each, so sidecar count
+stays bounded at every SF — and a tie-heavy logs table whose timestamps
+are truncated to the hour.
 """
 
 from __future__ import annotations
@@ -103,8 +104,7 @@ def _manifest_traces_base(spark, sf_dir: str) -> str:
     )
     ok = write_batch_manifest(
         tr, signal_table_path(base, "acme", "prod", "traces"), "traces",
-        batch_id=1, bloom_cols=("trace_id",),
-        bucket_by=("trace_id", _BUCKETS),
+        batch_id=1, bucket_by=("trace_id", _BUCKETS),
     )
     assert ok, "fixture commit failed"
     _R18_CACHE[key] = base
@@ -527,9 +527,7 @@ def q_point_lookup_after_compaction(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     tr = _traces_frame_day1(e).repartition(F.col("date_day"), F.col("hour"))
     table = signal_table_path(base, "acme", "prod", "traces")
-    assert write_batch_manifest(
-        tr, table, "traces", batch_id=1, bloom_cols=("trace_id",)
-    )
+    assert write_batch_manifest(tr, table, "traces", batch_id=1)
     day = "2024-01-01"
     for hour in (0, 1):
         compact_partition_manifest(spark, table, "traces", day, hour)

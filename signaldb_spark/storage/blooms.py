@@ -4,11 +4,12 @@ The manifest already prunes files by per-column [min, max] stats
 (manifest.py collect_file_stats), which works for time predicates but
 never for point lookups on high-cardinality random identifiers — every
 file's [min, max] over hex trace ids spans essentially the whole key
-space, so a trace-by-id query plans every file in the time window. The
-parquet-level bloom filters the writers enable
-(storage/manifest.BLOOM_WRITE_OPTIONS) only help AFTER a file is
-opened: the scan still issues one footer + bloom-page read per file,
-O(files) object-store round trips at 100 TB.
+space, so a trace-by-id query plans every file in the time window.
+Parquet-level row-group filtering (the dictionary filter, or the
+trace_id bloom of storage/manifest.BLOOM_WRITE_OPTIONS, which
+parquet-mr writes only for a chunk that is not dictionary-encoded) only
+helps AFTER a file is opened: the scan still issues one footer read per
+file, O(files) object-store round trips at 100 TB.
 
 This module adds the two standard DRIVER-SIDE file-pruning layers for
 `WHERE key = 'x'` (the reference's hottest lookup — trace by id,
@@ -16,7 +17,9 @@ trace.rs:111-170 — where its Iceberg layout leans on partition + stats
 pruning only):
 
 - **Bloom sidecars** (the Iceberg puffin-blob analog): at commit time
-  the producer builds one small bloom per (file, column) from the
+  the producer builds one small bloom per (file, column) — for the
+  columns storage/manifest.POINT_LOOKUP_COLS declares for the table
+  kind, recorded in the ``bloom.cols`` table property — from the
   column's distinct values and stores it as an immutable sidecar blob
   under ``table/_blooms/``; the manifest entry records (m, k, ndv,
   sidecar path). A point lookup probes candidates' sidecars and plans

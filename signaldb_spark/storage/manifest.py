@@ -50,16 +50,28 @@ HOT_DIR = "hot"
 # A query relation whose files' recorded bytes sum to at most this runs
 # as ONE partition (ManifestTable.query_scan): below it, Spark's
 # per-exchange job and stage overhead costs more than a parallel scan
-# saves, even for a query that reads every column. Measured on 4 cores
-# (docs/bench_adjudications.md, "Small inputs").
+# saves, even for a query that reads every column. Recorded bytes are
+# the files' on-disk sizes: column data and footer, plus the trace_id
+# bloom where one is written (BLOOM_WRITE_OPTIONS); no 1 MiB span_id
+# bloom rides a file. Measured on 4 cores over tables whose files had
+# no span_id column, so no such bloom either (docs/bench_adjudications.md,
+# "Small inputs").
 SMALL_SCAN_BYTES = 8 << 20
 
-# parquet bloom filters on point-lookup columns, mirroring the
-# reference's table properties (src/common/src/schema/mod.rs:69-105:
-# trace_id/span_id fpp 0.01) — config, not code (SURVEY §4.1)
+# parquet write options. The reference also blooms span_id
+# (src/common/src/schema/mod.rs:69-105, fpp 0.01) for its log<->trace
+# correlation lookup (logs by span id); this engine has no such lookup
+# and no route filters logs or traces by span_id, and a bloom with no
+# expected.ndv is written at parquet-mr's 1 MiB maximum into every file,
+# so span_id gets none. The trace_id bloom stays: parquet-mr writes none
+# for a chunk that stays dictionary-encoded (the spans of a trace share
+# its id, so do the logs of one request), and prunes row groups inside
+# large files; a chunk of distinct per-record ids falls back to plain
+# encoding and gets it at its expected.ndv size, 64 KiB. Which FILES a
+# trace-by-id lookup opens is decided before any file is opened, by the
+# sidecars of POINT_LOOKUP_COLS.
 BLOOM_WRITE_OPTIONS = {
     "parquet.bloom.filter.enabled#trace_id": "true",
-    "parquet.bloom.filter.enabled#span_id": "true",
     "parquet.bloom.filter.expected.ndv#trace_id": "50000",
     "parquet.compression": "zstd",
 }
@@ -71,6 +83,16 @@ SORT_ORDERS = {
     "metrics_gauge": ["timestamp", "metric_name", "service_name"],
     "metrics_sum": ["timestamp", "metric_name", "service_name"],
     "metrics_histogram": ["timestamp", "metric_name", "service_name"],
+}
+
+# Per-file bloom sidecar columns (storage/blooms.py) of each table kind:
+# the columns its point-lookup routes filter by equality (trace by id,
+# profiles by trace id; SignalDBAPI._manifest_point_scan). Every
+# producer that writes a table of one of these kinds builds the
+# sidecars and records the columns in the ``bloom.cols`` table property.
+POINT_LOOKUP_COLS = {
+    "traces": ("trace_id",),
+    "profiles": ("trace_id",),
 }
 
 # Write-side SQL confs every manifest-feeding parquet write must carry,
@@ -549,10 +571,12 @@ class ManifestTable:
     ) -> DataFrame | None:
         """Snapshot read planned through :meth:`pruned_files_point`,
         with the row-level equality applied (file pruning bounds files,
-        the filter bounds rows — parquet's own row-group blooms take it
-        from there inside each kept file). None when every file was
-        pruned or the table is empty — a definite miss answered with
-        ZERO data-file reads."""
+        the filter bounds rows — inside each kept file parquet's
+        dictionary filter prunes row groups, or the ``trace_id`` bloom of
+        a chunk that is not dictionary-encoded; no other column carries
+        a parquet bloom, see :data:`BLOOM_WRITE_OPTIONS`). None when
+        every file was pruned or the table is empty — a definite miss
+        answered with ZERO data-file reads."""
         from pyspark.sql import functions as F
 
         m = self.load_manifest(version)
@@ -982,8 +1006,10 @@ def _write_commit(
     - ``BLOOM_WRITE_OPTIONS`` and the write confs of
       :func:`stats_visible_writes`;
     - [min, max] stats for ``stats_cols`` from the footers;
-    - bloom sidecars for the columns the table declares (the
-      ``bloom.cols`` property, including one ``properties`` sets here);
+    - bloom sidecars for ``POINT_LOOKUP_COLS[table]``, recorded in
+      the ``bloom.cols`` table property; a producer without a table
+      kind (``table=None``, the z-order rewrite) builds them for the
+      columns that property already names;
     - partition identity parsed from the just-written hive layout,
       on-disk bytes, and the schema of the columns inside the files
       (the partition columns stay path-derived)."""
@@ -1002,6 +1028,10 @@ def _write_commit(
     with stats_visible_writes(df.sparkSession):
         writer.parquet(staging)
     rel_files = _stage_into_data(staging, mt.data_dir, attempt)
+    if table in POINT_LOOKUP_COLS:
+        properties = {
+            **(properties or {}), "bloom.cols": ",".join(POINT_LOOKUP_COLS[table]),
+        }
     declared = {**m.get("props", {}), **(properties or {})}.get("bloom.cols", "")
     bloom_cols = tuple(c for c in declared.split(",") if c)
     blooms = None
@@ -1042,7 +1072,6 @@ def write_batch_manifest(
     batch_id: int | str,
     partition_cols: tuple[str, ...] = ("date_day", "hour"),
     stats_cols: tuple[str, ...] = ("timestamp",),
-    bloom_cols: tuple[str, ...] = (),
     bucket_by: tuple[str, int] | None = None,
 ) -> bool:
     """foreachBatch sink with manifest commit: idempotent under
@@ -1054,12 +1083,10 @@ def write_batch_manifest(
     batch id already committed returns False without running a Spark
     job.
 
-    ``bloom_cols`` declares per-file bloom sidecar columns as a table
-    property (``bloom.cols``), so this and every later producer builds
-    sidecars for its files (storage/blooms.py). ``bucket_by=(col, n)``
-    adds the hash-bucket hive partition column (the Iceberg
-    bucket-transform analog) and records the bucket spec in table
-    properties — together the point-lookup pruning substrate
+    ``bucket_by=(col, n)`` adds the hash-bucket hive partition column
+    (the Iceberg bucket-transform analog) and records the bucket spec in
+    table properties; with the bloom sidecars of ``POINT_LOOKUP_COLS``
+    it is the point-lookup pruning substrate
     :meth:`ManifestTable.pruned_files_point` reads. The write and commit
     are :func:`_write_commit`'s."""
     from .blooms import bucket_expr, bucket_part_name
@@ -1073,8 +1100,6 @@ def write_batch_manifest(
         properties.update({
             "bucket.col": bcol, "bucket.n": str(n), "bucket.part": part,
         })
-    if bloom_cols:
-        properties["bloom.cols"] = ",".join(bloom_cols)
     return _write_commit(
         df, ManifestTable(table_path), f"batch-{batch_id}", partition_cols,
         table, stats_cols, batch_id=batch_id, properties=properties or None,

@@ -4,8 +4,12 @@ hierarchy assembly, tag discovery.
 Spark analog of src/querier/src/query/trace.rs. The projection sets
 mirror TRACE_LOOKUP_COLUMNS / TRACE_SEARCH_COLUMNS (trace.rs:560-594):
 point lookups never read the fat events/links/scope columns, so the
-parquet scan stays narrow (and the trace_id bloom filter prunes row
-groups — write-side config in sources).
+parquet scan stays narrow. Which files a trace-by-id lookup opens is
+decided from manifest evidence before the scan (the trace_id bloom
+sidecars of storage/blooms.py, via SignalDBAPI._manifest_point_scan);
+inside a kept file, parquet's dictionary filter prunes row groups, or
+the trace_id bloom of a chunk that is not dictionary-encoded
+(storage.manifest.BLOOM_WRITE_OPTIONS).
 """
 
 from __future__ import annotations
@@ -109,10 +113,14 @@ def predicate_expr(df: DataFrame, p: SpanPredicate):
 def find_by_id(traces: DataFrame, trace_id: str, start=None, end=None) -> DataFrame:
     """Point lookup with optional time hints; narrow projection.
 
-    With hour-partitioned storage the time hints prune partitions; the
-    trace_id equality consults the parquet bloom filter (trace.rs:111-170
-    replicates this with its dual-bound trick; our partition column
-    derives from the same timestamp so one bound suffices)."""
+    With hour-partitioned storage the time hints prune partitions
+    (trace.rs:111-170 does this with its dual-bound trick; our partition
+    column derives from the same timestamp so one bound suffices). The
+    trace_id equality is pushed into the scan, where parquet's
+    dictionary filter, or the trace_id bloom of a chunk that is not
+    dictionary-encoded, prunes row groups. When the caller planned
+    ``traces`` through the manifest (SignalDBAPI._manifest_point_scan)
+    it already holds only the files whose sidecars may hold the id."""
     df = ts_ops.time_window(traces, "timestamp", start, end)
     return df.filter(F.col("trace_id") == trace_id).select(
         *[c for c in TRACE_LOOKUP_COLUMNS if c in df.columns]

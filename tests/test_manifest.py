@@ -856,8 +856,7 @@ def test_point_lookup_bloom_and_bucket_pruning(spark, tmp_path):
     table = str(tmp_path / "t")
     df = _trace_rows(spark, 400).repartition("date_day", "hour")
     assert write_batch_manifest(
-        df, table, "traces", batch_id=1,
-        bloom_cols=("trace_id",), bucket_by=("trace_id", 8),
+        df, table, "traces", batch_id=1, bucket_by=("trace_id", 8),
     )
     mt = ManifestTable(table)
     n_files = len(mt.files())
@@ -895,10 +894,19 @@ def test_point_pruning_keeps_files_without_evidence(spark, tmp_path):
     """Files committed without blooms/bucket (older layout) are always
     kept — pruning is evidence-based, never a correctness filter."""
     table = str(tmp_path / "t")
-    assert write_batch_manifest(
-        _trace_rows(spark, 50).repartition(1), table, "traces", batch_id=1
-    )  # no bloom_cols, no bucket_by
     mt = ManifestTable(table)
+    # files of a producer that built no sidecars, committed with no
+    # bloom entry although the table property declares trace_id
+    _trace_rows(spark, 50).repartition(1).write.partitionBy(
+        "date_day", "hour"
+    ).parquet(mt.data_dir)
+    rel_files = [
+        os.path.relpath(os.path.join(r, n), mt.data_dir)
+        for r, _d, ns in os.walk(mt.data_dir) for n in ns
+        if n.endswith(".parquet")
+    ]
+    assert mt.commit(rel_files, batch_id=1, properties={"bloom.cols": "trace_id"})
+    assert rel_files and not mt.load_manifest()["blooms"]
     fs, pruned = mt.pruned_files_point("trace_id", _tid(7))
     assert len(fs) == len(mt.files()) and pruned == 0
     assert mt.point_lookup(spark, "trace_id", _tid(7)).count() == 1
@@ -916,9 +924,7 @@ def test_point_pruning_composes_with_time_window(spark, tmp_path):
     ).withColumn("date_day", F.to_date("timestamp")).withColumn(
         "hour", F.hour("timestamp")
     ).repartition("date_day", "hour")
-    assert write_batch_manifest(
-        rows, table, "traces", batch_id=1, bloom_cols=("trace_id",)
-    )
+    assert write_batch_manifest(rows, table, "traces", batch_id=1)
     mt = ManifestTable(table)
     import datetime as dt
 
@@ -941,9 +947,7 @@ def test_compaction_rebuilds_blooms_for_replacements(spark, tmp_path):
     entries drop, and point lookups stay exact across the rewrite."""
     table = str(tmp_path / "t")
     df = _trace_rows(spark, 200).repartition(4)
-    assert write_batch_manifest(
-        df, table, "traces", batch_id=1, bloom_cols=("trace_id",)
-    )
+    assert write_batch_manifest(df, table, "traces", batch_id=1)
     mt = ManifestTable(table)
     before = mt.point_lookup(spark, "trace_id", _tid(77)).collect()
     n = compact_partition_manifest(spark, table, "traces", "2024-01-01", 1)
@@ -999,7 +1003,7 @@ def test_expire_snapshots_reclaims_sidecars(spark, tmp_path):
     table = str(tmp_path / "t")
     assert write_batch_manifest(
         _trace_rows(spark, 100).repartition(2), table, "traces",
-        batch_id=1, bloom_cols=("trace_id",),
+        batch_id=1,
     )
     mt = ManifestTable(table)
     old_files = set(mt.load_manifest()["files"])
@@ -1026,7 +1030,7 @@ def test_flush_builds_blooms_for_declared_cols(spark, tmp_path):
     table = str(tmp_path / "t")
     assert write_batch_manifest(
         _trace_rows(spark, 60).repartition(1), table, "traces",
-        batch_id=1, bloom_cols=("trace_id",),
+        batch_id=1,
     )
     store = HotStore(table)
     store.ack(_trace_rows(spark, 40).withColumn(
@@ -1047,3 +1051,48 @@ def test_flush_builds_blooms_for_declared_cols(spark, tmp_path):
     fs, pruned = mt.pruned_files_point("trace_id", tid)
     assert pruned >= 1
     assert mt.point_lookup(spark, "trace_id", tid).count() == 1
+
+
+def test_small_signal_files_carry_no_fixed_size_bloom(spark, tmp_path):
+    """A ~100-row ``logs`` or ``traces`` batch writes files that are
+    column data plus a footer, not a bloom written at parquet's 1 MiB
+    maximum whatever the row count. The overhead is the file size minus
+    its column chunks (pyarrow exposes no bloom offset). The one parquet
+    bloom left, on ``trace_id``, is sized by its expected ndv (64 KiB)
+    and written only for a chunk that fell back from dictionary
+    encoding, as distinct per-record trace ids make it."""
+    import pyarrow.parquet as pq
+
+    from signaldb_spark.schemas.signal_schemas import LOGS, TRACES
+    from signaldb_spark.testing import gen_logs, gen_traces
+
+    for table, rows, schema in (
+        ("logs", gen_logs(100), LOGS),
+        ("traces", gen_traces(30), TRACES),
+    ):
+        path = str(tmp_path / table)
+        assert 90 <= len(rows) <= 150
+        assert write_batch_manifest(
+            spark.createDataFrame(rows, schema).repartition(1), path, table,
+            batch_id=1,
+        )
+        mt = ManifestTable(path)
+        for f in mt.files():
+            md = pq.ParquetFile(f).metadata
+            cols = [
+                md.row_group(g).column(c)
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+            ]
+            trace_id_blooms = sum(
+                c.path_in_schema == "trace_id" and not c.has_dictionary_page
+                for c in cols
+            )
+            overhead = os.path.getsize(f) - sum(
+                c.total_compressed_size for c in cols
+            )
+            if table == "traces":
+                # spans share their trace's id: the chunk keeps its
+                # dictionary, so no parquet bloom at all
+                assert trace_id_blooms == 0, f
+            assert overhead < (64 << 10) * (1 + trace_id_blooms), (table, f)
