@@ -1280,11 +1280,8 @@ class SignalDBAPI:
         None). dry_run reports what would be rewritten without touching
         bytes — the /compact/dry-run form."""
         from .catalog import signal_table_path
-        from .maintenance.jobs import (
-            compact_partition,
-            list_hour_partitions,
-            partition_file_counts,
-        )
+        from .maintenance.jobs import list_hour_partitions, partition_file_counts
+        from .storage.manifest import compact_partitions_manifest
 
         if hour is not None and day is None:
             # an hour without a day would silently compact the whole
@@ -1310,31 +1307,13 @@ class SignalDBAPI:
                                 "n_files": counts.get((d, h), 0),
                                 "would_compact": counts.get((d, h), 0) > 1})
         else:
-            # partitions rewrite independently (disjoint input files,
-            # input-scoped commit preconditions, CAS-retry manifest
-            # commits), so overlap them on a bounded pool — the
-            # reference's compactor parallelizes per partition the same
-            # way, and serially each rewrite's single-job tail idles
-            # the cluster (guide §2.6). Results keep partition order.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark.util import inheritable_thread_target
-
-            def rewrite(dh):
-                d, h = dh
-                return compact_partition(self.spark, path, table, d, h)
-
-            if len(parts) == 1:
-                afters = [rewrite(parts[0])]
-            else:
-                with ThreadPoolExecutor(max_workers=min(4, len(parts))) as pool:
-                    futs = [pool.submit(inheritable_thread_target(rewrite), p)
-                            for p in parts]
-                    afters = [f.result() for f in futs]
-            for (d, h), after in zip(parts, afters):
+            # one pass: one Spark job rewrites every partition, then one
+            # input-guarded manifest commit per partition
+            afters = compact_partitions_manifest(self.spark, path, table, parts)
+            for d, h in parts:
                 results.append({"date_day": d, "hour": h,
                                 "files_before": counts.get((d, h), 0),
-                                "files_after": after})
+                                "files_after": afters[d, h]})
         if not dry_run:
             # the session's frames pin the pre-compaction file list,
             # which expire_snapshots later deletes: re-pin them on the

@@ -122,8 +122,8 @@ def _ops_base(spark, sf_dir, cache: bool = True,
     file count is therefore count(DISTINCT event_id % 2) over that hour
     — a closed form the DuckDB oracle states from raw events.
     ``max_hour`` bounds the partition count for gates that rebuild the
-    fixture per call (the rewrite gate compacts serially per
-    partition, so 24 partitions x 2 runs would dominate its bench
+    fixture per call (the rewrite gate rebuilds and compacts it on
+    every run, so 24 partitions x 2 runs would dominate its bench
     wall-clock)."""
     from .storage.manifest import write_batch_manifest
 
@@ -235,8 +235,9 @@ def q_api_ops_compact_rewrite(spark, sf_dir):
     joined with post-compaction row counts + cents sums read back
     through the tenant session. Fresh fixture per call (compaction
     mutates it, and the bench runs every query twice), bounded to six
-    hour-partitions — the route compacts serially per partition,
-    exactly like the reference's per-partition rewriter."""
+    hour-partitions — the route compacts them in one pass: one Spark
+    job writes every partition's file, then one manifest commit per
+    partition, as the reference's per-partition rewriter commits."""
     from .api import SignalDBAPI
 
     base = _ops_base(spark, sf_dir, cache=False, max_hour=6)

@@ -4,8 +4,11 @@ Spark analogs of the reference's compactor
 (src/compactor/: planner.rs partition-close gating, rewriter.rs
 streaming two-pass rewrite with sort orders, retention/, attr_stats.rs,
 attr_promotion.rs). The reference streams partitions under a memory
-pool; Spark's sortWithinPartitions + write spills automatically, so a
-compaction is a three-line read→sort→write job per closed partition.
+pool and rewrites one partition per job; Spark's sortWithinPartitions +
+partitioned write spills automatically and writes many partition
+directories at once, so a compaction pass is ONE read→sort→write job
+over every partition it leased, followed by one manifest commit per
+partition.
 
 Every job here maintains manifest-committed tables only
 (storage.manifest). A bare parquet directory is read-only input: the
@@ -25,6 +28,7 @@ from pyspark.sql import functions as F
 from ..storage.manifest import (
     ManifestTable,
     compact_partition_manifest,
+    compact_partitions_manifest,
     manifest_table,
 )
 
@@ -126,10 +130,12 @@ def compact_partition(
     (rewriter.rs:591-616), keeping bloom filters. Returns the number of
     files after rewrite.
 
-    The rewrite is snapshot-isolated: ONE manifest commit swaps the
+    This is the one-partition pass of
+    storage.manifest.compact_partitions_manifest, the same pass
+    :func:`compaction_cycle` and the ops-compact route run over many
+    partitions: snapshot-isolated, ONE manifest commit swaps the
     replacement files in, concurrent readers keep their snapshot, and
-    there is no window without the partition's data
-    (storage.manifest.compact_partition_manifest). A bare parquet
+    there is no window without the partition's data. A bare parquet
     directory raises ``ValueError``."""
     _manifest_or_raise(table_path, "compact_partition")
     return compact_partition_manifest(spark, table_path, table, day, hour)
@@ -150,26 +156,30 @@ def compaction_cycle(
 ) -> list[tuple[str, int]]:
     """One compactor pass over a table, safe to run from many instances
     at once (the reference's run loop: planner → lease → rewriter,
-    src/compactor/src/lib.rs): enumerate closed partitions, take the
-    per-partition lease, compact, release. Partitions whose lease is
-    held by a live peer are skipped — duplicate work is prevented, not
-    just tolerated. Returns the partitions this instance compacted.
+    src/compactor/src/lib.rs): enumerate closed partitions, take every
+    per-partition lease it can get, rewrite all the leased partitions
+    in ONE Spark job with one manifest commit per partition
+    (storage.manifest.compact_partitions_manifest), and release every
+    lease, whether the pass succeeded or raised. Partitions whose lease
+    is held by a live peer are skipped — duplicate work is prevented,
+    not just tolerated. Returns the partitions whose commit landed; a
+    partition whose commit aborted (say, retention dropped its inputs
+    mid-pass) is left out.
 
     With ``target_bytes``, candidacy is size-aware (see
     :func:`compaction_candidates`): partitions with at least
     ``min_small_files`` files under target size qualify, worst
     fragmentation first, and the rewrite touches ONLY the small files
     (at-target files stay byte-identical — no rewrite amplification).
-    ``max_partitions_per_cycle`` bounds one pass's work — an enforced
-    budget, per the reference's D3 rule that every planning limit is
-    either enforced or deleted."""
+    ``max_partitions_per_cycle`` bounds the leases one pass takes — an
+    enforced budget, per the reference's D3 rule that every planning
+    limit is either enforced or deleted."""
     from ..catalog import signal_table_path
     from .lease import LeaseManager, partition_unit
 
     now = now or dt.datetime.now(dt.UTC).replace(tzinfo=None)
     manager = manager or LeaseManager(base)
     table_path = signal_table_path(base, tenant, dataset, table)
-    done: list[tuple[str, int]] = []
     if target_bytes is not None:
         candidates = compaction_candidates(table_path, target_bytes, min_small_files)
     else:
@@ -177,23 +187,30 @@ def compaction_cycle(
         # (small-file candidates only, src/compactor/src/planner.rs)
         counts = partition_file_counts(table_path)
         candidates = sorted(k for k, n in counts.items() if n > 1)
-    for day, hour in candidates:
-        if max_partitions_per_cycle is not None and len(done) >= max_partitions_per_cycle:
-            break
-        if not is_partition_closed(hour, dt.date.fromisoformat(day), lateness_seconds, now):
-            continue
-        lease = manager.try_acquire(partition_unit(tenant, dataset, table, day, hour))
-        if lease is None:
-            continue
-        try:
-            n = compact_partition_manifest(
-                spark, table_path, table, day, hour, max_input_bytes=target_bytes,
+    leases = {}
+    try:
+        for day, hour in candidates:
+            if (max_partitions_per_cycle is not None
+                    and len(leases) >= max_partitions_per_cycle):
+                break
+            if not is_partition_closed(
+                hour, dt.date.fromisoformat(day), lateness_seconds, now
+            ):
+                continue
+            lease = manager.try_acquire(
+                partition_unit(tenant, dataset, table, day, hour)
             )
-            if n:
-                done.append((day, hour))
-        finally:
+            if lease is not None:
+                leases[day, hour] = lease
+        if not leases:
+            return []
+        files = compact_partitions_manifest(
+            spark, table_path, table, list(leases), max_input_bytes=target_bytes,
+        )
+    finally:
+        for lease in leases.values():
             manager.release(lease)
-    return done
+    return [k for k in leases if files[k]]
 
 
 def maintenance_cycle(

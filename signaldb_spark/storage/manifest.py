@@ -39,6 +39,7 @@ import shutil
 import threading
 import uuid
 import weakref
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -135,9 +136,9 @@ def stats_visible_writes(spark: SparkSession):
 
     Reentrant and thread-safe via a per-session depth counter: every
     user of this guard pins the SAME conf values, so overlapping writes
-    (the parallel per-partition compactor, guide §2.6) simply share one
-    pin — the first entry records the caller's values, the last exit
-    restores them. A concurrent conf change made *outside* this guard
+    (concurrent sinks, a compaction pass and a route's rewrite on one
+    session) simply share one pin — the first entry records the
+    caller's values, the last exit restores them. A concurrent conf change made *outside* this guard
     during the pinned window is still the embedder's race to lose, as
     before."""
     with _WRITE_PIN_LOCK:
@@ -984,15 +985,28 @@ def _write_commit(
     remove_files: list[str] | tuple = (),
     properties: dict | None = None,
     precondition=None,
+    group_by: tuple[str, ...] = (),
 ) -> list[str] | None:
     """The one producer of manifest-table files: write ``df`` under
-    ``partitionBy(*partition_cols)``, move the files into ``data/`` under
-    ``prefix``-unique names, and make ONE commit that adds them (with
-    ``batch_id``, ``remove_files``, ``properties`` and ``precondition``
-    as :meth:`ManifestTable.commit` takes them). Returns the committed
-    files relative to ``data/``, or None when nothing committed: a
-    ``batch_id`` already in the lineage (checked before any Spark job
-    runs, so a replayed sink write runs none) or a false precondition.
+    ``partitionBy(*partition_cols)`` in one Spark job, move the files
+    into ``data/`` under ``prefix``-unique names, and commit them.
+    Returns the committed files relative to ``data/``, or None when
+    nothing committed: a ``batch_id`` already in the lineage (checked
+    before any Spark job runs, so a replayed sink write runs none) or
+    every commit aborted.
+
+    The output commits in groups, one :meth:`ManifestTable.commit` per
+    distinct value of the ``group_by`` partition columns (a compaction
+    pass groups by ``("date_day", "hour")``); with no ``group_by`` it is
+    ONE commit. A group's commit adds the written files of that value
+    and removes the ``remove_files`` whose partition identity has it,
+    with ``batch_id``, ``properties`` and ``precondition`` as
+    :meth:`ManifestTable.commit` takes them (a ``batch_id`` belongs to
+    one commit, so only single-group producers pass one). Each commit
+    lands only while the files it removes are all still live (the
+    reference's D2 rule): a retention drop of one hour aborts that
+    hour's commit alone, and its written files stay unreferenced
+    orphans for maintenance.cleanup_orphans' grace window.
 
     What every file gets, whoever produced it:
 
@@ -1034,35 +1048,64 @@ def _write_commit(
         }
     declared = {**m.get("props", {}), **(properties or {})}.get("bloom.cols", "")
     bloom_cols = tuple(c for c in declared.split(",") if c)
-    blooms = None
+    blooms = {}
     if bloom_cols:
         from .blooms import collect_file_blooms
 
         blooms = collect_file_blooms(mt.table_path, rel_files, bloom_cols)
-    committed = mt.commit(
-        rel_files,
-        remove_files=remove_files,
-        batch_id=batch_id,
-        stats=(
-            collect_file_stats(mt.data_dir, rel_files, stats_cols)
-            if stats_cols else None
-        ),
-        properties=properties,
-        precondition=precondition,
-        partitions={
-            f: p for f in rel_files
-            if (p := _parse_hive_partition(f)) is not None
-        },
-        sizes=dict(zip(rel_files, _parallel_files(
-            lambda f: os.path.getsize(os.path.join(mt.data_dir, f)), rel_files
-        ))),
-        sort_orders={f: claim for f in rel_files} if claim else None,
-        blooms=blooms,
-        schema=T.StructType(
-            [f for f in df.schema.fields if f.name not in set(parts)]
-        ),
+    stats = (
+        collect_file_stats(mt.data_dir, rel_files, stats_cols) if stats_cols else {}
     )
-    return rel_files if committed else None
+    idents = {
+        f: p for f in rel_files if (p := _parse_hive_partition(f)) is not None
+    }
+    sizes = dict(zip(rel_files, _parallel_files(
+        lambda f: os.path.getsize(os.path.join(mt.data_dir, f)), rel_files
+    )))
+    schema = T.StructType([f for f in df.schema.fields if f.name not in set(parts)])
+
+    # group -> (files it adds, files it removes)
+    groups: dict[tuple, tuple[list[str], list[str]]] = (
+        {} if group_by else {(): ([], [])}
+    )
+    # a removed file keeps its group even when it left the manifest
+    # since the caller chose it: its path still names its partition, so
+    # the group's commit sees it gone and aborts
+    recorded = m.get("parts") or {}
+    for f in rel_files:
+        key = tuple(idents.get(f, {}).get(c) for c in group_by)
+        groups.setdefault(key, ([], []))[0].append(f)
+    for f in remove_files:
+        ident = recorded.get(f) or _parse_hive_partition(f) or {}
+        key = tuple(ident.get(c) for c in group_by)
+        groups.setdefault(key, ([], []))[1].append(f)
+
+    def of(entries: dict, files: list[str]) -> dict:
+        return {f: entries[f] for f in files if f in entries}
+
+    def inputs_live(removes: list[str]):
+        need = set(removes)
+        return lambda cur: need.issubset(cur["files"]) and (
+            precondition is None or precondition(cur)
+        )
+
+    committed: list[str] | None = None
+    for adds, removes in groups.values():
+        if mt.commit(
+            adds,
+            remove_files=removes,
+            batch_id=batch_id,
+            stats=of(stats, adds),
+            properties=properties,
+            precondition=inputs_live(removes),
+            partitions=of(idents, adds),
+            sizes=of(sizes, adds),
+            sort_orders={f: claim for f in adds} if claim else None,
+            blooms=of(blooms, adds),
+            schema=schema,
+        ):
+            committed = (committed or []) + adds
+    return committed
 
 
 def write_batch_manifest(
@@ -1106,21 +1149,21 @@ def write_batch_manifest(
     ) is not None
 
 
-def compact_partition_manifest(
+def compact_partitions_manifest(
     spark: SparkSession,
     table_path: str,
     table: str,
-    day: str,
-    hour: int,
+    keys,
     max_input_bytes: int | None = None,
-) -> int:
-    """Compact one (day, hour) partition under snapshot isolation: write
-    one sorted replacement file (one per bucket on a ``bucket_by``
-    table), then ONE manifest commit that swaps them in. Concurrent
-    readers on the previous version keep reading the old files (deleted
-    only by expire_snapshots); there is no window where the partition is
-    absent. Returns the number of replacement files committed, 0 when
-    there was nothing to do OR the commit aborted (see below).
+) -> dict[tuple[str, int], int]:
+    """Compact the (day, hour) partitions ``keys`` in one pass under
+    snapshot isolation: ONE Spark job writes one sorted replacement file
+    per partition (one per bucket on a ``bucket_by`` table), then ONE
+    manifest commit per partition swaps its files in. Concurrent readers
+    on a previous version keep reading the old files (deleted only by
+    expire_snapshots); there is no window where a partition is absent.
+    Returns the number of replacement files committed per key, 0 when
+    the partition had nothing to do OR its commit aborted (see below).
 
     Input selection is manifest-derived (recorded partition structs,
     hive-path fallback), never a path-prefix string match — the
@@ -1131,43 +1174,71 @@ def compact_partition_manifest(
     and the reference's D3 candidacy spec scopes job inputs to small
     files for exactly this reason.
 
-    The commit carries an input-scoped precondition (the reference's D2
-    delta-commit conflict rule): it lands iff every input file is still
-    live in the current snapshot. Appends elsewhere — other partitions,
-    or NEW files in this partition committed while the rewrite ran —
-    never conflict (they're not in the input set and survive the
-    commit untouched). A retention drop of this partition DOES conflict
-    and aborts the commit, because re-adding the replacement files
-    would resurrect rows retention already dropped; the staged
-    replacement files are then unreferenced orphans for
-    maintenance.cleanup_orphans' grace window."""
-
+    Each partition's commit carries an input-scoped precondition (the
+    reference's D2 delta-commit conflict rule, :func:`_write_commit`):
+    it lands iff every input file of THAT partition is still live.
+    Appends elsewhere — other partitions, or NEW files in this partition
+    committed while the rewrite ran — never conflict (they're not in the
+    input set and survive the commit untouched). A retention drop of a
+    partition DOES conflict and aborts that partition's commit alone,
+    because re-adding its replacement files would resurrect rows
+    retention already dropped; those files are then unreferenced orphans
+    for maintenance.cleanup_orphans' grace window, and the other
+    partitions of the pass still land."""
+    keys = [(str(d), int(h)) for d, h in keys]
     mt = ManifestTable(table_path)
     m = mt.load_manifest()
-    old = [
-        f for f, p in mt.file_partitions(strict=True, manifest=m).items()
-        if p.get("date_day") == day and p.get("hour") == int(hour)
-    ]
-    if max_input_bytes is not None:
-        sizes = mt.file_sizes(manifest=m)
-        old = [f for f in old if sizes.get(f, 0) < max_input_bytes]
+    sizes = mt.file_sizes(manifest=m)
+    wanted = set(keys)
+    old = {
+        f: key for f, p in mt.file_partitions(strict=True, manifest=m).items()
+        if (key := (p.get("date_day"), p.get("hour"))) in wanted
+        and (max_input_bytes is None or sizes.get(f, 0) < max_input_bytes)
+    }
     if not old:
-        return 0
+        return dict.fromkeys(keys, 0)
     df = mt.scan(spark, m, [os.path.join(mt.data_dir, f) for f in old])
     # a bucketed table keeps its layout: the replacement files land in
     # the hour's bucket directories like every other producer's, so the
     # hive layout stays uniform and bucket pruning still applies
     bucket = m.get("props", {}).get("bucket.part")
     parts = ["date_day", "hour", *([bucket] if bucket in df.columns else [])]
-    inputs = set(old)
-    # one output file per directory needs no shuffle: the one task that
-    # writes them reads the inputs itself
+    # one output file per directory: a small pass (or one partition)
+    # needs no shuffle, since the one task that writes the files reads
+    # the inputs itself; a large one spreads whole directories over the
+    # cores, each directory's rows in one task
+    if (
+        len(set(old.values())) == 1
+        or sum(sizes.get(f, 0) for f in old) <= SMALL_SCAN_BYTES
+    ):
+        df = df.coalesce(1)
+    else:
+        df = df.repartition(*parts)
     files = _write_commit(
-        df.coalesce(1), mt, "compact", parts, table, ("timestamp",),
-        remove_files=old,
-        precondition=lambda cur: inputs.issubset(cur["files"]),
+        df, mt, "compact", parts, table, ("timestamp",),
+        remove_files=list(old), group_by=("date_day", "hour"),
     )
-    return len(files or ())
+    written = Counter(
+        (p.get("date_day"), p.get("hour"))
+        for f in files or () if (p := _parse_hive_partition(f))
+    )
+    return {k: written[k] for k in keys}
+
+
+def compact_partition_manifest(
+    spark: SparkSession,
+    table_path: str,
+    table: str,
+    day: str,
+    hour: int,
+    max_input_bytes: int | None = None,
+) -> int:
+    """Compact one (day, hour) partition: the one-key pass of
+    :func:`compact_partitions_manifest`, returning its replacement file
+    count (0 when there was nothing to do or the commit aborted)."""
+    return compact_partitions_manifest(
+        spark, table_path, table, [(day, hour)], max_input_bytes
+    )[(str(day), int(hour))]
 
 
 def zorder_compact_table(
@@ -1219,7 +1290,6 @@ def zorder_compact_table(
             col = F.unix_micros(F.col(c)) if dtype == "timestamp" else F.col(c)
             lo, hi = df.agg(F.min(col), F.max(col)).collect()[0]
             codes.append(linear_code(col, lo, hi))
-    inputs = set(old)
     # no table order: z-order is a space-filling clustering, not a
     # lexicographic sort on any declared column list, so it claims none
     files = _write_commit(
@@ -1227,6 +1297,5 @@ def zorder_compact_table(
         tuple(dict.fromkeys((*cols, *stats_cols))),
         remove_files=old,
         properties={"zorder.cols": ",".join(cols)},
-        precondition=lambda cur: inputs.issubset(cur["files"]),
     )
     return len(files or ())

@@ -37,6 +37,7 @@ from signaldb_spark.storage.manifest import (
     ManifestTable,
     UnclassifiableFile,
     compact_partition_manifest,
+    compact_partitions_manifest,
     write_batch_manifest,
 )
 
@@ -87,6 +88,80 @@ def test_compaction_aborts_when_retention_dropped_its_inputs(
     assert mt.read(spark).count() == 10
     # the staged replacement files are never-referenced orphans
     assert any("compact-" in f for f in mt.find_orphans())
+
+
+def _two_hour_table(spark, base):
+    """A ``logs`` table with hours 3 and 4 of 2024-01-01, three files
+    each (20 rows per file); returns its path."""
+    from signaldb_spark.catalog import signal_table_path
+
+    table = signal_table_path(base, "acme", "prod", "logs")
+    for b in range(3):
+        write_batch_manifest(
+            _rows(spark, 20, hour=3, start_id=20 * b)
+            .unionByName(_rows(spark, 20, hour=4, start_id=100 + 20 * b))
+            .repartition("hour"),
+            table, "logs", batch_id=b,
+        )
+    assert partition_file_counts(table) == {
+        ("2024-01-01", 3): 3, ("2024-01-01", 4): 3}
+    return table
+
+
+def test_pass_commits_each_hour_alone_when_retention_drops_one(
+    spark, tmp_path, monkeypatch
+):
+    """A two-hour pass writes both hours in one job, then retention
+    drops hour 3 before the pass commits. Only hour 3's commit aborts:
+    hour 4 lands, the cycle reports hour 4 alone, no dropped row comes
+    back, and hour 3's replacement file is a never-referenced orphan."""
+    base = str(tmp_path)
+    table = _two_hour_table(spark, base)
+    mt = ManifestTable(table)
+    orig = ManifestTable.commit
+
+    def racy(self, *a, **k):
+        monkeypatch.setattr(ManifestTable, "commit", orig)
+        assert apply_retention(table, keep={("2024-01-01", 4)}) == [
+            ("2024-01-01", 3)]
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(ManifestTable, "commit", racy)
+    done = compaction_cycle(spark, base, "acme", "prod", "logs",
+                            now=dt.datetime(2024, 1, 2))
+    assert done == [("2024-01-01", 4)]
+    assert partition_file_counts(table) == {("2024-01-01", 4): 1}
+    assert mt.read(spark).count() == 60
+    assert sorted(r.id for r in mt.read(spark).collect()) == list(range(100, 160))
+    orphans = mt.find_orphans()
+    assert any("compact-" in f and "hour=3" in f for f in orphans), orphans
+    assert not any("compact-" in f and "hour=4" in f for f in orphans), orphans
+
+
+def test_failed_pass_releases_every_lease(spark, tmp_path, monkeypatch):
+    """A pass whose write raises releases all its leases, so another
+    holder's next pass acquires and compacts every partition."""
+    from signaldb_spark.maintenance.lease import LeaseManager
+    from signaldb_spark.storage import manifest
+
+    base = str(tmp_path)
+    table = _two_hour_table(spark, base)
+    orig = manifest._write_commit
+
+    def broken(*a, **k):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(manifest, "_write_commit", broken)
+    with pytest.raises(RuntimeError, match="write failed"):
+        compaction_cycle(spark, base, "acme", "prod", "logs",
+                         now=dt.datetime(2024, 1, 2),
+                         manager=LeaseManager(base, holder_id="a"))
+    monkeypatch.setattr(manifest, "_write_commit", orig)
+    done = compaction_cycle(spark, base, "acme", "prod", "logs",
+                            now=dt.datetime(2024, 1, 2),
+                            manager=LeaseManager(base, holder_id="b"))
+    assert done == [("2024-01-01", 3), ("2024-01-01", 4)]
+    assert ManifestTable(table).read(spark).count() == 120
 
 
 def test_compaction_commit_tolerates_concurrent_appends(
@@ -329,8 +404,10 @@ def test_sort_claims_hold_on_disk(spark, tmp_path):
     claims: the batch sink (partition columns computed from the
     timestamp, as ingest derives them, and literal, as ``_rows`` builds
     them), the hot flush, and a ``bucket_by`` table before and after
-    partition compaction. Input rows arrive shuffled, several per
-    timestamp, so a dropped sort shows on every claimed column."""
+    partition compaction; then one compaction pass over three hours of
+    a plain and of a ``bucket_by`` table. Input rows arrive shuffled,
+    several per timestamp, so a dropped sort shows on every claimed
+    column."""
     from signaldb_spark.storage.hot import HotStore, flush_hot
 
     def shuffled(df):
@@ -375,15 +452,110 @@ def test_sort_claims_hold_on_disk(spark, tmp_path):
             .withColumn("trace_id", F.format_string("%032x", "id")),
             bucketed, "logs", batch_id=b, bucket_by=("trace_id", 4),
         )
+    def three_hours(df):
+        # hours 3-5 of the same day, each row's timestamp inside its hour
+        return df.withColumn("hour", (F.col("id") % 3 + 3).cast("int")).withColumn(
+            "timestamp",
+            F.col("timestamp") + F.make_interval(hours=F.col("hour") - 3))
+
+    multi = str(tmp_path / "multi")
+    multi_bucketed = str(tmp_path / "multi_bucketed")
+    for b in range(3):
+        rows = three_hours(shuffled(_rows(spark, 300, start_id=300 * b)))
+        assert write_batch_manifest(rows, multi, "logs", batch_id=b)
+        assert write_batch_manifest(
+            rows.withColumn("trace_id", F.format_string("%032x", "id")),
+            multi_bucketed, "logs", batch_id=b, bucket_by=("trace_id", 4),
+        )
     checked = {t: _claimed_files_read_back_sorted(t)
-               for t in (computed, literal, hot, bucketed)}
+               for t in (computed, literal, hot, bucketed, multi, multi_bucketed)}
     assert compact_partition_manifest(
         spark, bucketed, "logs", "2024-01-01", 3) == 4
     checked["compacted"] = _claimed_files_read_back_sorted(bucketed)
+    # one pass over three hours: one replacement file per hour, or per
+    # bucket directory of an hour
+    hours = [("2024-01-01", h) for h in (3, 4, 5)]
+    for t, per_hour in ((multi, 1), (multi_bucketed, 4)):
+        before = ManifestTable(t).read(spark).count()
+        assert compact_partitions_manifest(spark, t, "logs", hours) == dict.fromkeys(
+            hours, per_hour)
+        files = ManifestTable(t).load_manifest()["files"]
+        assert all("compact-" in f for f in files), files
+        dirs = [os.path.dirname(f) for f in files]
+        assert len(dirs) == len(set(dirs)) == 3 * per_hour, files
+        assert ManifestTable(t).read(spark).count() == before
+        checked[f"compacted {os.path.basename(t)}"] = (
+            _claimed_files_read_back_sorted(t))
     assert all(checked.values()), checked
-    for t in (computed, literal, hot, bucketed):
+    for t in (computed, literal, hot, bucketed, multi, multi_bucketed):
         assert ManifestTable(t).declared_ordering(
             ["timestamp", "service_name", "severity_text"]) == "exact", t
+
+
+def test_large_pass_shuffles_whole_directories(spark, tmp_path, monkeypatch):
+    """A pass whose recorded input bytes exceed ``SMALL_SCAN_BYTES``
+    spreads over the cores instead of coalescing to one task: its write
+    input plans ONE exchange, hashed on the partition columns (plus the
+    bucket column of a ``bucket_by`` table), so every hour or bucket
+    directory still gets exactly one file, read back in its claimed
+    order. At the threshold the pass stays one task with no exchange."""
+    import re
+
+    from signaldb_spark.storage import manifest
+
+    plans = []
+    orig = manifest._write_commit
+
+    def spy(df, *a, **k):
+        plans.append(df.sparkSession._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
+        return orig(df, *a, **k)
+
+    monkeypatch.setattr(manifest, "_write_commit", spy)
+    hours = [("2024-01-01", h) for h in (3, 4, 5)]
+
+    def table(name, total, bucket_by=None):
+        path = str(tmp_path / name)
+        for b in range(3):
+            rows = _rows(spark, 300, start_id=300 * b).withColumn(
+                "hour", (F.col("id") % 3 + 3).cast("int"))
+            if bucket_by:
+                rows = rows.withColumn("trace_id", F.format_string("%032x", "id"))
+            assert write_batch_manifest(rows, path, "logs", batch_id=b,
+                                        bucket_by=bucket_by)
+        mt = ManifestTable(path)
+        files = mt.load_manifest()["files"]
+        sizes = {f: total // len(files) for f in files}
+        sizes[files[0]] += total - sum(sizes.values())
+        mt.commit([], sizes=sizes)
+        plans.clear()
+        return path
+
+    for name, total, bucket_by, shuffled in (
+        ("at", manifest.SMALL_SCAN_BYTES, None, False),
+        ("above", manifest.SMALL_SCAN_BYTES + 1, None, True),
+        ("above_bucketed", manifest.SMALL_SCAN_BYTES + 1, ("trace_id", 4), True),
+    ):
+        path = table(name, total, bucket_by)
+        per_hour = 4 if bucket_by else 1
+        assert compact_partitions_manifest(spark, path, "logs", hours) == (
+            dict.fromkeys(hours, per_hour)), name
+        (plan,) = plans
+        exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
+        assert len(exchanges) == (1 if shuffled else 0), (name, plan)
+        if shuffled:
+            keys = re.search(r"hashpartitioning\(([^)]*)\)", plan).group(1)
+            cols = [re.sub(r"#\d+", "", c.strip()) for c in keys.split(",")]
+            assert cols[:-1] == ["date_day", "hour", *(
+                ["trace_id_bucket"] if bucket_by else [])], (name, keys)
+        else:
+            assert re.search(r"^Coalesce \(\d+\)$", plan, re.M), plan
+        mt = ManifestTable(path)
+        files = mt.load_manifest()["files"]
+        dirs = [os.path.dirname(f) for f in files]
+        assert len(dirs) == len(set(dirs)) == 3 * per_hour, (name, files)
+        assert _claimed_files_read_back_sorted(path) == 3 * per_hour, name
+        assert mt.read(spark).count() == 900, name
 
 
 def test_retention_replans_when_compaction_swapped_files(

@@ -1,11 +1,14 @@
-"""Round-12 optimization pins: parallel per-partition compaction.
+"""Multi-partition compaction through the ops-compact route, and the
+shared write-conf guard.
 
-The ops-compact route overlaps independent partition rewrites on a
-bounded thread pool; manifest commits are CAS-retried and the
-write-conf pin is a shared per-session depth-counted guard. These
-tests pin (a) multi-threaded compaction lands every partition's
-rewrite with no lost rows and one file per partition, (b) the conf
-guard restores the caller's values only after the LAST writer exits.
+The route rewrites every partition it names in one compaction pass:
+one Spark job writes all the replacement files, then one CAS-retried
+manifest commit per partition swaps them in. The write-conf pin is a
+per-session depth-counted guard that concurrent writers share. These
+tests pin (a) a pass over several partitions lands every partition's
+rewrite with no lost rows and one file per partition, in partition
+order, (b) the conf guard restores the caller's values only after the
+LAST writer exits.
 """
 
 from __future__ import annotations

@@ -339,6 +339,80 @@ def test_one_partition_compaction_runs_one_job(spark, tmp_path):
     assert mt.read(spark).count() == before
 
 
+def _hourly_logs(spark, base, hours, files_per_hour):
+    """A ``logs`` table of ``hours`` closed hour partitions holding
+    ``files_per_hour`` files each (one sink batch writes one file per
+    hour); returns its path."""
+    from pyspark.sql import functions as F
+
+    path = signal_table_path(base, "acme", "prod", "logs")
+    for b in range(files_per_hour):
+        df = spark.range(hours * 10).select(
+            F.lit("2024-01-01").alias("date_day"),
+            (F.col("id") % hours).cast("int").alias("hour"),
+            F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("timestamp"),
+            (F.col("id") + b * 1000).alias("value"),
+        )
+        assert write_batch_manifest(
+            df.repartition("date_day", "hour"), path, "logs", batch_id=b
+        )
+    return path
+
+
+def test_compaction_pass_runs_one_job_for_all_its_partitions(spark, tmp_path):
+    """A compactor pass over three closed hours of three files each
+    writes all three replacement files in one Spark job and still
+    commits each hour on its own (three manifest versions)."""
+    from signaldb_spark.maintenance.jobs import compaction_cycle
+
+    base = str(tmp_path)
+    path = _hourly_logs(spark, base, hours=3, files_per_hour=3)
+    mt = ManifestTable(path)
+    before, version = mt.read(spark).count(), mt.current_version()
+    with _job_group(spark, "compaction-cycle") as jobs:
+        done = compaction_cycle(spark, base, "acme", "prod", "logs",
+                                now=dt.datetime(2024, 1, 2))
+        assert jobs() == 1
+    assert done == [("2024-01-01", h) for h in range(3)]
+    assert mt.current_version() == version + 3
+    assert len(mt.load_manifest()["files"]) == 3
+    assert mt.read(spark).count() == before
+
+
+def test_ops_compact_runs_one_job_for_all_its_partitions(spark, tmp_path):
+    """The ops-compact route rewrites four hours in one Spark job."""
+    from signaldb_spark.api import SignalDBAPI
+
+    base = str(tmp_path)
+    _hourly_logs(spark, base, hours=4, files_per_hour=3)
+    api = SignalDBAPI(spark, base, "acme", "prod")
+    with _job_group(spark, "ops-compact") as jobs:
+        out = api.ops_compact("logs", day="2024-01-01")
+        assert jobs() == 1
+    assert [(r["hour"], r["files_before"], r["files_after"])
+            for r in out["data"]] == [(h, 3, 1) for h in range(4)]
+
+
+def test_compaction_pass_over_33_inputs_also_runs_the_listing_job(
+    spark, tmp_path
+):
+    """Above ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32 paths) Spark lists the input files in a job of its own, so a
+    pass over 3 hours of 11 files runs two jobs: that listing job and
+    the write. The count is measured, not a target: it pins where the
+    listing job starts until the relation build stops launching it."""
+    from signaldb_spark.maintenance.jobs import compaction_cycle
+
+    base = str(tmp_path)
+    path = _hourly_logs(spark, base, hours=3, files_per_hour=11)
+    assert len(ManifestTable(path).load_manifest()["files"]) == 33
+    with _job_group(spark, "compaction-cycle-33") as jobs:
+        done = compaction_cycle(spark, base, "acme", "prod", "logs",
+                                now=dt.datetime(2024, 1, 2))
+        assert jobs() == 2
+    assert len(done) == 3
+
+
 def _formatted_plan(df) -> str:
     return df.sparkSession._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
