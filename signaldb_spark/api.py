@@ -365,13 +365,14 @@ class SignalDBAPI:
         if snap is None:
             return None
         mt, m = snap
+        cold = mt.read(self.spark, manifest=m)  # for its columns
+        if cold is None:
+            return None
         from .logql.lowering import _apply_output_stages, apply_selector
         from .maintenance import attr_demand
 
-        logs_cols = self.session.table("logs")
         attr_demand.record_logql_query(
-            sel, self.tenant, self.dataset,
-            logs_cols.columns if logs_cols is not None else [],
+            sel, self.tenant, self.dataset, cold.columns
         )
 
         def transform(df):
@@ -1033,22 +1034,30 @@ class SignalDBAPI:
             q = validate(req)
         except IRValidationError as e:
             return error_envelope(str(e), "bad_data")
-        if q.source == "metrics":
-            # metric-native sub-model (query-metrics-model proposal):
-            # the metric type routes to its typed at-rest table and the
-            # metric lowering owns the pipeline
-            from .ir.metrics import METRIC_TABLES
-            table_name = METRIC_TABLES[q.metric.metric_type]
-        else:
-            table_name = q.source
-        df = self.session.table(table_name)
-        if df is None:
-            return error_envelope(f"no {table_name} table for tenant", "not_found")
+        from .ir.metrics import METRIC_TABLES
+
+        # metric-native sub-model (query-metrics-model proposal): the
+        # metric type routes to its typed at-rest table and the metric
+        # lowering owns the pipeline. Source, binop and correlate tables
+        # resolve once per name, so two sides over one table read one
+        # snapshot.
+        names = [
+            METRIC_TABLES[q.metric.metric_type] if q.source == "metrics"
+            else q.source,
+            METRIC_TABLES[q.binop.rhs.metric_type]
+            if q.binop is not None else None,
+            q.correlate.with_table if q.correlate is not None else None,
+        ]
+        tables = {n: self.session.table(n) for n in names if n is not None}
+        for n in names:
+            if n is not None and tables[n] is None:
+                return error_envelope(f"no {n} table for tenant", "not_found")
+
         # timestamp-literal comparison (not a cast on the column) so the
         # window predicate pushes down to the scan; the SAME window
-        # applies to the correlate side (query.rs:152: every stage of
-        # the plan sees one absolute window — and an unwindowed build
-        # side would read every file ever committed at scale)
+        # applies to the binop and correlate sides (query.rs:152: every
+        # stage of the plan sees one absolute window — and an unwindowed
+        # build side would read every file ever committed at scale)
         def window(t):
             return t.filter(
                 F.col("timestamp").between(
@@ -1057,25 +1066,10 @@ class SignalDBAPI:
                 )
             ) if "timestamp" in t.columns else t
 
-        rhs_df = None
-        if q.binop is not None:
-            from .ir.metrics import METRIC_TABLES
-            rhs_table = METRIC_TABLES[q.binop.rhs.metric_type]
-            rhs_df = self.session.table(rhs_table)
-            if rhs_df is None:
-                return error_envelope(
-                    f"no {rhs_table} table for tenant", "not_found")
-            rhs_df = window(rhs_df)
-
-        correlate_df = None
-        if q.correlate is not None:
-            correlate_df = self.session.table(q.correlate.with_table)
-            if correlate_df is None:
-                return error_envelope(
-                    f"no {q.correlate.with_table} table for tenant", "not_found")
-            correlate_df = window(correlate_df)
+        df, rhs_df, correlate_df = (
+            window(tables[n]) if n is not None else None for n in names
+        )
         try:
-            df = window(df)
             if q.source == "metrics":
                 from .ir.metrics import lower_metrics
                 out = lower_metrics(df, q, rhs_df=rhs_df)
@@ -1314,11 +1308,6 @@ class SignalDBAPI:
                 results.append({"date_day": d, "hour": h,
                                 "files_before": counts.get((d, h), 0),
                                 "files_after": afters[d, h]})
-        if not dry_run:
-            # the session's frames pin the pre-compaction file list,
-            # which expire_snapshots later deletes: re-pin them on the
-            # new snapshot
-            self.session.refresh()
         return {"status": "success", "dry_run": dry_run, "data": results}
 
     def schemas_available(self) -> dict:

@@ -98,9 +98,7 @@ def _profiles_frame(e):
 
 def _api17(spark, sf_dir):
     """The round-16 signal base (logs/gauge/traces) extended with the
-    profiles table, then a fresh façade handle — profiles must exist
-    BEFORE SignalDBAPI construction (the tenant session discovers its
-    tables once, tenancy.py refresh)."""
+    profiles table, then a fresh façade handle."""
     base = _signal_base(spark, sf_dir)
     key = ("profiles", sf_dir)
     if key not in _R17_CACHE:

@@ -223,6 +223,8 @@ def optional_table(
     # hot-before-cold ordering lives in storage/hot.py). Readers see
     # exactly the committed file set plus published hot batches above
     # the committed watermark, never a half-finished writer's files.
+    # Every query resolves here (TenantSession.table) and reads the
+    # snapshot current at that call; the memo reuses its DataFrame.
     from .storage.hot import HOT_DIR, hybrid_read
     from .storage.manifest import bare_parquet_table, manifest_table
 

@@ -801,3 +801,89 @@ def test_loki_limit_clamps_to_max_entries(api):
     assert out["status"] == "success", out
     total = sum(len(s["values"]) for s in out["data"]["result"])
     assert 0 < total <= MAX_LOG_ENTRIES
+
+
+# ------------------------------------- reads follow the committed snapshot
+
+
+def _loki_count(api) -> int:
+    """Every fixture log row through the Loki metric path (the lowered
+    ``count_over_time`` over the whole 4 h window)."""
+    out = api.loki_query('sum(count_over_time({service_name=~".+"}[4h]))',
+                         END, lookback_s=4 * 3600)
+    assert out["status"] == "success", out
+    return int(float(out["data"]["result"][0]["value"][1]))
+
+
+def _sql_count(api, table: str) -> int:
+    out = api.sql(f"SELECT count(*) AS n FROM {table}")
+    assert out["status"] == "success", out
+    return out["data"][0]["n"]
+
+
+def test_routes_see_another_writers_append_without_refresh(spark, tmp_path):
+    """A live façade reads each table's current snapshot per call: rows
+    another writer commits after the façade was built are visible to
+    Loki, SQL and Tempo search without ``refresh()``, and trace search
+    and trace-by-id answer from the same snapshot."""
+    from collections import Counter
+
+    from signaldb_spark.catalog import signal_table_path
+    from signaldb_spark.storage.manifest import write_batch_manifest
+    from signaldb_spark.testing import LOGS, TRACES, gen_logs, gen_traces
+
+    base = str(tmp_path)
+    write_signal_tables(spark, base)
+    api = SignalDBAPI(spark, base, "acme", "prod")
+    assert _loki_count(api) == _sql_count(api, "logs") == 2000
+    q = '{ .service.name = "fresh-svc" }'
+    assert api.tempo_search(q=q, limit=50)["traces"] == []
+
+    write_batch_manifest(
+        spark.createDataFrame(gen_logs(500, seed=7), LOGS),
+        signal_table_path(base, "acme", "prod", "logs"), "logs", batch_id=1,
+    )
+    assert _loki_count(api) == _sql_count(api, "logs") == 2500
+    streams = api.loki_query_range('{service_name=~".+"}', START, END,
+                                   limit=5000)
+    assert sum(len(s["values"]) for s in streams["data"]["result"]) == 2500
+
+    rows = [r[:4] + ("fresh-svc",) + r[5:] for r in gen_traces(5, seed=7)]
+    write_batch_manifest(
+        spark.createDataFrame(rows, TRACES),
+        signal_table_path(base, "acme", "prod", "traces"), "traces",
+        batch_id=1,
+    )
+    spans = Counter(r[0] for r in rows)
+    found = api.tempo_search(q=q, limit=50)["traces"]
+    assert sorted(t["traceID"] for t in found) == sorted(spans)
+    for t in found:
+        trace = api.tempo_trace(t["traceID"])
+        assert trace["traceID"] == t["traceID"], trace
+        assert trace["spanCount"] == spans[t["traceID"]]
+
+
+def test_read_after_another_processes_maintenance_is_whole(spark, tmp_path):
+    """Three maintenance passes (default ``keep_snapshots=2``), each
+    followed by a commit, replace and then delete every file the façade
+    saw when it was built; its next read resolves the current snapshot
+    and counts exactly, instead of failing on a deleted file."""
+    from signaldb_spark.catalog import signal_table_path
+    from signaldb_spark.maintenance.jobs import maintenance_cycle
+    from signaldb_spark.storage.manifest import ManifestTable, write_batch_manifest
+    from signaldb_spark.testing import LOGS, gen_logs
+
+    base = str(tmp_path)
+    write_signal_tables(spark, base)
+    path = signal_table_path(base, "acme", "prod", "logs")
+    first = set(ManifestTable(path).files())
+    api = SignalDBAPI(spark, base, "acme", "prod")
+    assert _loki_count(api) == 2000
+    for i in range(3):
+        maintenance_cycle(spark, base, "acme", "prod", "logs")
+        write_batch_manifest(
+            spark.createDataFrame(gen_logs(100, seed=i), LOGS), path, "logs",
+            batch_id=f"later-{i}",
+        )
+    assert not first & set(ManifestTable(path).files())
+    assert _loki_count(api) == 2300

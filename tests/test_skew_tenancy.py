@@ -100,3 +100,94 @@ def test_no_cross_tenant_leak(spark, tmp_path_factory):
     assert n_a == 2000 and n_g < n_a
     # interleave again: a's view must re-pin to acme
     assert a.sql("SELECT count(*) AS n FROM logs").collect()[0].n == 2000
+
+
+def _signal_views(spark) -> list[str]:
+    """Temp views named after a signal table, bare or tenant-qualified."""
+    from signaldb_spark.catalog import SIGNAL_TABLES
+
+    return sorted(
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and any(t.name.endswith(s) for s in SIGNAL_TABLES)
+    )
+
+
+@pytest.fixture(scope="module")
+def acme_and_logs_only_globex(spark, tmp_path_factory):
+    """``acme`` holds every fixture table; ``globex`` holds only the
+    ``api`` service's logs (no traces table)."""
+    from signaldb_spark.catalog import optional_table, signal_table_path
+    from signaldb_spark.storage.manifest import write_batch_manifest
+
+    base = str(tmp_path_factory.mktemp("acme_globex"))
+    write_signal_tables(spark, base, tenant="acme", dataset="prod")
+    write_batch_manifest(
+        optional_table(spark, base, "acme", "prod", "logs")
+        .filter("service_name = 'api'"),
+        signal_table_path(base, "globex", "prod", "logs"), "logs",
+        batch_id="fixture",
+    )
+    return base
+
+
+def test_sql_never_reads_another_tenants_table(spark, acme_and_logs_only_globex):
+    """A tenant without a ``traces`` table gets TABLE_OR_VIEW_NOT_FOUND
+    for ``traces`` and for another tenant's qualified name, even right
+    after that tenant queried both; no signal view outlives a call."""
+    from signaldb_spark.api import SignalDBAPI
+
+    base = acme_and_logs_only_globex
+    acme = SignalDBAPI(spark, base, "acme", "prod")
+    globex = SignalDBAPI(spark, base, "globex", "prod")
+    n = acme.sql("SELECT count(*) AS n FROM traces")["data"][0]["n"]
+    assert n > 0
+    assert acme.sql(
+        "SELECT count(*) AS n FROM ACME_PROD_TRACES")["data"][0]["n"] == n
+    for query in ("SELECT count(*) AS n FROM traces",
+                  "SELECT count(*) AS n FROM acme_prod_traces"):
+        out = globex.sql(query)
+        assert out["status"] == "error", out
+        assert "TABLE_OR_VIEW_NOT_FOUND" in out["error"], out
+    assert _signal_views(spark) == []
+    assert globex.sql(
+        "SELECT count(*) AS n FROM globex_prod_logs")["data"][0]["n"] < 2000
+
+
+def test_sql_frame_collects_after_its_views_are_dropped(spark, tenant_base):
+    """``sql()`` analyzes eagerly, so its frame keeps the resolved tables
+    after the call has dropped the views it registered for them."""
+    ts = TenantSession(spark, tenant_base, "acme", "prod")
+    df = ts.sql("SELECT count(*) AS n FROM logs WHERE service_name IN "
+                "(SELECT service_name FROM acme_prod_traces)")
+    assert _signal_views(spark) == []
+    services = [r[0] for r in ts.table("traces").select("service_name")
+                .distinct().collect()]
+    want = ts.table("logs").filter(F.col("service_name").isin(services)).count()
+    assert want > 0 and df.collect()[0].n == want
+
+
+def test_interleaved_sql_on_runner_threads_counts_exactly(
+        spark, acme_and_logs_only_globex):
+    """Two tenants' SQL calls interleave on the runner's threads over one
+    SparkSession: each call counts its own tenant's rows."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from signaldb_spark.api import SignalDBAPI
+    from signaldb_spark.execution import FairQueryRunner
+
+    base = acme_and_logs_only_globex
+    runner = FairQueryRunner(spark, max_concurrent_per_tenant=4)
+    apis = {t: SignalDBAPI(spark, base, t, "prod", runner=runner)
+            for t in ("acme", "globex")}
+    want = {t: api.sql("SELECT count(*) AS n FROM logs")["data"][0]["n"]
+            for t, api in apis.items()}
+    assert want["acme"] == 2000 and 0 < want["globex"] < 2000
+
+    def count(tenant):
+        out = apis[tenant].sql("SELECT count(*) AS n FROM logs")
+        return tenant, out["data"][0]["n"] if out["status"] == "success" else out
+
+    with ThreadPoolExecutor(4) as pool:
+        got = list(pool.map(count, ["acme", "globex"] * 12))
+    assert got == [(t, want[t]) for t in ["acme", "globex"] * 12]
+    assert _signal_views(spark) == []

@@ -232,9 +232,11 @@ def test_one_wire_batch_drain_runs_only_the_table_writes(spark, tmp_path):
     assert jobs == {"metrics_pb": len(METRIC_TABLES), "remote_write": 3}
 
 
-def test_refresh_and_relation_builds_run_no_jobs(spark, landed):
+def test_refresh_and_relation_builds_run_no_jobs(spark, landed, tmp_path):
     """After a commit, re-resolving the tenant and building manifest
-    relations infers nothing from footers: zero jobs."""
+    relations infers nothing from footers: zero jobs. A live session's
+    table lookup right after another writer's commit resolves the new
+    snapshot, also without a job."""
     base, _jobs = landed
     catalog._RELATION_MEMO.pop(spark, None)  # build, don't hit the memo
     with _job_group(spark, "refresh-after-commit") as jobs:
@@ -251,6 +253,18 @@ def test_refresh_and_relation_builds_run_no_jobs(spark, landed):
         mt.point_lookup(spark, "trace_id", f"{3:032x}")
         assert jobs() == 0
     assert mt.point_lookup(spark, "trace_id", f"{3:032x}").count() == 1
+
+    other = str(tmp_path / "other")
+    path = signal_table_path(other, "acme", "prod", "logs")
+    logs = spark.createDataFrame(gen_logs(), LOGS)
+    write_batch_manifest(logs.limit(100), path, "logs", batch_id=0)
+    session = TenantSession(spark, other, "acme", "prod")
+    assert session.table("logs").count() == 100
+    write_batch_manifest(logs.limit(50), path, "logs", batch_id=1)
+    with _job_group(spark, "table-after-commit") as jobs:
+        df = session.table("logs")
+        assert jobs() == 0
+    assert df.count() == 150
 
 
 def test_recorded_schema_reads_like_inference_on_every_table(spark, landed):
